@@ -313,10 +313,16 @@ object Ann {
     * pass over the vector instead of m × codewords interpreted
     * zip_with/aggregate folds (~1.2 ms/row at m=16, cw=32 — measured via
     * graft.tools.ProbeEncode); pinned value-identical to [[pqCodeSpec]]
-    * (same fold order, same null/tie semantics) in PipelineSpec. */
-  private[graft] def pqCodeExpr(books: Array[Array[Array[Double]]], d0: Int): Column =
+    * (same fold order, same null/tie semantics) in PipelineSpec. Every
+    * codeword must be `d0` wide — the width [[pqCodeSpec]] slices by — and
+    * the literal holds a copy of `books`, so later writes to the caller's
+    * arrays cannot change the column. */
+  private[graft] def pqCodeExpr(books: Array[Array[Array[Double]]], d0: Int): Column = {
+    require(books.forall(_.forall(_.length == d0)),
+      s"every PQ codeword must have the subspace width d0=$d0")
     graft.functions.VectorOps.pqCode(col("embedding"),
-      books.map(_.map(_.toSeq).toSeq).toSeq)
+      books.map(_.map(_.toVector).toVector).toVector)
+  }
 
   /** The pre-r6 built-in composition of [[pqCodeExpr]] — the executable
     * spec the native expression is pinned against (PipelineSpec). */

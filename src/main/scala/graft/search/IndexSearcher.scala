@@ -2,6 +2,9 @@ package graft.search
 
 import java.io.File
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
 import graft.index.{IndexMeta, IndexMetaIO, SegmentFormat, SegmentReader}
@@ -85,14 +88,19 @@ object FilterCache {
   *
   * This IS the reference's ParallelMultiSearcher re-expressed on Spark
   * (/root/reference/src/core/search/ParallelMultiSearcher.cpp:32-90;
-  * SURVEY.md §3.2): the per-subreader scatter loop becomes a task per
-  * segment, docBase offsets come from the lineage table, global weights
-  * (df, N, avgdl) are computed once driver-side and broadcast, and the
-  * final merge is a driver heap over ≤ k hits per segment.
+  * SURVEY.md §3.2): the per-subreader scatter loop becomes one task per
+  * core, each over a contiguous run of segments (min(#segments,
+  * defaultParallelism) tasks), docBase offsets come from the lineage table,
+  * global weights (df, N, avgdl) are computed once driver-side and
+  * broadcast, and the final merge is a driver heap over ≤ k hits per task.
   *
-  * Queries are executed in BATCHES: one Spark job computes global df for
-  * all query terms (tiny shuffle: |terms| rows), one job scores all queries
-  * against all segments. Per-query driver work is O(segments · k).
+  * Queries are executed in BATCHES: one single-stage Spark job computes
+  * global df for all query terms (each task returns one dense count array
+  * aligned to the broadcast term array; the driver sums them, no shuffle),
+  * one job scores all queries against all segments. Within a task each
+  * query runs through ONE top-k collector across the task's segments, so
+  * the k-th score found so far is the starting WAND threshold for the next
+  * segment. Per-query driver work is O(tasks · k).
   *
   * `commitGen` opens a POINT-IN-TIME snapshot at that commit generation
   * instead of the latest — the reference's IndexCommit / IndexReader::open
@@ -133,32 +141,56 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     meta.segments.map(m =>
       cacheKey(new File(indexDir, SegmentFormat.segDirName(m.segId)).getPath))
 
+  /** Cap on tasks per job; 0 = the context's default parallelism. Tests
+    * raise it to give every segment its own task. */
+  private[graft] var maxTasks: Int = 0
+
+  /** The task layout of every job this searcher launches: `items` (in
+    * segment order) cut into min(#items, defaultParallelism) contiguous
+    * runs, one task each, and at least one task so a segment-less index
+    * still answers. Task launch, closure and broadcast reads are then paid
+    * once per core, not once per segment. */
+  private def segmentTasks[T: ClassTag](items: Seq[T]): RDD[T] = {
+    val sc = spark.sparkContext
+    val cap = if (maxTasks > 0) maxTasks else sc.defaultParallelism
+    sc.parallelize(items, math.max(1, math.min(items.size, cap)))
+  }
+
   /** Global document frequencies for a term set: sum of per-segment df.
-    * Exact (the reference's df is exact too — SURVEY.md §2.4). */
+    * Exact (the reference's df is exact too — SURVEY.md §2.4). One stage:
+    * each task sums its segments' df into a dense array aligned to the
+    * broadcast term array, and the driver adds the arrays. */
   def globalDf(terms: Set[String]): Map[String, Long] = {
     if (terms.isEmpty) return Map.empty
-    val sc = spark.sparkContext
-    val bcTerms = sc.broadcast(terms.toSeq)
-    val dfs = sc.parallelize(segDirs, math.max(1, segDirs.size))
-      .flatMap { dir =>
-        val r = ReaderCache.get(dir)
-        bcTerms.value.flatMap(t => r.termInfo(t).map(ti => (t, ti.df.toLong)))
+    val termArr = terms.toArray
+    val bcTerms = spark.sparkContext.broadcast(termArr)
+    val dfs = segmentTasks(segDirs)
+      .mapPartitions { dirs =>
+        val ts = bcTerms.value
+        val sums = new Array[Long](ts.length)
+        dirs.foreach { dir =>
+          val r = ReaderCache.get(dir)
+          var i = 0
+          while (i < ts.length) {
+            r.termInfo(ts(i)).foreach(ti => sums(i) += ti.df)
+            i += 1
+          }
+        }
+        Iterator.single(sums)
       }
-      .reduceByKey(_ + _)
-      .collect()
-      .toMap
+      .reduce((a, b) => Array.tabulate(a.length)(i => a(i) + b(i)))
     bcTerms.destroy()
-    dfs
+    termArr.iterator.zip(dfs.iterator).filter(_._2 > 0).toMap
   }
 
   def search(q: Query, k: Int, sim: Similarity, useWand: Boolean = true): Array[ScoredDoc] =
     searchBatch(Seq("q" -> q), k, sim, useWand)("q")
 
-  /** Time-budgeted search: each segment task stops collecting once its
-    * share of `timeoutMs` elapses and returns what it gathered — partial
-    * top-k plus a timed-out flag (the reference's TimeLimitingCollector
-    * semantics, applied per task: each executor enforces the budget with
-    * its own clock). */
+  /** Time-budgeted search: each task gets the whole `timeoutMs` budget for
+    * its run of segments, on its own clock; past the deadline it stops
+    * collecting, skips the rest of its run, and returns what it gathered —
+    * partial top-k plus a timed-out flag (the reference's
+    * TimeLimitingCollector semantics, applied per task). */
   def searchWithTimeout(q0: Query, k: Int, sim: Similarity,
       timeoutMs: Long): (Array[ScoredDoc], Boolean) = {
     val q = Query.rewrite(expandQueries(Seq("q" -> q0)).head._2)
@@ -168,19 +200,20 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     val bcQ = sc.broadcast(q)
     val st = stats
     val budgetNanos = timeoutMs * 1000000L
-    val perSegment = sc.parallelize(segDirs, math.max(1, segDirs.size))
-      .map { dir =>
-        val reader = ReaderCache.get(dir)
+    val perTask = segmentTasks(segDirs)
+      .mapPartitions { dirs =>
+        val deadline = System.nanoTime() + budgetNanos
+        val readers = dirs.map(ReaderCache.get).toVector
         val df = (t: String) => bcDf.value.getOrElse(t, 0L)
-        SegmentSearch.topKTimed(reader, bcQ.value, k, sim, st, df,
-          useWand = false, System.nanoTime() + budgetNanos)
+        Iterator.single(SegmentSearch.topKTimed(readers, bcQ.value, k, sim, st, df,
+          useWand = false, deadline))
       }
       .collect()
     bcQ.destroy()
     bcDf.destroy()
-    val hits = perSegment.iterator.flatMap(_._1).toArray
+    val hits = perTask.iterator.flatMap(_._1).toArray
       .sortBy(h => (-h.score, h.docId)).take(k)
-    (hits, perSegment.exists(_._2))
+    (hits, perTask.exists(_._2))
   }
 
   /** Expand multi-term nodes against the distributed term dictionary: one
@@ -199,29 +232,30 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
   /** Matched dictionary terms per multi-term node, collected across this
     * index's segments (the distributed half of expansion — exposed so a
     * cross-index MultiSearcher can union the sets before rewriting once,
-    * like the reference's rewrite against the combined reader). */
+    * like the reference's rewrite against the combined reader). One stage:
+    * each task dedupes over its run of segments, the driver across tasks. */
   private[search] def multiTermMatches(
       nodes: Seq[MultiTermQ]): Map[MultiTermQ, Seq[String]] = {
-    val sc = spark.sparkContext
-    val bcNodes = sc.broadcast(nodes)
-    val matched: Map[MultiTermQ, Seq[String]] = sc
-      .parallelize(segDirs, math.max(1, segDirs.size))
-      .flatMap { dir =>
-        val r = ReaderCache.get(dir)
-        bcNodes.value.flatMap { node =>
-          val it = r.termsFrom(MultiTerm.seekLowerBound(node))
-          val out = scala.collection.mutable.ArrayBuffer.empty[(MultiTermQ, String)]
-          var done = false
-          while (!done && it.hasNext) {
-            val t = it.next().term
-            if (MultiTerm.pastUpperBound(node, t)) done = true
-            else if (MultiTerm.matchBoost(node, t).isDefined) out += ((node, t))
+    val bcNodes = spark.sparkContext.broadcast(nodes)
+    val matched: Map[MultiTermQ, Seq[String]] = segmentTasks(segDirs)
+      .mapPartitions { dirs =>
+        val out = scala.collection.mutable.LinkedHashSet.empty[(MultiTermQ, String)]
+        dirs.foreach { dir =>
+          val r = ReaderCache.get(dir)
+          bcNodes.value.foreach { node =>
+            val it = r.termsFrom(MultiTerm.seekLowerBound(node))
+            var done = false
+            while (!done && it.hasNext) {
+              val t = it.next().term
+              if (MultiTerm.pastUpperBound(node, t)) done = true
+              else if (MultiTerm.matchBoost(node, t).isDefined) out += ((node, t))
+            }
           }
-          out
         }
+        out.iterator
       }
-      .distinct()
       .collect()
+      .distinct
       .groupBy(_._1)
       .map { case (n, ts) => n -> ts.map(_._2).toSeq.sorted }
     bcNodes.destroy()
@@ -229,9 +263,9 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
   }
 
   /** ALL matching docIds as a DataFrame — the match-set path. Matches are
-    * enumerated inside tasks (one per segment) and returned as a distributed
-    * result; nothing is materialized on the driver, so a stop-word phrase
-    * over 10^12 docs streams straight to the sink. Scoring is skipped:
+    * enumerated inside tasks (one per run of segments) and returned as a
+    * distributed result; nothing is materialized on the driver, so a
+    * stop-word phrase over 10^12 docs streams straight to the sink. Scoring is skipped:
     * only the scorer tree's matching behavior runs. */
   def matchingDocs(q0: Query): org.apache.spark.sql.DataFrame = {
     val q = Query.rewrite(expandQueries(Seq("q" -> q0)).head._2)
@@ -241,7 +275,7 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     val bcQ = sc.broadcast(q)
     val st = stats
     val sim: Similarity = graft.score.BM25()
-    val rdd = sc.parallelize(segDirs, math.max(1, segDirs.size))
+    val rdd = segmentTasks(segDirs)
       .flatMap { dir =>
         val reader = ReaderCache.get(dir)
         val df = (t: String) => bcDf.value.getOrElse(t, 0L)
@@ -292,7 +326,7 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
   }
 
   /** Batched [[explain]]: every (query, doc) explanation in ONE Spark job
-    * (one task per touched segment, one shared df job and broadcast pair)
+    * (tasks over the touched segments, one shared df job and broadcast pair)
     * instead of a df job + a one-task job per doc. Same per-doc tree as
     * [[explain]] — identical Explanation values; order follows `docIds`. */
   def explainMany(q0: Query, docIds: Seq[Long], sim: Similarity): Seq[Explanation] = {
@@ -310,7 +344,7 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
       else {
         val bcQ = sc.broadcast(q)
         val bcDf = sc.broadcast(dfMap)
-        val out = sc.parallelize(bySeg, bySeg.size).flatMap { case (dir, ids) =>
+        val out = segmentTasks(bySeg).flatMap { case (dir, ids) =>
           val reader = ReaderCache.get(dir)
           val df = (t: String) => bcDf.value.getOrElse(t, 0L)
           val qn = sim.queryNorm(SegmentSearch.sumOfSquaredWeights(bcQ.value, sim, st, df))
@@ -329,9 +363,9 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
   }
 
   /** Delete every doc matching `q` — the reference's
-    * IndexReader::deleteDocuments re-expressed: one task per segment ORs
-    * the match set into the segment's del bitset (atomic write), the
-    * driver then snapshots a bumped deletion generation so subsequently
+    * IndexReader::deleteDocuments re-expressed: each task ORs the match
+    * set of every segment in its run into that segment's del bitset
+    * (atomic write), the driver then snapshots a bumped deletion generation so subsequently
     * OPENED searchers see the deletes (this searcher's snapshot is
     * unchanged, like the reference's point-in-time readers). DocIDs stay
     * stable; space is reclaimed at the next merge. Returns the number of
@@ -370,10 +404,10 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
       val idxDir = indexDir
       val allSegs = commitMeta.segments
         .map(m => new File(idxDir, SegmentFormat.segDirName(m.segId)).getPath)
-      sc.parallelize(allSegs, math.max(1, allSegs.size))
+      segmentTasks(allSegs)
         .foreach(p => SegmentFormat.purgeOrphanDeletes(new File(p), committedGen))
     }
-    val newly = sc.parallelize(segDirs, math.max(1, segDirs.size))
+    val newly = segmentTasks(segDirs)
       .map { dir =>
         val reader = ReaderCache.get(dir)
         val df = (t: String) => bcDf.value.getOrElse(t, 0L)
@@ -408,8 +442,7 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
 
   /** Live (non-tombstoned) doc count — numDocs minus deletions. */
   def liveDocCount(): Long = {
-    val sc = spark.sparkContext
-    meta.numDocs - sc.parallelize(segDirs, math.max(1, segDirs.size))
+    meta.numDocs - segmentTasks(segDirs)
       .map(dir => ReaderCache.get(dir).delCount.toLong).collect().sum
   }
 
@@ -433,25 +466,27 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     val bcDf = sc.broadcast(dfMap)
     val bcQueries = sc.broadcast(queries)
 
-    val perSegment = sc.parallelize(segDirs, math.max(1, segDirs.size))
-      .flatMap { dir =>
-        val reader = ReaderCache.get(dir)
+    // one collector per (task, query) across the task's run of segments:
+    // ≤ k hits per query per task
+    val perTask = segmentTasks(segDirs)
+      .mapPartitions { dirs =>
+        val readers = dirs.map(ReaderCache.get).toVector
         val df = (t: String) => bcDf.value.getOrElse(t, 0L)
         bcQueries.value.iterator.map { case (id, q) =>
-          (id, SegmentSearch.topK(reader, q, k, sim, st, df, useWand))
+          (id, SegmentSearch.topK(readers, q, k, sim, st, df, useWand))
         }
       }
 
     val mergeTopK: (Array[ScoredDoc], Array[ScoredDoc]) => Array[ScoredDoc] =
       (a, b) => (a ++ b).sortBy(h => (-h.score, h.docId)).take(k)
 
-    // merge with the reference tie-break (score desc, docId asc). Above a
-    // segment-count threshold the merge goes through reduceByKey — the
-    // map-side combiners fold each partition's hits first, so the driver
-    // receives O(queries · k) rows instead of O(segments · k)
+    // merge with the reference tie-break (score desc, docId asc). The
+    // driver receives tasks × queries × ≤ k hits, so above a TASK-count
+    // threshold the merge goes through reduceByKey instead: the shuffle
+    // folds hits per query first, and the driver receives O(queries · k)
     val collected =
-      if (segDirs.size <= 256) perSegment.collect()
-      else perSegment.reduceByKey(mergeTopK, math.max(1, queries.size)).collect()
+      if (perTask.getNumPartitions <= 256) perTask.collect()
+      else perTask.reduceByKey(mergeTopK, math.max(1, queries.size)).collect()
 
     bcQueries.destroy()
     bcDf.destroy()

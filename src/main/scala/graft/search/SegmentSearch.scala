@@ -345,30 +345,66 @@ object SegmentSearch {
   /** Top-k over one segment. Returns GLOBAL docIds. */
   def topK(reader: SegmentReader, q0: Query, k: Int, sim: Similarity,
       stats: CorpusStats, df: String => Long, useWand: Boolean = true): Array[ScoredDoc] =
-    topKTimed(reader, q0, k, sim, stats, df, useWand, Long.MaxValue)._1
+    topK(Seq(reader), q0, k, sim, stats, df, useWand)
+
+  /** Top-k over a run of segments through ONE collector: after each
+    * segment the collector's k-th score is the starting WAND threshold for
+    * the next, so later segments prune against hits already found anywhere
+    * in the run (the within-task form of a top-k cutoff filter). Exact:
+    * only docs scoring strictly below the current k-th score are skipped,
+    * and those can never enter the heap; ties are still evaluated and
+    * resolved by (score desc, docId asc). Returns GLOBAL docIds, ≤ k hits
+    * for the whole run. */
+  def topK(readers: Seq[SegmentReader], q0: Query, k: Int, sim: Similarity,
+      stats: CorpusStats, df: String => Long, useWand: Boolean): Array[ScoredDoc] =
+    topKTimed(readers, q0, k, sim, stats, df, useWand, Long.MaxValue)._1
 
   /** As [[topK]], but stops collecting once `deadlineNanos` passes
     * (System.nanoTime clock) and reports whether it timed out — the
     * reference's TimeLimitingCollector
     * (/root/reference/src/core/search/TimeLimitingCollector.cpp: the
     * collector aborts collection past the budget; hits gathered so far are
-    * the partial result). The deadline is checked every 256 collected
-    * docs. */
+    * the partial result). The deadline is checked after every collected
+    * doc. */
   def topKTimed(reader: SegmentReader, q0: Query, k: Int, sim: Similarity,
+      stats: CorpusStats, df: String => Long, useWand: Boolean,
+      deadlineNanos: Long): (Array[ScoredDoc], Boolean) =
+    topKTimed(Seq(reader), q0, k, sim, stats, df, useWand, deadlineNanos)
+
+  /** [[topK]] over a run of segments with one deadline for the whole run:
+    * the first collect past it stops the current segment and skips the
+    * rest of the run. */
+  def topKTimed(readers: Seq[SegmentReader], q0: Query, k: Int, sim: Similarity,
       stats: CorpusStats, df: String => Long, useWand: Boolean,
       deadlineNanos: Long): (Array[ScoredDoc], Boolean) = {
     if (k <= 0) return (Array.empty, false)
     val q = Query.rewrite(q0)
     val collector = new TopKCollector(k)
-    val docBase = reader.meta.docBase
+    val wandTerms = Query.flatOrTerms(q)
+      .filter(_ => useWand && sim.coord(1, 2) == 1f && deadlineNanos == Long.MaxValue)
+    lazy val qn = sim.queryNorm(sumOfSquaredWeights(q, sim, stats, df))
     var timedOut = false
+    val it = readers.iterator
+    while (!timedOut && it.hasNext)
+      timedOut = collectInto(it.next(), q, wandTerms, qn, sim, stats, df,
+        deadlineNanos, collector)
+    (collector.results(), timedOut)
+  }
 
-    Query.flatOrTerms(q) match {
-      case Some(terms) if useWand && sim.coord(1, 2) == 1f && deadlineNanos == Long.MaxValue =>
+  /** Collect one segment's hits into `collector` — Block-Max WAND when
+    * `wandTerms` is set, else the exhaustive scorer tree under query norm
+    * `qn`. True when `deadlineNanos` passed before the segment was done. */
+  private def collectInto(reader: SegmentReader, q: Query, wandTerms: Option[Seq[TermQ]],
+      qn: => Float, sim: Similarity, stats: CorpusStats, df: String => Long,
+      deadlineNanos: Long, collector: TopKCollector): Boolean = {
+    wandTerms match {
+      case Some(terms) =>
         wandTopK(reader, terms, sim, stats, df, collector)
-      case _ =>
-        val qn = sim.queryNorm(sumOfSquaredWeights(q, sim, stats, df))
+        false
+      case None =>
+        val docBase = reader.meta.docBase
         val timed = deadlineNanos != Long.MaxValue
+        var timedOut = false
         val hasDel = reader.hasDeletions
         scorer(q, reader, sim, stats, df, qn).foreach { s =>
           var d = s.nextDoc()
@@ -382,8 +418,8 @@ object SegmentSearch {
             else d = s.nextDoc()
           }
         }
+        timedOut
     }
-    (collector.results(), timedOut)
   }
 
   /** Block-Max WAND (Ding & Suel, WSDM 2011; an extension the north rule
@@ -391,7 +427,8 @@ object SegmentSearch {
     * term-level upper bounds for pivot selection and per-block bounds for
     * the final check; ties at the threshold are still evaluated so the
     * (score desc, docId asc) tie-break stays rank-identical with the
-    * exhaustive scorer. */
+    * exhaustive scorer. `collector` may arrive holding hits from earlier
+    * segments of the run; its threshold then prunes from the first pivot. */
   private def wandTopK(reader: SegmentReader, terms: Seq[TermQ], sim: Similarity,
       stats: CorpusStats, df: String => Long, collector: TopKCollector): Unit = {
     val docBase = reader.meta.docBase

@@ -12,8 +12,11 @@ import graft.search.{BoolQ, Query, SegmentSearch, TermQ, WandDiag}
 /** Single-JVM, single-thread WAND-vs-exhaustive profiler: times the raw
   * per-segment scorer loops (no Spark tasks, no scheduling) on the same
   * query batch Bench uses, and dumps the WandDiag counters so the pruning
-  * behavior is visible (full evals vs deep skips). Not part of the
-  * driver contract. */
+  * behavior is visible (full evals vs deep skips). It also times and
+  * counts the grouped path `IndexSearcher.searchBatch` runs: the segments
+  * cut into SPARK_GRAFT_QPROF_TASKS (default 32, the local[32] layout)
+  * contiguous runs, each query through one collector per run. Not part of
+  * the driver contract. */
 object QueryProfile {
 
   def main(args: Array[String]): Unit = {
@@ -108,24 +111,45 @@ object QueryProfile {
       (System.nanoTime() - t0) / 1e9
     }
 
+    // the searchBatch layout: contiguous runs of segments (Spark's
+    // parallelize slicing), one shared collector per (run, query)
+    val tasks = math.max(1, math.min(readers.size,
+      sys.env.getOrElse("SPARK_GRAFT_QPROF_TASKS", "32").toInt))
+    val groups = (0 until tasks).map(i =>
+      readers.slice(i * readers.size / tasks, (i + 1) * readers.size / tasks))
+    def runGrouped(useWand: Boolean): Double = {
+      val t0 = System.nanoTime()
+      queryBatch.foreach { case (_, q) =>
+        groups.foreach(g => SegmentSearch.topK(g, q, 10, sim, stats, df, useWand))
+      }
+      (System.nanoTime() - t0) / 1e9
+    }
+
     // warm-up
-    runAll(useWand = false); runAll(useWand = true)
+    runAll(useWand = false); runAll(useWand = true); runGrouped(useWand = true)
 
     val rounds = (1 to 5).map { _ =>
       val e = runAll(useWand = false)
       val w = runAll(useWand = true)
-      (e, w)
+      val g = runGrouped(useWand = true)
+      (e, w, g)
     }
     val exh = rounds.map(_._1).min
     val wand = rounds.map(_._2).min
+    val grouped = rounds.map(_._3).min
     println(f"[qprof] exhaustive ${exh}%.3f s  wand ${wand}%.3f s  speedup ${exh / wand}%.2fx")
+    println(f"[qprof] grouped wand ($tasks runs) ${grouped}%.3f s  speedup ${exh / grouped}%.2fx")
 
-    WandDiag.enabled = true
-    WandDiag.reset()
-    runAll(useWand = true)
-    WandDiag.enabled = false
-    println(s"[qprof] wand rounds=${WandDiag.rounds} fullEvals=${WandDiag.fullEvals} " +
-      s"blockSkips=${WandDiag.blockSkips} pivotAdvances=${WandDiag.pivotAdvances}")
+    def wandCounts(label: String)(run: => Double): Unit = {
+      WandDiag.enabled = true
+      WandDiag.reset()
+      run
+      WandDiag.enabled = false
+      println(s"[qprof] $label rounds=${WandDiag.rounds} fullEvals=${WandDiag.fullEvals} " +
+        s"blockSkips=${WandDiag.blockSkips} pivotAdvances=${WandDiag.pivotAdvances}")
+    }
+    wandCounts("wand")(runAll(useWand = true))
+    wandCounts("grouped wand")(runGrouped(useWand = true))
 
     // how much work does exhaustive do? count collected docs
     var exhDocs = 0L

@@ -208,17 +208,14 @@ class EngineSpec extends AnyFunSuite {
       k = 30)
   }
 
-  test("wand stress: skewed tf/doclen OR queries rank-identical to spec") {
-    // Adversarial corpus for BMW admissibility: tf spikes (30 among 1s) and
-    // doc-length spikes make per-block maxima genuinely below the term upper
-    // bounds, so the deep-skip branch fires against real competitors. Guards
-    // under test: pivot-prefix extension over tied iterators, and the skip
-    // target capped at the first beyond-prefix iterator's docID.
-    val rnd = new scala.util.Random(20260816L)
-    val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta")
-    val texts = (0 until 1500).map { _ =>
+  /** Adversarial corpus for BMW admissibility: tf spikes (30 among 1s) and
+    * doc-length spikes make per-block maxima genuinely below the term upper
+    * bounds, so the deep-skip branch fires against real competitors. */
+  private val wandStressVocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta")
+  private def wandStressTexts(rnd: scala.util.Random): Seq[String] =
+    (0 until 1500).map { _ =>
       val sb = new StringBuilder
-      rnd.shuffle(vocab).take(1 + rnd.nextInt(4)).foreach { t =>
+      rnd.shuffle(wandStressVocab).take(1 + rnd.nextInt(4)).foreach { t =>
         val tf = if (rnd.nextDouble() < 0.05) 30 else 1
         var j = 0; while (j < tf) { sb.append(t).append(' '); j += 1 }
       }
@@ -233,6 +230,13 @@ class EngineSpec extends AnyFunSuite {
       var j = 0; while (j < fill) { sb.append('x').append(j % 17).append(' '); j += 1 }
       sb.toString
     }
+
+  test("wand stress: skewed tf/doclen OR queries rank-identical to spec") {
+    // Guards under test: pivot-prefix extension over tied iterators, and the
+    // skip target capped at the first beyond-prefix iterator's docID.
+    val rnd = new scala.util.Random(20260816L)
+    val vocab = wandStressVocab
+    val texts = wandStressTexts(rnd)
     val dir = indexOf(texts, "whitespace")
     val corpus = bfCorpus(texts, "whitespace")
     val boosts = Array(0.25f, 1f, 4f)
@@ -243,6 +247,36 @@ class EngineSpec extends AnyFunSuite {
       val engine = LocalIndex.search(dir, q, k, sim, useWand = true)
       val spec = BruteForce.search(corpus, q, k, sim)
       assertSame(engine, spec, s"run=$run sim=$sim k=$k q=$q")
+    }
+  }
+
+  test("wand stress across segments: one shared collector == merged per-segment top-k") {
+    // the run-of-segments topK starts each segment's WAND at the k-th score
+    // collected so far; it must return exactly the merge of independent
+    // per-segment top-k lists (ids, order and scores) and the spec
+    val rnd = new scala.util.Random(20261017L)
+    val texts = wandStressTexts(rnd)
+    val dir = indexOf(texts, "whitespace", dps = 160)
+    val corpus = bfCorpus(texts, "whitespace")
+    val meta = graft.index.IndexMetaIO.readLatest(dir).get
+    assert(meta.segments.size == 10)
+    val readers = meta.segments.map(m => new graft.index.SegmentReader(
+      new java.io.File(dir, graft.index.SegmentFormat.segDirName(m.segId))))
+    val stats = graft.score.CorpusStats(meta.numDocs, meta.avgDocLength)
+    val boosts = Array(0.25f, 1f, 4f)
+    for (sim <- Seq[Similarity](BM25(), BM25Exact()); run <- 0 until 200) {
+      val q = BoolQ(should = rnd.shuffle(wandStressVocab).take(1 + rnd.nextInt(4))
+        .map(t => TermQ(t, boosts(rnd.nextInt(3)))))
+      val k = 1 + rnd.nextInt(12)
+      val dfm = Query.allTerms(q).map(t =>
+        t -> readers.flatMap(_.termInfo(t)).map(_.df.toLong).sum).toMap
+      val df = (t: String) => dfm.getOrElse(t, 0L)
+      val shared = SegmentSearch.topK(readers, q, k, sim, stats, df, useWand = true)
+      val merged = readers.flatMap(r => SegmentSearch.topK(r, q, k, sim, stats, df))
+        .sortBy(h => (-h.score, h.docId)).take(k).toArray
+      val ctx = s"run=$run sim=$sim k=$k q=$q"
+      assertSame(shared, merged, ctx)
+      assertSame(shared, BruteForce.search(corpus, q, k, sim), ctx)
     }
   }
 

@@ -739,6 +739,26 @@ class PipelineSpec extends AnyFunSuite {
     scanBacked.collect().foreach(r => assert(r.getSeq[Any](0) == r.getSeq[Any](1)))
   }
 
+  test("pq_code column holds its own codebook copy; codeword widths must equal d0") {
+    val rnd = new scala.util.Random(12)
+    val bs = Array.fill(16, 8, 4)(rnd.nextGaussian())
+    val vdf = (0 until 20).map(i => (i.toLong, Seq.fill(64)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val codesCol = Ann.pqCodeExpr(bs, 4)
+    def codes(): Seq[Seq[Any]] =
+      vdf.orderBy("vec_id").select(codesCol).collect().toSeq.map(_.getSeq[Any](0))
+    val before = codes()
+    // move every codeword far away in place: a live view would re-encode
+    // every vector to a different (or the first) codeword
+    bs.foreach(_.foreach(c => java.util.Arrays.fill(c, 1e6)))
+    assert(codes() == before)
+
+    val ragged = Array.fill(16, 8, 4)(0.0)
+    ragged(3)(5) = Array(0.0, 0.0)
+    assertThrows[IllegalArgumentException](Ann.pqCodeExpr(ragged, 4))
+    assertThrows[IllegalArgumentException](Ann.pqCodeExpr(Array.fill(16, 8, 4)(0.0), 8))
+  }
+
   test("quality mean_token_len: translate-based count == interpreted fold") {
     val d = (docs.collect().map(r => (r.getLong(0), r.getString(1))).toSeq ++ Seq(
       (900L, ""), (901L, "   "), (902L, " padded  twice "), (903L, "é 漢漢 ßµø"),

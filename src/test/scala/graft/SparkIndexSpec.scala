@@ -72,18 +72,105 @@ class SparkIndexSpec extends AnyFunSuite {
 
   test("distributed merge path (>256 segments) matches driver merge and spec") {
     val dir = tmpDir()
-    // 500 single-doc segments force the reduceByKey top-k merge
+    // 500 single-doc segments: at the default layout they run as one task
+    // per core (driver merge); with one task per segment (500 > 256 tasks)
+    // the reduceByKey top-k merge takes over
     IndexBuilder.build(spark, corpus, IndexConfig(dir, docsPerSegment = 1, writeDocMap = false))
     val searcher = new IndexSearcher(spark, dir)
     assert(searcher.meta.segments.size == N)
     val queries: Seq[(String, Query)] = Seq(
       "t" -> TermQ("w3"),
       "or" -> BoolQ(should = Seq(TermQ("w1"), TermQ("w7"), TermQ("w31"))))
-    val got = searcher.searchBatch(queries, 10, BM25())
+    val grouped = searcher.searchBatch(queries, 10, BM25())
+    searcher.maxTasks = N
+    val shuffled = try searcher.searchBatch(queries, 10, BM25()) finally searcher.maxTasks = 0
     queries.foreach { case (id, q) =>
       val spec = BruteForce.search(bfDocs, q, 10, BM25())
-      assert(got(id).toSeq == spec.toSeq, s"query $id")
+      assert(grouped(id).toSeq == spec.toSeq, s"query $id")
+      assert(shuffled(id).toSeq == spec.toSeq, s"query $id (reduceByKey merge)")
     }
+  }
+
+  test("grouped search: tie-heavy runs of segments == exhaustive == spec, with tombstones") {
+    // every doc scores the same for the query (same terms, same length), so
+    // the top-k is decided by docId alone; more segments than cores puts
+    // ≥2 segments in every task, and k < the tie group makes each task's
+    // k-th score the threshold its later segments start from
+    val n = 96
+    val texts = (0 until n).map(i => s"tie tie filler id$i")
+    val dir = tmpDir()
+    LocalIndex.build(dir, texts.zipWithIndex.map { case (t, i) => (i.toLong, t) },
+      "whitespace", docsPerSegment = 4)
+    val cores = spark.sparkContext.defaultParallelism
+    val segments = IndexMetaIO.readLatest(dir).get.segments.size
+    assert(segments >= 2 * cores, s"$segments segments for $cores cores")
+    // tombstone the first doc of the first segment of the first two tasks
+    // (parallelize's contiguous slices start at segment i·segments/cores)
+    val tasksFirstDocs = Seq(0, segments / cores).map(_ * 4)
+    tasksFirstDocs.foreach(d =>
+      new IndexSearcher(spark, dir).deleteDocs(TermQ(s"id$d")))
+    val deleted = tasksFirstDocs.map(_.toLong).toSet
+    val searcher = new IndexSearcher(spark, dir)
+    assert(searcher.liveDocCount() == n - deleted.size)
+    val corpus = BruteForce.analyzeCorpus(graft.analysis.Analyzer.byName("whitespace"),
+      texts.zipWithIndex.map { case (t, i) => (i.toLong, t) })
+    val queries: Seq[(String, Query)] = Seq(
+      "term" -> TermQ("tie"),
+      "or" -> BoolQ(should = Seq(TermQ("tie"), TermQ("filler"))),
+      "or3" -> BoolQ(should = Seq(TermQ("filler"), TermQ("tie"), TermQ("absent"))))
+    for (k <- Seq(1, 3, 5, 9, 30)) {
+      val wand = searcher.searchBatch(queries, k, BM25())
+      val exhaustive = searcher.searchBatch(queries, k, BM25(), useWand = false)
+      queries.foreach { case (id, q) =>
+        // scoring stats keep counting tombstones, so the spec is the full
+        // corpus' ranking with the tombstoned docs dropped
+        val spec = BruteForce.search(corpus, q, k + deleted.size, BM25())
+          .filterNot(h => deleted(h.docId)).take(k)
+        assert(wand(id).toSeq == exhaustive(id).toSeq, s"k=$k $id: wand vs exhaustive")
+        assert(wand(id).toSeq == spec.toSeq, s"k=$k $id: wand vs spec")
+        assert(wand(id).length == k)
+      }
+    }
+  }
+
+  test("globalDf: one single-stage job == summed per-segment df; searchBatch runs 2 jobs") {
+    val texts = (0 until 40).map(i => s"common w${i % 7} id$i") :+ "common onlyhere"
+    val dir = tmpDir()
+    LocalIndex.build(dir, texts.zipWithIndex.map { case (t, i) => (i.toLong, t) },
+      "whitespace", docsPerSegment = 6)
+    val meta = IndexMetaIO.readLatest(dir).get
+    val readers = meta.segments.map(m =>
+      new SegmentReader(new File(dir, SegmentFormat.segDirName(m.segId))))
+    assert(readers.count(_.termInfo("onlyhere").isDefined) == 1)
+    val searcher = new IndexSearcher(spark, dir)
+    val terms = Set("common", "onlyhere", "w3", "id17", "absent", "zzz")
+    val df = searcher.globalDf(terms)
+    terms.foreach { t =>
+      val expected = readers.flatMap(_.termInfo(t)).map(_.df.toLong).sum
+      if (expected == 0) assert(!df.contains(t), s"absent term $t reported")
+      else assert(df(t) == expected, s"df($t)")
+    }
+    assert(df("common") == texts.size && df("onlyhere") == 1)
+
+    // job shape: the df job and the scoring job, the df job one stage
+    val group = "graft-search-shape"
+    val stagesPerJob = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          stagesPerJob.synchronized { stagesPerJob += e.stageInfos.size }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "searchBatch job shape")
+      searcher.searchBatch(Seq("a" -> BoolQ(should = Seq(TermQ("common"), TermQ("w3"))),
+        "b" -> TermQ("onlyhere")), 5, BM25())
+      sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(stagesPerJob.toSeq == Seq(1, 1), s"stages per job: $stagesPerJob")
   }
 
   test("build output is byte-identical across shuffle partitioning AND build modes") {
