@@ -1,46 +1,29 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.analysis.Analyzer
-
-/** One shuffled row of the build: either a posting (term, docId, freq,
-  * positions) or — when `term` is the empty-string sentinel, which sorts
-  * before every real term — a doc-length row carrying `dl`. Folding norms
-  * into the postings shuffle means ONE wide shuffle total. */
-final case class PostingRow(
-    segId: Int,
-    term: String,
-    docId: Long,
-    freq: Int,
-    positions: Array[Int],
-    dl: Int,
-    payloads: Array[Array[Byte]] = null)
 
 final case class IndexConfig(
     indexDir: String,
     analyzer: String = "standard",
-    /** Segment = contiguous docId range; bounds per-task memory and is the
-      * unit of parallel search AND of resume. At 10^12 docs you'd run ~1M
+    /** Segment = contiguous docId range: the unit of parallel search AND of
+      * resume, and the only bound on build task memory (each segment is
+      * inverted in one task's RAM). At 10^12 docs you'd run ~1M
       * docs/segment over thousands of executors; tests shrink it. */
     docsPerSegment: Int = 1 << 20,
     storePositions: Boolean = true,
-    /** Shuffle partitions for the postings sort; 0 → one per segment. */
+    /** Partitions of the segment shuffle; 0 → one per segment, capped at
+      * 4 × defaultParallelism. */
     buildPartitions: Int = 0,
     /** Also persist a (docId, url) map table next to the index. */
     writeDocMap: Boolean = true,
-    /** Store per-doc term vectors (doc-ordered sidecar; invert mode only —
-      * the sort-shuffle path never sees a whole doc at once). */
+    /** Store per-doc term vectors (doc-ordered sidecar). */
     storeTermVectors: Boolean = false,
     /** Store per-position payloads (requires storePositions and a
-      * payload-producing analyzer, e.g. "delimited"; invert mode only). */
-    storePayloads: Boolean = false,
-    /** "invert" (default): shuffle raw docs by segId, invert each segment
-      * in task RAM (the reference's DocumentsWriter architecture; memory
-      * bounded by docsPerSegment). "sortshuffle": shuffle posting rows
-      * through an external sort (unbounded segments, flat task memory).
-      * Both produce byte-identical segments. */
-    buildMode: String = "invert")
+      * payload-producing analyzer, e.g. "delimited"). */
+    storePayloads: Boolean = false)
 
 final case class BuildReport(
     numDocs: Long,
@@ -65,18 +48,18 @@ final case class BuildReport(
   *     docBase+docCount) range are skipped BEFORE tokenization (range, not
   *     segId, so compacted segments resume correctly — north rule
   *     resumability).
-  *  3. tokenize in `mapPartitions` (per-doc hash-agg of term freqs: tf
-  *     needs no shuffle — SURVEY.md §2.4), emitting posting rows keyed by
-  *     segId = docId / docsPerSegment.
-  *  4. ONE shuffle: `repartition($"segId")` + `sortWithinPartitions(segId,
-  *     term, docId)`. Partitioning by doc-range (not term!) is the skew
-  *     story: every segment gets ~docsPerSegment docs' worth of postings
-  *     regardless of term distribution, so stop-word-class terms cannot
-  *     skew a reducer (the "salted groupBy" of the north rule, with the
-  *     doc-range bucket as the salt — SURVEY.md §4.4); Spark's sort-based
-  *     shuffle spills, so per-task memory stays bounded.
-  *  5. stream each sorted run into a SegmentWriter; atomic per-segment
-  *     publish = per-partition lineage commit; driver snapshot at the end.
+  *  3. ONE segment shuffle: raw docs keyed by (segId = docId /
+  *     docsPerSegment, docId) through `repartitionAndSortWithinPartitions`
+  *     ([[writeSegments]]). Partitioning by doc-range (not term!) is the
+  *     skew story: every segment gets ~docsPerSegment docs regardless of
+  *     term distribution, so stop-word-class terms cannot skew a reducer
+  *     (the "salted groupBy" of the north rule, with the doc-range bucket
+  *     as the salt — SURVEY.md §4.4).
+  *  4. each task analyzes and inverts its segments one at a time in RAM
+  *     (the reference's DocumentsWriter; tf needs no shuffle — SURVEY.md
+  *     §2.4) and streams term-sorted postings into a SegmentWriter; atomic
+  *     per-segment publish = per-partition lineage commit; one commit
+  *     snapshot at the end.
   */
 object IndexBuilder {
 
@@ -87,7 +70,8 @@ object IndexBuilder {
     import spark.implicits._
     new java.io.File(cfg.indexDir).mkdirs()
 
-    val analyzer = Analyzer.byName(cfg.analyzer)
+    Analyzer.byName(cfg.analyzer) // fail fast on an unknown analyzer name
+    require(!cfg.storePayloads || cfg.storePositions, "payloads require storePositions")
     IndexMetaIO.readLatestWithExtra(cfg.indexDir).foreach { case (_, extra) =>
       require(extra.get("format").contains(IndexMetaIO.FormatVersion),
         s"${cfg.indexDir} was written with segment format ${extra.getOrElse("format", "1")} " +
@@ -158,58 +142,8 @@ object IndexBuilder {
         if (ranges.isEmpty) sorted
         else sorted.filter { case (id, _, _) => !inRanges(ranges, id) }
 
-      val posStore = cfg.storePositions
-      val indexDir = cfg.indexDir
-      val analyzerName = cfg.analyzer
-      val totalDocs = numDocs
-
-      require(!cfg.storeTermVectors || cfg.buildMode == "invert",
-        "term vectors require buildMode=invert")
-      require(!cfg.storePayloads || (cfg.buildMode == "invert" && cfg.storePositions),
-        "payloads require buildMode=invert and storePositions")
-      val storeVecs = cfg.storeTermVectors
-      val storePays = cfg.storePayloads
-      val metas: Seq[SegmentMeta] = if (cfg.buildMode == "invert") {
-        // (3a) DEFAULT "invert" mode — the reference's own architecture
-        // (in-RAM inversion per segment, DocumentsWriter.cpp) re-expressed:
-        // shuffle RAW DOCS grouped by segId (corpus-sized shuffle, ~10x
-        // smaller than shuffling posting rows) and invert one segment at a
-        // time in task memory. docsPerSegment bounds task memory (2048-doc
-        // test segments ≈ MBs; at cluster scale keep ≤ ~256k docs/segment
-        // per 4 GB executor, or switch buildMode to "sortshuffle").
-        val parts = if (cfg.buildPartitions > 0) cfg.buildPartitions
-          else math.min(numSegments, math.max(1, 4 * spark.sparkContext.defaultParallelism))
-        val partitioner = new org.apache.spark.Partitioner {
-          override def numPartitions: Int = parts
-          override def getPartition(key: Any): Int = {
-            val s = key.asInstanceOf[(Int, Long)]._1
-            val m = s % parts
-            if (m < 0) m + parts else m
-          }
-        }
-        todo.map { case (docId, _, text) => ((segIdOf(docId, dps), docId), text) }
-          .repartitionAndSortWithinPartitions(partitioner)
-          .mapPartitions { it =>
-            invertPartitionSegments(it, indexDir, analyzerName, dps, totalDocs, posStore,
-              storeVectors = storeVecs, storePayloads = storePays)
-          }.collect().toSeq
-      } else {
-        // (3b) "sortshuffle" mode — posting rows through one doc-range-
-        // partitioned external sort (unbounded segment sizes; Spark's
-        // sort-based shuffle spills, per-task memory stays flat).
-        val rows = todo.mapPartitions { docs =>
-          docs.flatMap { case (docId, _, text) =>
-            val segId = segIdOf(docId, dps)
-            tokenizeDoc(analyzer, segId, docId, text, posStore)
-          }
-        }.toDS()
-        val parts = if (cfg.buildPartitions > 0) cfg.buildPartitions else numSegments
-        rows.repartition(parts, $"segId")
-          .sortWithinPartitions($"segId", $"term", $"docId")
-          .mapPartitions { it =>
-            writePartitionSegments(it, indexDir, analyzerName, dps, totalDocs, posStore)
-          }.collect().toSeq
-      }
+      val keyed = todo.map { case (docId, _, text) => ((segIdOf(docId, dps), docId), text) }
+      val metas = writeSegments(keyed, numSegments, numDocs, cfg)
 
       val allSegs = (committed ++ metas).sortBy(m => (m.docBase, m.segId))
       val meta = IndexMeta(cfg.analyzer,
@@ -236,43 +170,6 @@ object IndexBuilder {
     false
   }
 
-  /** Analyze one doc into posting rows + the doc-length sentinel row.
-    * Position counter follows the reference: starts at -1, advances by each
-    * token's positionIncrement (DocInverterPerField.cpp:119-176); doc length
-    * counts emitted tokens only (FieldInvertState length semantics). */
-  def tokenizeDoc(analyzer: Analyzer, segId: Int, docId: Long, text: String,
-      storePositions: Boolean, storePayloads: Boolean = false): Iterator[PostingRow] = {
-    val tf = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[Int]]()
-    val pf: java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[Array[Byte]]] =
-      if (storePayloads) new java.util.HashMap() else null
-    var pos = -1
-    var length = 0
-    val toks = analyzer.analyze(if (text == null) "" else text)
-    while (toks.hasNext) {
-      val t = toks.next()
-      pos += t.posIncr
-      length += 1
-      var buf = tf.get(t.term)
-      if (buf == null) { buf = new scala.collection.mutable.ArrayBuffer[Int](4); tf.put(t.term, buf) }
-      buf += pos
-      if (storePayloads) {
-        var pb = pf.get(t.term)
-        if (pb == null) { pb = new scala.collection.mutable.ArrayBuffer[Array[Byte]](4); pf.put(t.term, pb) }
-        pb += t.payload
-      }
-    }
-    val out = new scala.collection.mutable.ArrayBuffer[PostingRow](tf.size + 1)
-    out += PostingRow(segId, "", docId, 0, Array.emptyIntArray, length)
-    val it = tf.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val positions = if (storePositions) e.getValue.toArray else Array.emptyIntArray
-      val payloads = if (storePayloads) pf.get(e.getKey).toArray else null
-      out += PostingRow(segId, e.getKey, docId, e.getValue.size, positions, 0, payloads)
-    }
-    out.iterator
-  }
-
   private final class IntBuf(initial: Int = 8) {
     var arr = new Array[Int](initial)
     var n = 0
@@ -290,21 +187,52 @@ object IndexBuilder {
     var payloads: scala.collection.mutable.ArrayBuffer[Array[Byte]] = null
   }
 
-  /** "invert" mode consumer: docs arrive sorted by (segId, docId); invert
-    * one segment at a time in memory, then stream term-sorted postings into
-    * the shared SegmentWriter (identical bytes to the sort path). */
-  private[graft] def invertPartitionSegments(
-      it: Iterator[((Int, Long), String)],
-      indexDir: String,
-      analyzerName: String,
-      docsPerSegment: Int,
+  /** The build's segment writer, shared by [[build]] and
+    * `StreamingIndexer.appendBatch`: ONE shuffle groups each segment's raw
+    * docs (keyed (segId, docId)) in one task, sorted by docId, and each task
+    * inverts its segments in RAM ([[invertPartitionSegments]]). Segments are
+    * spread over `cfg.buildPartitions` tasks (0 → one per segment, capped at
+    * 4 × defaultParallelism) by segId modulo the task count. `numDocs` counts
+    * the docs from `docIdOffset` on, which sets the last segment's size.
+    * Returns the new segments' metadata. */
+  private[graft] def writeSegments(
+      docs: RDD[((Int, Long), String)],
+      numSegments: Int,
       numDocs: Long,
-      storePositions: Boolean,
+      cfg: IndexConfig,
       segIdOffset: Int = 0,
-      docIdOffset: Long = 0L,
-      storeVectors: Boolean = false,
-      storePayloads: Boolean = false): Iterator[SegmentMeta] = {
-    val analyzer = Analyzer.byName(analyzerName)
+      docIdOffset: Long = 0L): Seq[SegmentMeta] = {
+    val parts = if (cfg.buildPartitions > 0) cfg.buildPartitions
+      else math.min(numSegments, math.max(1, 4 * docs.sparkContext.defaultParallelism))
+    val partitioner = new org.apache.spark.Partitioner {
+      override def numPartitions: Int = parts
+      override def getPartition(key: Any): Int = {
+        val m = key.asInstanceOf[(Int, Long)]._1 % parts
+        if (m < 0) m + parts else m
+      }
+    }
+    docs.repartitionAndSortWithinPartitions(partitioner)
+      .mapPartitions(it => invertPartitionSegments(it, cfg, numDocs, segIdOffset, docIdOffset))
+      .collect().toSeq
+  }
+
+  /** Docs arrive sorted by (segId, docId); invert one segment at a time in
+    * memory, then stream term-sorted postings into a SegmentWriter. Task
+    * memory is bounded by docsPerSegment only: 2048-doc test segments take
+    * MBs, and at cluster scale ~256k docs/segment fit a 4 GB executor. The
+    * 1 << 20 default is above that guidance; lower docsPerSegment for
+    * long-document corpora. */
+  private def invertPartitionSegments(
+      it: Iterator[((Int, Long), String)],
+      cfg: IndexConfig,
+      numDocs: Long,
+      segIdOffset: Int,
+      docIdOffset: Long): Iterator[SegmentMeta] = {
+    val docsPerSegment = cfg.docsPerSegment
+    val storePositions = cfg.storePositions
+    val storeVectors = cfg.storeTermVectors
+    val storePayloads = cfg.storePayloads
+    val analyzer = Analyzer.byName(cfg.analyzer)
     val metas = scala.collection.mutable.ArrayBuffer.empty[SegmentMeta]
 
     var curSeg = -1
@@ -315,9 +243,9 @@ object IndexBuilder {
     def flushSegment(): Unit = {
       if (writer == null) return
       val terms = inv.keySet.toArray(new Array[String](0))
-      // code-point order — the same order the sortshuffle path's UTF8String
-      // sort produces (TermOrder scaladoc); java.util.Arrays.sort's natural
-      // UTF-16 order would disagree on supplementary-plane terms
+      // code-point order, the engine's one term order (TermOrder scaladoc);
+      // java.util.Arrays.sort's natural UTF-16 order would disagree on
+      // supplementary-plane terms
       java.util.Arrays.sort(terms, TermOrder.ordering)
       var t = 0
       while (t < terms.length) {
@@ -349,7 +277,7 @@ object IndexBuilder {
         curSeg = segId
         docBase = docIdOffset + (segId.toLong - segIdOffset) * docsPerSegment
         val docCount = math.min(docsPerSegment.toLong, docIdOffset + numDocs - docBase).toInt
-        writer = new SegmentWriter(indexDir, segId, docBase, docCount, analyzerName,
+        writer = new SegmentWriter(cfg.indexDir, segId, docBase, docCount, cfg.analyzer,
           storePositions, storeVectors, storePayloads)
         inv = new java.util.HashMap[String, TermBuf]()
       }
@@ -359,7 +287,7 @@ object IndexBuilder {
       var pos = -1
       var len = 0
       val docMap: java.util.TreeMap[String, IntBuf] =
-        if (storeVectors) new java.util.TreeMap[String, IntBuf]() else null
+        if (storeVectors) new java.util.TreeMap[String, IntBuf](TermOrder.ordering) else null
       val toks = analyzer.analyze(if (text == null) "" else text)
       while (toks.hasNext) {
         val tok = toks.next()
@@ -404,36 +332,6 @@ object IndexBuilder {
       writer.addDocLength(localDoc, len)
     }
     flushSegment()
-    metas.iterator
-  }
-
-  /** Consume one sorted partition, writing a segment per segId run. */
-  private def writePartitionSegments(
-      it: Iterator[PostingRow],
-      indexDir: String,
-      analyzerName: String,
-      docsPerSegment: Int,
-      numDocs: Long,
-      storePositions: Boolean): Iterator[SegmentMeta] = {
-    val metas = scala.collection.mutable.ArrayBuffer.empty[SegmentMeta]
-    var writer: SegmentWriter = null
-    var curSeg = -1
-    var docBase = 0L
-    while (it.hasNext) {
-      val r = it.next()
-      if (r.segId != curSeg) {
-        if (writer != null) metas += writer.finish()
-        curSeg = r.segId
-        docBase = curSeg.toLong * docsPerSegment
-        val docCount = math.min(docsPerSegment.toLong, numDocs - docBase).toInt
-        writer = new SegmentWriter(indexDir, curSeg, docBase, docCount,
-          analyzerName, storePositions)
-      }
-      val localDoc = (r.docId - docBase).toInt
-      if (r.term.isEmpty) writer.addDocLength(localDoc, r.dl)
-      else writer.addPosting(r.term, localDoc, r.freq, r.positions)
-    }
-    if (writer != null) metas += writer.finish()
     metas.iterator
   }
 }

@@ -7,8 +7,23 @@ import graft.search.{Query, ScoredDoc, SegmentSearch}
 /** Single-process build/search over the same segment format — used by unit
   * tests (fast, no SparkSession) and as the 1-partition baseline that the
   * distributed build must byte-match (MultiSearcherRankingTest pattern,
-  * SURVEY.md §5.1). */
+  * SURVEY.md §5.1). Its build sorts (segId, term, docId) posting rows
+  * instead of inverting in RAM, so it is an independent reference for
+  * [[IndexBuilder.build]]. */
 object LocalIndex {
+
+  /** One analyzed doc's posting for a term — or, when `term` is the
+    * empty-string sentinel (which sorts before every real term), the doc's
+    * length row carrying `dl`. [[build]] sorts these by (segId, term, docId)
+    * to write the reference segments. */
+  private final case class PostingRow(
+      segId: Int,
+      term: String,
+      docId: Long,
+      freq: Int,
+      positions: Array[Int],
+      dl: Int,
+      payloads: Array[Array[Byte]] = null)
 
   /** docs = (docId, text) with dense ids 0..n-1 in order. */
   def build(indexDir: String, docs: Seq[(Long, String)], analyzerName: String,
@@ -18,7 +33,7 @@ object LocalIndex {
     val analyzer = Analyzer.byName(analyzerName)
     val numDocs = docs.size.toLong
     val rows = docs.iterator.flatMap { case (id, text) =>
-      IndexBuilder.tokenizeDoc(analyzer, IndexBuilder.segIdOf(id, docsPerSegment),
+      tokenizeDoc(analyzer, IndexBuilder.segIdOf(id, docsPerSegment),
         id, text, storePositions, storePayloads)
     }.toVector.sortBy(r => (r.segId, r.term, r.docId))(
       Ordering.Tuple3(Ordering.Int, TermOrder.ordering, Ordering.Long))
@@ -39,7 +54,7 @@ object LocalIndex {
           // doc-ordered vector sidecar from each doc's own analysis
           docs.filter(d => d._1 >= docBase && d._1 < docBase + docCount)
             .sortBy(_._1).foreach { case (id, text) =>
-              val entries = IndexBuilder.tokenizeDoc(analyzer, curSeg, id, text, storePositions)
+              val entries = tokenizeDoc(analyzer, curSeg, id, text, storePositions)
                 .filter(_.term.nonEmpty).toArray.sortBy(_.term)(TermOrder.ordering)
               writer.addDocVector((id - docBase).toInt, entries.map(_.term),
                 entries.map(_.freq), entries.map(_.positions))
@@ -58,27 +73,48 @@ object LocalIndex {
     meta
   }
 
+  /** Analyze one doc into posting rows + the doc-length sentinel row.
+    * Position counter follows the reference: starts at -1, advances by each
+    * token's positionIncrement (DocInverterPerField.cpp:119-176); doc length
+    * counts emitted tokens only (FieldInvertState length semantics). */
+  private def tokenizeDoc(analyzer: Analyzer, segId: Int, docId: Long, text: String,
+      storePositions: Boolean, storePayloads: Boolean = false): Iterator[PostingRow] = {
+    val tf = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[Int]]()
+    val pf: java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[Array[Byte]]] =
+      if (storePayloads) new java.util.HashMap() else null
+    var pos = -1
+    var length = 0
+    val toks = analyzer.analyze(if (text == null) "" else text)
+    while (toks.hasNext) {
+      val t = toks.next()
+      pos += t.posIncr
+      length += 1
+      var buf = tf.get(t.term)
+      if (buf == null) { buf = new scala.collection.mutable.ArrayBuffer[Int](4); tf.put(t.term, buf) }
+      buf += pos
+      if (storePayloads) {
+        var pb = pf.get(t.term)
+        if (pb == null) { pb = new scala.collection.mutable.ArrayBuffer[Array[Byte]](4); pf.put(t.term, pb) }
+        pb += t.payload
+      }
+    }
+    val out = new scala.collection.mutable.ArrayBuffer[PostingRow](tf.size + 1)
+    out += PostingRow(segId, "", docId, 0, Array.emptyIntArray, length)
+    val it = tf.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      val positions = if (storePositions) e.getValue.toArray else Array.emptyIntArray
+      val payloads = if (storePayloads) pf.get(e.getKey).toArray else null
+      out += PostingRow(segId, e.getKey, docId, e.getValue.size, positions, 0, payloads)
+    }
+    out.iterator
+  }
+
   /** Sequential search across all segments + merge (drop-in comparable with
     * the distributed IndexSearcher). */
   def search(indexDir: String, q0: Query, k: Int, sim: Similarity,
       useWand: Boolean = true): Array[ScoredDoc] = {
-    val meta = IndexMetaIO.readLatest(indexDir).get
-    val readers = meta.segments.map(m =>
-      new SegmentReader(new java.io.File(indexDir, SegmentFormat.segDirName(m.segId))))
-    val q =
-      if (!graft.search.Query.hasMultiTerm(q0)) q0
-      else {
-        // merged dictionary view: union of per-segment sorted term streams
-        val termsFrom = (lower: Option[String]) => {
-          val its = readers.map(_.termsFrom(lower).map(_.term))
-          its.foldLeft(Iterator.empty: Iterator[String])(_ ++ _).toSeq.distinct
-            .sorted(TermOrder.ordering).iterator
-        }
-        graft.search.MultiTerm.expand(q0, termsFrom)
-      }
-    val terms = Query.allTerms(q)
-    val dfm = terms.map(t => t -> readers.flatMap(_.termInfo(t)).map(_.df.toLong).sum).toMap
-    val stats = graft.score.CorpusStats(meta.numDocs, meta.avgDocLength)
+    val Prepared(readers, q, dfm, stats) = prepare(indexDir, q0)
     readers.flatMap(r => SegmentSearch.topK(r, q, k, sim, stats, t => dfm.getOrElse(t, 0L), useWand))
       .sortBy(h => (-h.score, h.docId))
       .take(k)
@@ -90,22 +126,7 @@ object LocalIndex {
     * with matched=false for a non-hit. */
   def explain(indexDir: String, q0: Query, docId: Long,
       sim: Similarity): graft.search.Explanation = {
-    val meta = IndexMetaIO.readLatest(indexDir).get
-    val readers = meta.segments.map(m =>
-      new SegmentReader(new java.io.File(indexDir, SegmentFormat.segDirName(m.segId))))
-    val q =
-      if (!graft.search.Query.hasMultiTerm(q0)) q0
-      else {
-        val termsFrom = (lower: Option[String]) => {
-          val its = readers.map(_.termsFrom(lower).map(_.term))
-          its.foldLeft(Iterator.empty: Iterator[String])(_ ++ _).toSeq.distinct
-            .sorted(TermOrder.ordering).iterator
-        }
-        graft.search.MultiTerm.expand(q0, termsFrom)
-      }
-    val terms = Query.allTerms(q)
-    val dfm = terms.map(t => t -> readers.flatMap(_.termInfo(t)).map(_.df.toLong).sum).toMap
-    val stats = graft.score.CorpusStats(meta.numDocs, meta.avgDocLength)
+    val Prepared(readers, q, dfm, stats) = prepare(indexDir, q0)
     val reader = readers.find(r =>
       docId >= r.meta.docBase && docId < r.meta.docBase + r.meta.docCount)
       .getOrElse(return graft.search.Explanation(0.0, s"doc $docId not in index",
@@ -115,5 +136,31 @@ object LocalIndex {
     val qn = sim.queryNorm(SegmentSearch.sumOfSquaredWeights(
       Query.rewrite(q), sim, stats, t => dfm.getOrElse(t, 0L)))
     graft.search.Explain.explainDoc(q, view, sim, stats, dfm, qn)
+  }
+
+  /** A query made ready to run on the latest commit: the segment readers,
+    * `q0` with multi-term nodes expanded over the merged dictionary, and
+    * its global df per term and corpus stats. */
+  private final case class Prepared(readers: Seq[SegmentReader], q: Query,
+      dfm: Map[String, Long], stats: graft.score.CorpusStats)
+
+  private def prepare(indexDir: String, q0: Query): Prepared = {
+    val meta = IndexMetaIO.readLatest(indexDir).get
+    val readers = meta.segments.map(m =>
+      new SegmentReader(new java.io.File(indexDir, SegmentFormat.segDirName(m.segId))))
+    val q =
+      if (!Query.hasMultiTerm(q0)) q0
+      else {
+        // merged dictionary view: union of per-segment sorted term streams
+        val termsFrom = (lower: Option[String]) => {
+          val its = readers.map(_.termsFrom(lower).map(_.term))
+          its.foldLeft(Iterator.empty: Iterator[String])(_ ++ _).toSeq.distinct
+            .sorted(TermOrder.ordering).iterator
+        }
+        graft.search.MultiTerm.expand(q0, termsFrom)
+      }
+    val dfm = Query.allTerms(q).map(t =>
+      t -> readers.flatMap(_.termInfo(t)).map(_.df.toLong).sum).toMap
+    Prepared(readers, q, dfm, graft.score.CorpusStats(meta.numDocs, meta.avgDocLength))
   }
 }

@@ -1,8 +1,9 @@
 package graft.index
 
 /** The engine's single term order: Unicode CODE-POINT order, which equals
-  * UTF-8 byte order — the order Spark's UTF8String sort produces during the
-  * distributed build, the order DuckDB's memcmp oracle compares in, and the
+  * UTF-8 byte order — the order of every segment dictionary and term vector
+  * (the build, `LocalIndex` and compaction all sort with it), the order
+  * Spark's UTF8String sort and DuckDB's memcmp oracle compare in, and the
   * order the reference's TermInfosWriter comparison yields on this platform
   * (/root/reference/src/core/index/TermInfosWriter.cpp:82-104: wchar_t is
   * 32-bit on Linux, so its per-char compare IS code-point compare).

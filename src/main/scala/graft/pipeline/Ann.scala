@@ -311,8 +311,8 @@ object Ann {
     * compact index: m bytes/vector at codewords ≤ 256 versus dim floats.
     * Native codegen expression ([[graft.functions.PqCode]]): one generated
     * pass over the vector instead of m × codewords interpreted
-    * zip_with/aggregate folds (~1.2 ms/row at m=16, cw=32 — measured via
-    * graft.tools.ProbeEncode); pinned value-identical to [[pqCodeSpec]]
+    * zip_with/aggregate folds (~1.2 ms/row at m=16, cw=32 — measured in
+    * OPTIMIZATION_r06.md, change 8); pinned value-identical to [[pqCodeSpec]]
     * (same fold order, same null/tie semantics) in PipelineSpec. Every
     * codeword must be `d0` wide — the width [[pqCodeSpec]] slices by — and
     * the literal holds a copy of `books`, so later writes to the caller's

@@ -48,26 +48,15 @@ object StreamingIndexer {
       if (newDocs == 0) return priorMeta.getOrElse(
         IndexMeta(analyzer, 0, 0, storePositions, Nil))
       val numSegments = math.max(1, ((newDocs + docsPerSegment - 1) / docsPerSegment).toInt)
-      val parts = math.min(numSegments, math.max(1, 4 * spark.sparkContext.defaultParallelism))
-      val partitioner = new org.apache.spark.Partitioner {
-        override def numPartitions: Int = parts
-        override def getPartition(key: Any): Int = {
-          val s = key.asInstanceOf[(Int, Long)]._1 % parts
-          if (s < 0) s + parts else s
-        }
-      }
       val dps = docsPerSegment
       val segOff = segIdOffset
       val docOff = docIdOffset
-      val metas = sortedBase.zipWithIndex()
+      val keyed = sortedBase.zipWithIndex()
         .map { case ((_, text), rank) =>
           ((segOff + (rank / dps).toInt, docOff + rank), text)
         }
-        .repartitionAndSortWithinPartitions(partitioner)
-        .mapPartitions { it =>
-          IndexBuilder.invertPartitionSegments(it, indexDir, analyzer, dps,
-            newDocs, storePositions, segOff, docOff)
-        }.collect().toSeq
+      val metas = IndexBuilder.writeSegments(keyed, numSegments, newDocs,
+        IndexConfig(indexDir, analyzer, docsPerSegment, storePositions), segOff, docOff)
 
       val allSegs = (priorMeta.map(_.segments).getOrElse(Nil) ++ metas).sortBy(_.segId)
       val meta = IndexMeta(analyzer,

@@ -25,13 +25,13 @@ class SparkIndexSpec extends AnyFunSuite {
 
   private val N = 500
   private lazy val corpus = SyntheticCorpus.generate(spark, N, seed = 11, avgLen = 50, vocab = 400)
-  // brute-force twin: docId = rank in url order (the builder's contract)
-  private lazy val bfDocs = {
-    val pages = SyntheticCorpus.localPages(N, seed = 11, avgLen = 50, vocab = 400)
-      .sortBy(_.url)
-    BruteForce.analyzeCorpus(graft.analysis.StandardAnalyzer(),
-      pages.zipWithIndex.map { case (p, i) => (i.toLong, p.text) })
-  }
+  // the corpus as (docId, text) with docId = rank in url order (the
+  // IndexBuilder's contract): input of the brute-force and LocalIndex twins
+  private lazy val rankedDocs: Seq[(Long, String)] =
+    SyntheticCorpus.localPages(N, seed = 11, avgLen = 50, vocab = 400)
+      .sortBy(_.url).zipWithIndex.map { case (p, i) => (i.toLong, p.text) }
+  private lazy val bfDocs =
+    BruteForce.analyzeCorpus(graft.analysis.StandardAnalyzer(), rankedDocs)
 
   private def fileHashes(dir: String): Map[String, Long] = {
     def walk(f: File): Seq[File] =
@@ -173,19 +173,18 @@ class SparkIndexSpec extends AnyFunSuite {
     assert(stagesPerJob.toSeq == Seq(1, 1), s"stages per job: $stagesPerJob")
   }
 
-  test("build output is byte-identical across shuffle partitioning AND build modes") {
-    val d4 = tmpDir(); val d8 = tmpDir(); val ds = tmpDir()
+  test("build output is byte-identical across partitionings and to LocalIndex") {
+    val d4 = tmpDir(); val d8 = tmpDir(); val dl = tmpDir()
     IndexBuilder.build(spark, corpus, IndexConfig(d4, docsPerSegment = 64,
       buildPartitions = 2, writeDocMap = false))
     IndexBuilder.build(spark, corpus, IndexConfig(d8, docsPerSegment = 64,
       buildPartitions = 8, writeDocMap = false))
-    IndexBuilder.build(spark, corpus, IndexConfig(ds, docsPerSegment = 64,
-      buildPartitions = 8, writeDocMap = false, buildMode = "sortshuffle"))
+    LocalIndex.build(dl, rankedDocs, "standard", docsPerSegment = 64)
     val h4 = fileHashes(d4)
     val h8 = fileHashes(d8)
-    val hs = fileHashes(ds)
+    val hl = fileHashes(dl)
     assert(h4.nonEmpty && h4 == h8)
-    assert(h4 == hs, "invert and sortshuffle modes must write identical segments")
+    assert(h4 == hl, "distributed and LocalIndex builds must write identical segments")
   }
 
   test("resume: killed build restarts from committed segments only") {
@@ -211,14 +210,34 @@ class SparkIndexSpec extends AnyFunSuite {
     assert(a.toSeq == b.toSeq)
   }
 
-  test("supplementary-plane terms: invert and sortshuffle builds agree on order") {
-    import spark.implicits._
+  // supplementary-plane terms (surrogate pairs) next to BMP terms in
+  // [U+E000, U+FFFF], where UTF-16 order and code-point order disagree;
+  // doc 2 holds both kinds
+  private def supplementaryTexts: Seq[String] = {
     val sup1 = new String(Character.toChars(0x10000))
     val sup2 = new String(Character.toChars(0x1D11E))
-    val texts = Seq(s"alpha $sup1 common", s"\uFFFB zeta common", s"$sup2 \uE000 common",
+    Seq(s"alpha $sup1 common", s"\uFFFB zeta common", s"$sup2 \uE000 common",
       "plain common words")
+  }
+
+  /** Builds `texts` (urls in text order) with [[IndexBuilder.build]] and with
+    * [[LocalIndex.build]] under the same settings; returns both dirs. */
+  private def buildBoth(texts: Seq[String], analyzer: String, docsPerSegment: Int,
+      storeTermVectors: Boolean = false, storePayloads: Boolean = false): (String, String) = {
+    import spark.implicits._
     val df = texts.zipWithIndex
       .map { case (t, i) => (f"u$i%04d", t) }.toDF("url", "text")
+    val dist = tmpDir(); val local = tmpDir()
+    IndexBuilder.build(spark, df, IndexConfig(dist, analyzer = analyzer,
+      docsPerSegment = docsPerSegment, writeDocMap = false,
+      storeTermVectors = storeTermVectors, storePayloads = storePayloads))
+    LocalIndex.build(local, texts.zipWithIndex.map { case (t, i) => (i.toLong, t) },
+      analyzer, docsPerSegment = docsPerSegment,
+      storeTermVectors = storeTermVectors, storePayloads = storePayloads)
+    (dist, local)
+  }
+
+  test("supplementary-plane terms: build == LocalIndex.build, code-point order") {
     def termsOf(dir: String): Seq[String] = {
       val meta = IndexMetaIO.readLatest(dir).get
       meta.segments.flatMap { m =>
@@ -228,18 +247,46 @@ class SparkIndexSpec extends AnyFunSuite {
         ts
       }
     }
-    val d1 = tmpDir(); val d2 = tmpDir()
-    IndexBuilder.build(spark, df, IndexConfig(d1, analyzer = "whitespace",
-      docsPerSegment = 2, writeDocMap = false, buildMode = "invert"))
-    IndexBuilder.build(spark, df, IndexConfig(d2, analyzer = "whitespace",
-      docsPerSegment = 2, writeDocMap = false, buildMode = "sortshuffle"))
+    val (d1, d2) = buildBoth(supplementaryTexts, "whitespace", docsPerSegment = 2)
     assert(termsOf(d1) == termsOf(d2))
+    assert(fileHashes(d1).nonEmpty && fileHashes(d1) == fileHashes(d2))
     // both searchable across the surrogate boundary
     Seq(d1, d2).foreach { d =>
       val s2 = new IndexSearcher(spark, d)
       val hits = s2.search(TermRangeQ(Some("\uFFFB"), None,
         includeLower = true, includeUpper = true), 10, BM25())
       assert(hits.map(_.docId).toSet == Set(0L, 1L, 2L), s"$d: ${hits.toSeq}")
+    }
+  }
+
+  test("term vectors: build == LocalIndex.build on supplementary-plane terms") {
+    val (dist, local) = buildBoth(supplementaryTexts, "whitespace", docsPerSegment = 2,
+      storeTermVectors = true)
+    val h = fileHashes(dist)
+    assert(h.keys.count(_.endsWith("vectors.bin")) == 2, h.keys)
+    assert(h == fileHashes(local))
+    // each doc's vector is term-sorted in code-point order
+    val meta = IndexMetaIO.readLatest(dist).get
+    meta.segments.foreach { m =>
+      val r = new SegmentReader(new File(dist, SegmentFormat.segDirName(m.segId)))
+      (0 until m.docCount).foreach { d =>
+        val terms = r.termVector(d).get.map(_._1).toSeq
+        assert(terms == terms.sorted(TermOrder.ordering), s"segment ${m.segId} doc $d: $terms")
+      }
+    }
+  }
+
+  test("payloads, with and without term vectors: build == LocalIndex.build") {
+    // floats after '|' become payloads; bare tokens carry none
+    val texts = (0 until 40).map { i =>
+      s"w${i % 5}|${i % 3 + 1}.0 w${i * 7 % 11} tail|0.5 w${i % 5}|2.5 id$i"
+    }
+    for (vectors <- Seq(false, true)) {
+      val (dist, local) = buildBoth(texts, "delimited", docsPerSegment = 8,
+        storeTermVectors = vectors, storePayloads = true)
+      val h = fileHashes(dist)
+      assert(h.keys.exists(_.endsWith("vectors.bin")) == vectors, h.keys)
+      assert(h.nonEmpty && h == fileHashes(local), s"vectors=$vectors")
     }
   }
 }
