@@ -50,9 +50,9 @@ object EngineQueries {
     searchers.get(key) match {
       case Some((gen, s)) if IndexMetaIO.latestGen(dir).contains(gen) => s
       case _ =>
-        val committed = IndexMetaIO.readLatestWithExtra(dir)
-          .filter { case (_, extra) => extra.get("format").contains(IndexMetaIO.FormatVersion) }
-          .filter { case (m, _) => // stale segment layout → rebuild
+        val committed = IndexMetaIO.readLatestSnapshot(dir)
+          .filter(_.format == IndexMetaIO.FormatVersion).map(_.meta)
+          .filter { m => // stale segment layout → rebuild
             m.segments.nonEmpty &&
               (!payloads || m.segments.forall(_.hasPayloads)) &&
               m.segments.map(_.docCount).max ==

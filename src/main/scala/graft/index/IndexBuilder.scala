@@ -12,7 +12,7 @@ final case class IndexConfig(
       * resume, and the only bound on build task memory (each segment is
       * inverted in one task's RAM). At 10^12 docs you'd run ~1M
       * docs/segment over thousands of executors; tests shrink it. */
-    docsPerSegment: Int = 1 << 20,
+    docsPerSegment: Int = IndexConfig.DefaultDocsPerSegment,
     storePositions: Boolean = true,
     /** Partitions of the segment shuffle; 0 → one per segment, capped at
       * 4 × defaultParallelism. */
@@ -24,6 +24,14 @@ final case class IndexConfig(
     /** Store per-position payloads (requires storePositions and a
       * payload-producing analyzer, e.g. "delimited"). */
     storePayloads: Boolean = false)
+
+object IndexConfig {
+  /** Docs per segment unless the caller says otherwise, for the build and
+    * for streaming appends alike. It is above the inverter's ~256k docs per
+    * 4 GB task guidance, but lowering it changes the segment layout of every
+    * caller that relies on the default. */
+  val DefaultDocsPerSegment: Int = 1 << 20
+}
 
 final case class BuildReport(
     numDocs: Long,
@@ -72,9 +80,9 @@ object IndexBuilder {
 
     Analyzer.byName(cfg.analyzer) // fail fast on an unknown analyzer name
     require(!cfg.storePayloads || cfg.storePositions, "payloads require storePositions")
-    IndexMetaIO.readLatestWithExtra(cfg.indexDir).foreach { case (_, extra) =>
-      require(extra.get("format").contains(IndexMetaIO.FormatVersion),
-        s"${cfg.indexDir} was written with segment format ${extra.getOrElse("format", "1")} " +
+    IndexMetaIO.readLatestSnapshot(cfg.indexDir).foreach { prior =>
+      require(prior.format == IndexMetaIO.FormatVersion,
+        s"${cfg.indexDir} was written with segment format ${prior.format} " +
           s"(current ${IndexMetaIO.FormatVersion}); delete it and rebuild")
     }
     val committed = IndexMetaIO.committedSegments(cfg.indexDir)
@@ -145,13 +153,8 @@ object IndexBuilder {
       val keyed = todo.map { case (docId, _, text) => ((segIdOf(docId, dps), docId), text) }
       val metas = writeSegments(keyed, numSegments, numDocs, cfg)
 
-      val allSegs = (committed ++ metas).sortBy(m => (m.docBase, m.segId))
-      val meta = IndexMeta(cfg.analyzer,
-        allSegs.map(_.docCount.toLong).sum,
-        allSegs.map(_.sumDocLength).sum,
-        cfg.storePositions,
-        allSegs)
-      IndexMetaIO.writeCommit(cfg.indexDir, meta)
+      val meta = IndexMetaIO.commit(cfg.indexDir, IndexMeta(cfg.analyzer, cfg.storePositions,
+        (committed ++ metas).sortBy(m => (m.docBase, m.segId)))).meta
       BuildReport(numDocs, numSegments, metas.size, committed.size, meta)
     }
   }

@@ -5,7 +5,8 @@ import java.nio.file.{Files, StandardCopyOption}
 
 import graft.codec.{ByteReader, ByteWriter}
 
-/** Index-level snapshot: the committed segment set + global stats.
+/** Index-level snapshot: the committed segment set and the analysis
+  * settings every segment in it shares.
   *
   * Commit model mirrors the reference's lockless two-phase `segments_N`
   * (/root/reference/src/core/index/SegmentInfos.cpp:29-31,226-289):
@@ -16,14 +17,35 @@ import graft.codec.{ByteReader, ByteWriter}
   *    a half-written commit file is ignored because generation files are
   *    write-once + atomic-renamed.
   * Resume = planned segments MINUS segments already on disk with valid
-  * meta (anti-join on segId). */
+  * meta (anti-join on segId). A commit generation ([[IndexMetaIO.Snapshot]])
+  * holds `segments`, `analyzer`, `hasPositions`, `delGen`, `streamBatch` and
+  * `format`; every writer commits through [[IndexMetaIO.commit]], which
+  * starts from the latest generation, so every commit carries all of them.
+  * `numDocs` and `sumDocLength` are sums over `segments`. */
 final case class IndexMeta(
     analyzer: String,
-    numDocs: Long,
-    sumDocLength: Long,
     hasPositions: Boolean,
     segments: Seq[SegmentMeta]) {
+  val numDocs: Long = segments.map(_.docCount.toLong).sum
+  val sumDocLength: Long = segments.map(_.sumDocLength).sum
   def avgDocLength: Double = if (numDocs == 0) 0.0 else sumDocLength.toDouble / numDocs
+
+  /** First docId past every committed segment: where appended docs start. */
+  def nextDocId: Long = segments.map(s => s.docBase + s.docCount).foldLeft(0L)(math.max)
+
+  /** Id for the next new segment. Merged segments take fresh ids too, so
+    * ids only grow and a retired segment's id is never reused. */
+  def nextSegId: Int = segments.map(_.segId + 1).foldLeft(0)(math.max)
+
+  /** Fails unless every segment was written with this snapshot's analyzer
+    * and positions setting: searches analyze queries with `analyzer`, and a
+    * merge gives its output the settings of its inputs. */
+  def requireUniform(): IndexMeta = {
+    segments.foreach(s => require(s.analyzer == analyzer && s.hasPositions == hasPositions,
+      s"segment ${s.segId} has analyzer '${s.analyzer}' and hasPositions=${s.hasPositions}; " +
+        s"the index has '$analyzer' and hasPositions=$hasPositions"))
+    this
+  }
 }
 
 object IndexMetaIO {
@@ -33,6 +55,22 @@ object IndexMetaIO {
     * tables + skipBytes in the term entry); readers of a mismatched index
     * must rebuild rather than mis-parse. */
   val FormatVersion = "2"
+
+  /** One commit generation: `meta` plus what every commit carries unless its
+    * writer changes it — the deletion generation (readers load each
+    * segment's newest `del_<g>.bin` with g ≤ delGen; 0 = no deletes), the
+    * last streaming batch applied (the exactly-once watermark) and the
+    * segment format version. */
+  final case class Snapshot(meta: IndexMeta, delGen: Int, streamBatch: Option[Long],
+      format: String) {
+    /** The generation the next delete batch writes its bitsets under. */
+    def nextDelGen: Int = delGen + 1
+  }
+
+  // on-disk keys of the Snapshot fields
+  private val DelGenKey = "delgen"
+  private val StreamBatchKey = "lastStreamBatch"
+  private val FormatKey = "format"
 
   def encodeSegment(m: SegmentMeta): Array[Byte] = {
     val w = new ByteWriter(128)
@@ -73,14 +111,25 @@ object IndexMetaIO {
       s""""analyzer":${jsonStr(m.analyzer)},"hasPositions":${m.hasPositions},""" +
       s""""hasVectors":${m.hasVectors},"hasPayloads":${m.hasPayloads}}"""
 
-  /** Write the driver-side commit snapshot: human-readable lineage JSON +
-    * a binary twin (.segs) that readers load authoritatively — so a crash
-    * BETWEEN a segment publish and its snapshot cannot surface uncommitted
-    * segments to queries (the reference's write-once segments_N semantics,
-    * SegmentInfos.cpp:226-289). `extra` carries e.g. the streaming batch
-    * watermark. */
-  def writeCommit(indexDir: String, meta: IndexMeta, extra0: Map[String, String] = Map.empty): Unit = {
-    val extra = if (extra0.contains("format")) extra0 else extra0 + ("format" -> FormatVersion)
+  /** The one commit path: writes the next generation holding `meta`, with
+    * `delGen` and `streamBatch` where the writer sets them and the latest
+    * generation's values where it does not, so a merge, a rebuild or an
+    * unnumbered append cannot drop committed deletes or the watermark. The
+    * format is carried too: a new index is stamped [[FormatVersion]], an
+    * older one is never re-stamped as current. The generation is written as
+    * human-readable lineage JSON + a binary twin (.segs) that readers load
+    * authoritatively — so a crash BETWEEN a segment publish and its snapshot
+    * cannot surface uncommitted segments to queries (the reference's
+    * write-once segments_N semantics, SegmentInfos.cpp:226-289). */
+  def commit(indexDir: String, meta: IndexMeta, delGen: Option[Int] = None,
+      streamBatch: Option[Long] = None): Snapshot = {
+    meta.requireUniform()
+    val prior = readLatestSnapshot(indexDir)
+    val snap = Snapshot(meta, delGen.getOrElse(prior.fold(0)(_.delGen)),
+      streamBatch.orElse(prior.flatMap(_.streamBatch)), prior.fold(FormatVersion)(_.format))
+    val extra = (Seq(FormatKey -> snap.format) ++
+      Some(DelGenKey -> snap.delGen.toString).filter(_ => snap.delGen > 0) ++
+      snap.streamBatch.map(b => StreamBatchKey -> b.toString)).sortBy(_._1)
     val commitsDir = new File(indexDir, "commits")
     commitsDir.mkdirs()
     val gen = 1 + listCommitGens(commitsDir).foldLeft(-1)(math.max)
@@ -97,7 +146,7 @@ object IndexMetaIO {
     segsBin.writeVLong(meta.sumDocLength)
     segsBin.writeByte(if (meta.hasPositions) 1 else 0)
     segsBin.writeVInt(extra.size)
-    extra.toSeq.sortBy(_._1).foreach { case (k, v) => segsBin.writeString(k); segsBin.writeString(v) }
+    extra.foreach { case (k, v) => segsBin.writeString(k); segsBin.writeString(v) }
     segsBin.writeVInt(meta.segments.size)
     meta.segments.sortBy(_.segId).foreach { m =>
       val b = encodeSegment(m)
@@ -112,16 +161,17 @@ object IndexMetaIO {
     Files.writeString(tmp.toPath, body.toString)
     Files.move(tmp.toPath, new File(commitsDir, s"commit_$gen.json").toPath,
       StandardCopyOption.ATOMIC_MOVE)
+    snap
   }
 
-  /** Read a binary snapshot; returns (meta, extra). */
-  def readSnapshot(indexDir: String, gen: Int): Option[(IndexMeta, Map[String, String])] = {
+  /** Read one commit generation's binary snapshot. */
+  def readSnapshot(indexDir: String, gen: Int): Option[Snapshot] = {
     val f = new File(new File(indexDir, "commits"), s"commit_$gen.segs")
     if (!f.exists()) return None
     val r = new ByteReader(Files.readAllBytes(f.toPath))
     val analyzer = r.readString()
-    val numDocs = r.readVLong()
-    val sumDl = r.readVLong()
+    r.readVLong() // numDocs and sumDocLength: sums over the segments
+    r.readVLong()
     val hasPos = r.readByte() == 1
     val nExtra = r.readVInt()
     val extra = (0 until nExtra).map(_ => (r.readString(), r.readString())).toMap
@@ -130,7 +180,10 @@ object IndexMetaIO {
       val len = r.readVInt()
       decodeSegment(r.readBytes(len))
     }
-    Some((IndexMeta(analyzer, numDocs, sumDl, hasPos, segs), extra))
+    Some(Snapshot(IndexMeta(analyzer, hasPos, segs),
+      extra.get(DelGenKey).fold(0)(_.toInt),
+      extra.get(StreamBatchKey).map(_.toLong),
+      extra.getOrElse(FormatKey, "1"))) // written before the format stamp
   }
 
   def latestGen(indexDir: String): Option[Int] = {
@@ -143,10 +196,9 @@ object IndexMetaIO {
     * compaction purges the commit files whose snapshots reference the
     * segments it physically retires (Maintenance.compact), so history
     * truncates exactly where its files go. Only generations whose binary
-    * `.segs` twin survives are listed: the point-in-time open path reads
-    * the twin, so a `.json` whose twin was lost (the legacy case
-    * `readLatest`'s dir-scan fallback covers) must not be advertised as
-    * openable. */
+    * `.segs` twin survives are listed: readers load the twin, and a
+    * compaction that stops between purging a generation's two files
+    * leaves its `.json` alone. */
   def commitGens(indexDir: String): Seq[Int] = {
     val cd = new File(indexDir, "commits")
     listCommitGens(cd)
@@ -177,19 +229,9 @@ object IndexMetaIO {
       .sortBy(_.segId)
   }
 
-  /** Read the latest committed snapshot (binary .segs is authoritative —
-    * segments on disk that never made a snapshot are invisible to queries;
-    * legacy fallback scans segment dirs). */
-  def readLatest(indexDir: String): Option[IndexMeta] =
-    latestGen(indexDir).map { gen =>
-      readSnapshot(indexDir, gen).map(_._1).getOrElse {
-        val segs = committedSegments(indexDir)
-        IndexMeta(segs.headOption.map(_.analyzer).getOrElse("standard"),
-          segs.map(_.docCount.toLong).sum, segs.map(_.sumDocLength).sum,
-          segs.forall(_.hasPositions), segs)
-      }
-    }
+  /** Segments on disk that never made a commit are invisible here. */
+  def readLatestSnapshot(indexDir: String): Option[Snapshot] =
+    latestGen(indexDir).flatMap(readSnapshot(indexDir, _))
 
-  def readLatestWithExtra(indexDir: String): Option[(IndexMeta, Map[String, String])] =
-    latestGen(indexDir).flatMap(gen => readSnapshot(indexDir, gen))
+  def readLatest(indexDir: String): Option[IndexMeta] = readLatestSnapshot(indexDir).map(_.meta)
 }

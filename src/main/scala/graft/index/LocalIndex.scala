@@ -67,10 +67,8 @@ object LocalIndex {
     }
     if (writer != null) metas += writer.finish()
 
-    val meta = IndexMeta(analyzerName, metas.map(_.docCount.toLong).sum,
-      metas.map(_.sumDocLength).sum, storePositions, metas.toSeq.sortBy(_.segId))
-    IndexMetaIO.writeCommit(indexDir, meta)
-    meta
+    IndexMetaIO.commit(indexDir,
+      IndexMeta(analyzerName, storePositions, metas.toSeq.sortBy(_.segId))).meta
   }
 
   /** Analyze one doc into posting rows + the doc-length sentinel row.

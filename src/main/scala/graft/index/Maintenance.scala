@@ -92,8 +92,7 @@ object Maintenance {
     require(segIds.nonEmpty)
     // bound source readers by the COMMITTED delgen: a crashed uncommitted
     // delete batch's orphan del files must not get baked into the merge
-    val committedGen = IndexMetaIO.readLatestWithExtra(indexDir)
-      .flatMap(_._2.get("delgen")).map(_.toInt).getOrElse(0)
+    val committedGen = IndexMetaIO.readLatestSnapshot(indexDir).fold(0)(_.delGen)
     // order inputs by DOC BASE, not segId: merged segments take fresh
     // (higher) ids, so after a partial compaction id order and doc order
     // diverge — e.g. leftover segId 9 at docBase 90 vs merged segId 10 at
@@ -204,7 +203,7 @@ object Maintenance {
     val meta = IndexMetaIO.readLatest(indexDir)
       .getOrElse(throw new IllegalStateException(s"no committed index at $indexDir"))
     val segs = meta.segments.sortBy(_.docBase)
-    val nextId = segs.map(_.segId + 1).foldLeft(0)(math.max)
+    val nextId = meta.nextSegId
     // group adjacent runs of small segments, chunked to the merge factor
     val groups = scala.collection.mutable.ArrayBuffer.empty[Seq[SegmentMeta]]
     var cur = scala.collection.mutable.ArrayBuffer.empty[SegmentMeta]
@@ -257,14 +256,9 @@ object Maintenance {
       }
     val retired = groups.flatten.map(_.segId).toSet
     val newSegs = (segs.filterNot(s => retired.contains(s.segId)) ++ merged).sortBy(_.docBase)
-    val newMeta = IndexMeta(meta.analyzer, newSegs.map(_.docCount.toLong).sum,
-      newSegs.map(_.sumDocLength).sum, meta.hasPositions, newSegs)
-    // carry the deletion generation forward: segments NOT merged may still
-    // hold del bitsets, and searchers key reader caches by delgen
-    val delGen = IndexMetaIO.readLatestWithExtra(indexDir)
-      .flatMap(_._2.get("delgen"))
-    IndexMetaIO.writeCommit(indexDir, newMeta,
-      delGen.map(g => Map("delgen" -> g)).getOrElse(Map.empty))
+    // the commit carries the deletion generation (segments NOT merged may
+    // still hold del bitsets) and the streaming watermark
+    val newMeta = IndexMetaIO.commit(indexDir, meta.copy(segments = newSegs)).meta
     // retire the commit points whose snapshots reference the segments about
     // to be deleted: left in place, commitGens would advertise point-in-time
     // generations that can no longer open. Compaction is where history
@@ -281,7 +275,7 @@ object Maintenance {
     val commitsDir = new File(indexDir, "commits")
     IndexMetaIO.commitGens(indexDir).foreach { g =>
       val refsRetired = IndexMetaIO.readSnapshot(indexDir, g)
-        .exists(_._1.segments.exists(s => retired.contains(s.segId)))
+        .exists(_.meta.segments.exists(s => retired.contains(s.segId)))
       if (refsRetired) {
         new File(commitsDir, s"commit_$g.segs").delete()
         new File(commitsDir, s"commit_$g.json").delete()

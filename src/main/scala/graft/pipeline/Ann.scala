@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -194,7 +196,8 @@ object Ann {
   }
 
   private def assignExpr(cs: Array[Array[Double]]): Column = {
-    val sims = array(cs.map(c => cosine(col("embedding"), typedLit(c.toSeq))): _*)
+    val sims = array(ArraySeq.unsafeWrapArray(
+      cs.map(c => cosine(col("embedding"), typedLit(c.toSeq)))): _*)
     (array_position(sims, array_max(sims)) - 1).cast("int")
   }
 
@@ -253,11 +256,11 @@ object Ann {
     * aggregate chains evaluate interpreted, and at m×codewords chains per
     * row they were the dominant cost of the encode-once corpus pass. */
   private def assignSubExpr(book: Array[Array[Double]], sub: Column): Column = {
-    val scores = array(book.map { c =>
+    val scores = array(ArraySeq.unsafeWrapArray(book.map { c =>
       val dot = aggregate(zip_with(sub, typedLit(c.toSeq),
         (x, cc) => x.cast("double") * cc), lit(0.0), (a, x) => a + x)
       lit(c.map(v => v * v).sum) - lit(2.0) * dot
-    }: _*)
+    }): _*)
     (array_position(scores, array_min(scores)) - 1).cast("int")
   }
 

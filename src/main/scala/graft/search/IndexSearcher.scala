@@ -116,23 +116,20 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
 
   def this(spark: SparkSession, indexDir: String) = this(spark, indexDir, None)
 
-  private val snapshot: (IndexMeta, Map[String, String]) = commitGen match {
+  private val snapshot: IndexMetaIO.Snapshot = commitGen match {
     case Some(g) => IndexMetaIO.readSnapshot(indexDir, g)
       .getOrElse(throw new IllegalStateException(s"no commit generation $g at $indexDir"))
-    case None => IndexMetaIO.readLatestWithExtra(indexDir)
-      // readLatest's legacy fallback (reconstruct from segment dirs when
-      // the binary snapshot is unreadable), with no commit extras
-      .orElse(IndexMetaIO.readLatest(indexDir).map((_, Map.empty[String, String])))
+    case None => IndexMetaIO.readLatestSnapshot(indexDir)
       .getOrElse(throw new IllegalStateException(s"no committed index at $indexDir"))
   }
-  val meta: IndexMeta = snapshot._1
+  val meta: IndexMeta = snapshot.meta
   val stats: CorpusStats = CorpusStats(meta.numDocs, meta.avgDocLength)
 
   /** Deletion generation of the snapshot this searcher opened — baked into
     * every reader-cache key so executors re-open segments after a delete
     * batch. Scoring stats (df, N, avgdl) deliberately keep counting
     * tombstoned docs until a merge reclaims them, as the reference does. */
-  private val delGen: Int = snapshot._2.get("delgen").map(_.toInt).getOrElse(0)
+  private val delGen: Int = snapshot.delGen
 
   private def cacheKey(path: String): String =
     if (delGen == 0) path else s"$path#$delGen"
@@ -297,38 +294,14 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
 
   /** Explain the score of one (query, doc) — the reference's
     * Searcher::explain (Explanation value == the score search collects for
-    * a hit; matched=false and 0 for a non-hit). Runs as a one-task Spark
-    * job on the executor side, where the segment files live; only the
-    * explanation tree comes back. */
-  def explain(q0: Query, docId: Long, sim: Similarity): Explanation = {
-    val q = Query.rewrite(expandQueries(Seq("q" -> q0)).head._2)
-    val dfMap = globalDf(Query.allTerms(q))
-    val segMeta = meta.segments.find(m =>
-      docId >= m.docBase && docId < m.docBase + m.docCount)
-      .getOrElse(return Explanation(0.0, s"doc $docId not in index", matched = false))
-    val segDir = cacheKey(new File(indexDir,
-      graft.index.SegmentFormat.segDirName(segMeta.segId)).getPath)
-    val st = stats
-    val sc = spark.sparkContext
-    val bcQ = sc.broadcast(q)
-    val bcDf = sc.broadcast(dfMap)
-    val out = sc.parallelize(Seq(segDir), 1).map { dir =>
-      val reader = ReaderCache.get(dir)
-      val local = (docId - reader.meta.docBase).toInt
-      val df = (t: String) => bcDf.value.getOrElse(t, 0L)
-      val view = Explain.docView(reader, local, Explain.viewTerms(bcQ.value))
-      val qn = sim.queryNorm(SegmentSearch.sumOfSquaredWeights(bcQ.value, sim, st, df))
-      Explain.explainDoc(bcQ.value, view, sim, st, bcDf.value, qn)
-    }.collect().head
-    bcQ.destroy()
-    bcDf.destroy()
-    out
-  }
+    * a hit; matched=false and 0 for a non-hit): [[explainMany]] of one doc. */
+  def explain(q0: Query, docId: Long, sim: Similarity): Explanation =
+    explainMany(q0, Seq(docId), sim).head
 
-  /** Batched [[explain]]: every (query, doc) explanation in ONE Spark job
-    * (tasks over the touched segments, one shared df job and broadcast pair)
-    * instead of a df job + a one-task job per doc. Same per-doc tree as
-    * [[explain]] — identical Explanation values; order follows `docIds`. */
+  /** Every (query, doc) explanation in ONE Spark job (tasks over the
+    * touched segments, one shared df job and broadcast pair) instead of a
+    * df job + a one-task job per doc. The trees are built on the executors,
+    * where the segment files live; order follows `docIds`. */
   def explainMany(q0: Query, docIds: Seq[Long], sim: Similarity): Seq[Explanation] = {
     val q = Query.rewrite(expandQueries(Seq("q" -> q0)).head._2)
     val dfMap = globalDf(Query.allTerms(q))
@@ -390,9 +363,9 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     // bitsets will be committed under: files are written as
     // del_<targetGen>.bin and stay invisible to every reader until the
     // commit recording delgen=targetGen lands (crash ⇒ ignored orphans)
-    val (commitMeta, commitExtra) = IndexMetaIO.readLatestWithExtra(indexDir).get
-    val committedGen = commitExtra.get("delgen").map(_.toInt).getOrElse(0)
-    val targetGen = committedGen + 1
+    val latest = IndexMetaIO.readLatestSnapshot(indexDir).get
+    val committedGen = latest.delGen
+    val targetGen = latest.nextDelGen
     // Purge orphan generations (> committedGen) left by a batch that
     // crashed pre-commit, across the CURRENT commit's segments — a
     // superset of anywhere orphans can live, and deliberately not just
@@ -402,7 +375,7 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     // write: its deletes would apply without its adds.
     locally {
       val idxDir = indexDir
-      val allSegs = commitMeta.segments
+      val allSegs = latest.meta.segments
         .map(m => new File(idxDir, SegmentFormat.segDirName(m.segId)).getPath)
       segmentTasks(allSegs)
         .foreach(p => SegmentFormat.purgeOrphanDeletes(new File(p), committedGen))
@@ -434,8 +407,7 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     if (newly > 0 && commit) {
       // publish: a fresh snapshot (meta unchanged) whose delgen references
       // the just-written generation — readers flip atomically to it
-      IndexMetaIO.writeCommit(indexDir, commitMeta,
-        commitExtra + ("delgen" -> targetGen.toString))
+      IndexMetaIO.commit(indexDir, latest.meta, delGen = Some(targetGen))
     }
     newly
   }

@@ -16,63 +16,49 @@ import graft.index._
   * segments. Exactly-once: the snapshot records the last applied batch id —
   * a replayed batch (after a crash between segment publish and snapshot) is
   * re-applied idempotently over the same segment ids/docBase, and queries
-  * only ever see snapshotted segments. */
+  * only ever see snapshotted segments. The watermark lives in the commit
+  * snapshot, which every writer carries forward ([[IndexMetaIO.commit]]),
+  * so it survives compaction, `updateDocuments` and appends without a
+  * batch id. */
 object StreamingIndexer {
 
-  private val BatchKey = "lastStreamBatch"
-
   /** Append one (non-streaming) batch DataFrame; used by foreachBatch and
-    * directly testable. Returns the new snapshot. */
+    * directly testable. Returns the new snapshot. `analyzer` and
+    * `storePositions` must match the index's (checked before any work). */
   def appendBatch(spark: SparkSession, batch: DataFrame, indexDir: String,
-      analyzer: String = "standard", docsPerSegment: Int = 1 << 20,
+      analyzer: String = "standard",
+      docsPerSegment: Int = IndexConfig.DefaultDocsPerSegment,
       storePositions: Boolean = true, batchId: Long = -1L,
       delGenOverride: Option[Int] = None): IndexMeta = {
     import spark.implicits._
     new java.io.File(indexDir).mkdirs()
 
-    val prior = IndexMetaIO.readLatestWithExtra(indexDir)
-    val priorMeta = prior.map(_._1)
-    if (batchId >= 0 && prior.exists(_._2.get(BatchKey).exists(_.toLong >= batchId)))
-      return priorMeta.get // replayed batch already applied
-
-    val docIdOffset = priorMeta.map(m =>
-      m.segments.map(s => s.docBase + s.docCount).foldLeft(0L)(math.max)).getOrElse(0L)
-    val segIdOffset = priorMeta.map(m =>
-      m.segments.map(_.segId + 1).foldLeft(0)(math.max)).getOrElse(0)
+    val prior = IndexMetaIO.readLatestSnapshot(indexDir)
+    if (batchId >= 0 && prior.exists(_.streamBatch.exists(_ >= batchId)))
+      return prior.get.meta // replayed batch already applied
+    val base = IndexMeta(analyzer, storePositions,
+      prior.fold(Seq.empty[SegmentMeta])(_.meta.segments)).requireUniform()
 
     val sortedBase = batch.select($"url", $"text").as[(String, String)]
       .orderBy($"url").rdd
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     try {
       val newDocs = sortedBase.count()
-      if (newDocs == 0) return priorMeta.getOrElse(
-        IndexMeta(analyzer, 0, 0, storePositions, Nil))
-      val numSegments = math.max(1, ((newDocs + docsPerSegment - 1) / docsPerSegment).toInt)
-      val dps = docsPerSegment
-      val segOff = segIdOffset
-      val docOff = docIdOffset
+      // an empty batch commits only the deletes of an update
+      if (newDocs == 0 && delGenOverride.isEmpty) return base
+      val numSegments = ((newDocs + docsPerSegment - 1) / docsPerSegment).toInt
+      val segOff = base.nextSegId
+      val docOff = base.nextDocId
       val keyed = sortedBase.zipWithIndex()
         .map { case ((_, text), rank) =>
-          ((segOff + (rank / dps).toInt, docOff + rank), text)
+          ((segOff + (rank / docsPerSegment).toInt, docOff + rank), text)
         }
-      val metas = IndexBuilder.writeSegments(keyed, numSegments, newDocs,
-        IndexConfig(indexDir, analyzer, docsPerSegment, storePositions), segOff, docOff)
-
-      val allSegs = (priorMeta.map(_.segments).getOrElse(Nil) ++ metas).sortBy(_.segId)
-      val meta = IndexMeta(analyzer,
-        allSegs.map(_.docCount.toLong).sum,
-        allSegs.map(_.sumDocLength).sum,
-        storePositions, allSegs)
-      // carry the deletion generation forward: searchers key reader caches
-      // by delgen, and a snapshot that dropped it would resurrect stale
-      // pre-delete cached readers (same rule as Maintenance.compact)
-      val delGen = delGenOverride.map(g => Map("delgen" -> g.toString))
-        .orElse(prior.flatMap(_._2.get("delgen")).map(g => Map("delgen" -> g)))
-        .getOrElse(Map.empty[String, String])
-      val extra = (if (batchId >= 0) Map(BatchKey -> batchId.toString)
-        else Map.empty[String, String]) ++ delGen
-      IndexMetaIO.writeCommit(indexDir, meta, extra)
-      meta
+      val metas =
+        if (newDocs == 0) Nil
+        else IndexBuilder.writeSegments(keyed, numSegments, newDocs,
+          IndexConfig(indexDir, analyzer, docsPerSegment, storePositions), segOff, docOff)
+      IndexMetaIO.commit(indexDir, base.copy(segments = (base.segments ++ metas).sortBy(_.segId)),
+        delGen = delGenOverride, streamBatch = Some(batchId).filter(_ >= 0)).meta
     } finally sortedBase.unpersist()
   }
 
@@ -91,34 +77,23 @@ object StreamingIndexer {
     * replaces. */
   def updateDocuments(spark: SparkSession, indexDir: String,
       deleteQ: graft.search.Query, newDocs: DataFrame,
-      analyzer: String = "standard", docsPerSegment: Int = 1 << 20,
+      analyzer: String = "standard",
+      docsPerSegment: Int = IndexConfig.DefaultDocsPerSegment,
       storePositions: Boolean = true): IndexMeta = {
-    IndexMetaIO.readLatestWithExtra(indexDir) match {
-      case None =>
-        appendBatch(spark, newDocs, indexDir, analyzer, docsPerSegment,
-          storePositions)
-      case Some((priorMeta, priorExtra)) =>
-        val searcher = new graft.search.IndexSearcher(spark, indexDir)
-        val removed = searcher.deleteDocs(deleteQ, commit = false)
-        val gen =
-          if (removed > 0)
-            Some(priorExtra.get("delgen").map(_.toInt).getOrElse(0) + 1)
-          else None
-        val meta = appendBatch(spark, newDocs, indexDir, analyzer,
-          docsPerSegment, storePositions, batchId = -1L, delGenOverride = gen)
-        // an empty add with live deletes still needs its delgen snapshot
-        if ((meta eq priorMeta) || meta == priorMeta) gen.foreach { g =>
-          IndexMetaIO.writeCommit(indexDir, priorMeta,
-            priorExtra + ("delgen" -> g.toString))
-        }
-        meta
+    val gen = IndexMetaIO.readLatestSnapshot(indexDir).flatMap { prior =>
+      val removed = new graft.search.IndexSearcher(spark, indexDir)
+        .deleteDocs(deleteQ, commit = false)
+      if (removed > 0) Some(prior.nextDelGen) else None
     }
+    appendBatch(spark, newDocs, indexDir, analyzer, docsPerSegment, storePositions,
+      delGenOverride = gen)
   }
 
   /** Start the streaming ingestion: `pages` must be a streaming DataFrame
     * with `url` and `text` columns. */
   def start(spark: SparkSession, pages: DataFrame, indexDir: String,
-      analyzer: String = "standard", docsPerSegment: Int = 1 << 20,
+      analyzer: String = "standard",
+      docsPerSegment: Int = IndexConfig.DefaultDocsPerSegment,
       storePositions: Boolean = true): StreamingQuery = {
     pages.writeStream
       .outputMode("append")

@@ -88,6 +88,30 @@ class DeleteSpec extends AnyFunSuite {
     assert(checks.forall(_.ok), checks.filterNot(_.ok).toString)
   }
 
+  test("re-running a complete build keeps the committed deletes") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-del-rebuild").toString
+    val df = (0 until 12).map { i =>
+      (f"u$i%05d", s"${if (i % 3 == 0) "redink" else "keepme"} common w$i")
+    }.toDF("url", "text")
+    val cfg = IndexConfig(dir, analyzer = "whitespace", docsPerSegment = 4, writeDocMap = false)
+    IndexBuilder.build(spark, df, cfg)
+    ReaderCache.clear()
+    assert(new IndexSearcher(spark, dir).deleteDocs(TermQ("redink")) == 4)
+    val live = new IndexSearcher(spark, dir).liveDocCount()
+    assert(live == 8)
+
+    // the second build resumes every segment and builds none; its commit
+    // must still carry the deletion generation
+    val again = IndexBuilder.build(spark, df, cfg)
+    assert(again.resumedSegments == 3 && again.builtSegments == 0)
+    ReaderCache.clear()
+    val s = new IndexSearcher(spark, dir)
+    assert(s.search(TermQ("redink"), 20, BM25()).isEmpty)
+    assert(s.matchingDocs(TermQ("redink")).count() == 0)
+    assert(s.liveDocCount() == live)
+  }
+
   test("two delete batches through the SAME searcher instance accumulate (no lost update)") {
     // the r3 bug: the searcher's reader-cache key is pinned to its
     // open-time delGen, so batch 2 seeded its OR from the cached
@@ -232,7 +256,7 @@ class DeleteSpec extends AnyFunSuite {
     assert(new IndexSearcher(spark, dir).deleteDocs(TermQ("alpha")) == 2)
     val df = Seq(("u9999", "alpha reborn")).toDF("url", "text")
     graft.streaming.StreamingIndexer.appendBatch(spark, df, dir,
-      docsPerSegment = 4, batchId = 99)
+      analyzer = "whitespace", docsPerSegment = 4, batchId = 99)
     ReaderCache.clear()
 
     // latest view: originals tombstoned, only the appended doc matches

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analysis.Analyzer
@@ -85,5 +86,36 @@ class ExplainSpec extends AnyFunSuite {
     val pfx = LocalIndex.explain(dir, PrefixQ("a"), 0L, sim)
     assert(pfx.matched && pfx.value == LocalIndex.search(dir, PrefixQ("a"), 3, sim)
       .find(_.docId == 0L).get.score)
+  }
+
+  test("IndexSearcher.explainMany == LocalIndex.explain: hits, a non-hit, a doc outside") {
+    val spark = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    val rnd = new scala.util.Random(777)
+    val texts = (0 until 60).map { _ =>
+      (0 until (3 + rnd.nextInt(8)))
+        .map(_ => QueryGen.vocab(rnd.nextInt(QueryGen.vocab.size))).mkString(" ")
+    }
+    val dir = Files.createTempDirectory("graft-explain-dist").toString
+    LocalIndex.build(dir, texts.zipWithIndex.map { case (t, i) => (i.toLong, t) },
+      "whitespace", docsPerSegment = 13)
+    val searcher = new IndexSearcher(spark, dir)
+    val sims = Seq[Similarity](BM25(), ClassicTFIDF, BM25Exact())
+    var compared = 0
+    for (run <- 0 until 24) {
+      val q = if (run == 0) PrefixQ("fz") else QueryGen.randQuery(rnd, 0)
+      val sim = sims(run % sims.size)
+      val hits = LocalIndex.search(dir, q, 5, sim).map(_.docId)
+      val all = LocalIndex.search(dir, q, texts.size, sim).map(_.docId).toSet
+      val miss = (0L until texts.size.toLong).find(d => !all.contains(d))
+      val ids = (hits ++ miss).toSeq :+ (texts.size + 7L)
+      val local = ids.map(LocalIndex.explain(dir, q, _, sim))
+      assert(searcher.explainMany(q, ids, sim) == local, s"run=$run q=$q")
+      assert(searcher.explain(q, ids.head, sim) == local.head, s"run=$run q=$q")
+      compared += ids.size
+    }
+    assert(compared > 60, s"only $compared explanations compared")
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.index.{IndexBuilder, IndexConfig, IndexMetaIO, Maintenance}
 import graft.score.BM25
 import graft.search.{IndexSearcher, TermQ}
 import graft.streaming.StreamingIndexer
@@ -38,6 +39,53 @@ class StreamingSpec extends AnyFunSuite {
     val hits = new IndexSearcher(spark, dir).search(TermQ("spark"), 10, BM25())
     assert(hits.length == 3)
     assert(hits.map(_.docId).toSet == Set(0L, 2L, 3L))
+  }
+
+  test("the exactly-once watermark survives compaction, updates and unnumbered appends") {
+    val dir = Files.createTempDirectory("graft-stream-wm").toString
+    def batch(b: Int) =
+      (0 until 5).map(i => (f"b$b-u$i%02d", s"page batch$b item$i")).toDF("url", "text")
+    (0 to 2).foreach(b => StreamingIndexer.appendBatch(spark, batch(b), dir, batchId = b))
+    assert(IndexMetaIO.readLatest(dir).get.numDocs == 15)
+
+    def replayIsNoOp(after: String): Unit = {
+      val before = IndexMetaIO.readLatest(dir).get.numDocs
+      val m = StreamingIndexer.appendBatch(spark, batch(2), dir, batchId = 2)
+      assert(m.numDocs == before, s"replay after $after returned ${m.numDocs} docs")
+      assert(IndexMetaIO.readLatest(dir).get.numDocs == before,
+        s"replay after $after appended batch 2 again")
+    }
+    assert(Maintenance.compact(spark, dir, minDocs = 100).segments.size == 1)
+    replayIsNoOp("compact")
+    StreamingIndexer.updateDocuments(spark, dir, TermQ("batch0"),
+      Seq(("c-u00", "page replaced")).toDF("url", "text"))
+    replayIsNoOp("updateDocuments")
+    StreamingIndexer.appendBatch(spark, Seq(("d-u00", "page unnumbered")).toDF("url", "text"), dir)
+    replayIsNoOp("appendBatch without a batchId")
+    val s = new IndexSearcher(spark, dir)
+    assert(s.meta.numDocs == 17)
+    assert(s.liveDocCount() == 12)
+  }
+
+  test("appendBatch refuses an analyzer or positions setting the index does not have") {
+    val dir = Files.createTempDirectory("graft-stream-mixed").toString
+    IndexBuilder.build(spark, Seq(("u1", "Alpha beta"), ("u2", "gamma")).toDF("url", "text"),
+      IndexConfig(dir, analyzer = "whitespace", writeDocMap = false))
+    val gen = IndexMetaIO.latestGen(dir)
+    val more = Seq(("u3", "Alpha delta")).toDF("url", "text")
+    intercept[IllegalArgumentException](
+      StreamingIndexer.appendBatch(spark, more, dir, analyzer = "standard"))
+    intercept[IllegalArgumentException](
+      StreamingIndexer.appendBatch(spark, more, dir, analyzer = "whitespace",
+        storePositions = false))
+    // refused before any segment is written, and nothing is committed
+    assert(IndexMetaIO.latestGen(dir) == gen)
+    assert(IndexMetaIO.committedSegments(dir).size == 1)
+
+    StreamingIndexer.appendBatch(spark, more, dir, analyzer = "whitespace")
+    val s = new IndexSearcher(spark, dir)
+    assert(s.meta.numDocs == 3)
+    assert(s.search(TermQ("Alpha"), 10, BM25()).map(_.docId).toSet == Set(0L, 2L))
   }
 
   test("foreachBatch streaming ingestion end-to-end") {
