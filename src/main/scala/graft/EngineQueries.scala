@@ -175,7 +175,7 @@ object EngineQueries {
     }.toDF("doc_id", "score")
   }
 
-  private def copyDir(src: java.io.File, dst: java.io.File): Unit = {
+  private[graft] def copyDir(src: java.io.File, dst: java.io.File): Unit = {
     dst.mkdirs()
     val files = src.listFiles()
     if (files != null) files.foreach { f =>
@@ -184,6 +184,16 @@ object EngineQueries {
       else java.nio.file.Files.copy(f.toPath, t.toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
+  }
+
+  /** A fresh copy of the cached index for `sfDir` in a scratch dir named
+    * by `tag`, re-made per call so the mutating entries stay idempotent. */
+  private def scratchCopy(spark: SparkSession, sfDir: String, tag: String): java.io.File = {
+    val scratch = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft-index-$tag-" + sfDir.replaceAll("[^a-zA-Z0-9.]", "_"))
+    rm(scratch)
+    copyDir(new java.io.File(searcher(spark, sfDir).indexDir), scratch)
+    scratch
   }
 
   /** Delete-then-requery — the reference's core delete behavior
@@ -196,11 +206,7 @@ object EngineQueries {
     * the entry stays idempotent (deletes are destructive). */
   def deleteRequery(spark: SparkSession, sfDir: String,
       del: Query, keep: Query): DataFrame = {
-    val base = searcher(spark, sfDir)
-    val scratch = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-index-del-" + sfDir.replaceAll("[^a-zA-Z0-9.]", "_"))
-    rm(scratch)
-    copyDir(new java.io.File(base.indexDir), scratch)
+    val scratch = scratchCopy(spark, sfDir, "del")
     new IndexSearcher(spark, scratch.getPath).deleteDocs(del)
     new IndexSearcher(spark, scratch.getPath).matchingDocs(keep)
   }
@@ -251,13 +257,9 @@ object EngineQueries {
     * stays idempotent. */
   def updateRequery(spark: SparkSession, sfDir: String, delTerm: String,
       replacement: String, keep: Query): DataFrame = {
-    val base = searcher(spark, sfDir)
-    val scratch = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-index-upd-" + sfDir.replaceAll("[^a-zA-Z0-9.]", "_"))
-    rm(scratch)
-    copyDir(new java.io.File(base.indexDir), scratch)
+    val scratch = scratchCopy(spark, sfDir, "upd")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val n = base.meta.numDocs
+    val n = searcher(spark, sfDir).meta.numDocs
     val toks = filter(split(col("text"), " "), t => t =!= "")
     val replaced = docs.filter(array_contains(toks, delTerm))
       .select(format_string("%012d", col("doc_id") + n).as("url"),
@@ -282,11 +284,7 @@ object EngineQueries {
     * wrongly observed the deletes would lose those rows. */
   def pitRequery(spark: SparkSession, sfDir: String,
       del: Query, keep: Query): DataFrame = {
-    val base = searcher(spark, sfDir)
-    val scratch = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-index-pit-" + sfDir.replaceAll("[^a-zA-Z0-9.]", "_"))
-    rm(scratch)
-    copyDir(new java.io.File(base.indexDir), scratch)
+    val scratch = scratchCopy(spark, sfDir, "pit")
     val gen0 = IndexMetaIO.commitGens(scratch.getPath).max
     new IndexSearcher(spark, scratch.getPath).deleteDocs(del)
     val pit = new IndexSearcher(spark, scratch.getPath, Some(gen0))
@@ -308,11 +306,7 @@ object EngineQueries {
     * pre-compaction survivor set — DuckDB recomputes it directly. */
   def compactRequery(spark: SparkSession, sfDir: String,
       del: Query, keep: Query): DataFrame = {
-    val base = searcher(spark, sfDir)
-    val scratch = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-index-cpt-" + sfDir.replaceAll("[^a-zA-Z0-9.]", "_"))
-    rm(scratch)
-    copyDir(new java.io.File(base.indexDir), scratch)
+    val scratch = scratchCopy(spark, sfDir, "cpt")
     new IndexSearcher(spark, scratch.getPath).deleteDocs(del)
     graft.index.Maintenance.compact(spark, scratch.getPath,
       minDocs = Int.MaxValue, maxGroupSegments = 8)

@@ -2,7 +2,7 @@ package graft.index
 
 import graft.analysis.Analyzer
 import graft.score.Similarity
-import graft.search.{Query, ScoredDoc, SegmentSearch}
+import graft.search.{PreparedQuery, Query, ScoredDoc, SegmentSearch}
 
 /** Single-process build/search over the same segment format — used by unit
   * tests (fast, no SparkSession) and as the 1-partition baseline that the
@@ -112,8 +112,8 @@ object LocalIndex {
     * the distributed IndexSearcher). */
   def search(indexDir: String, q0: Query, k: Int, sim: Similarity,
       useWand: Boolean = true): Array[ScoredDoc] = {
-    val Prepared(readers, q, dfm, stats) = prepare(indexDir, q0)
-    readers.flatMap(r => SegmentSearch.topK(r, q, k, sim, stats, t => dfm.getOrElse(t, 0L), useWand))
+    val (readers, p) = prepare(indexDir, q0)
+    readers.flatMap(r => SegmentSearch.topK(r, p.q, k, sim, p.stats, p.df, useWand))
       .sortBy(h => (-h.score, h.docId))
       .take(k)
       .toArray
@@ -124,25 +124,18 @@ object LocalIndex {
     * with matched=false for a non-hit. */
   def explain(indexDir: String, q0: Query, docId: Long,
       sim: Similarity): graft.search.Explanation = {
-    val Prepared(readers, q, dfm, stats) = prepare(indexDir, q0)
+    val (readers, p) = prepare(indexDir, q0)
     val reader = readers.find(r =>
       docId >= r.meta.docBase && docId < r.meta.docBase + r.meta.docCount)
       .getOrElse(return graft.search.Explanation(0.0, s"doc $docId not in index",
         matched = false))
-    val local = (docId - reader.meta.docBase).toInt
-    val view = graft.search.Explain.docView(reader, local, graft.search.Explain.viewTerms(q))
-    val qn = sim.queryNorm(SegmentSearch.sumOfSquaredWeights(
-      Query.rewrite(q), sim, stats, t => dfm.getOrElse(t, 0L)))
-    graft.search.Explain.explainDoc(q, view, sim, stats, dfm, qn)
+    p.explain(reader, (docId - reader.meta.docBase).toInt, sim)
   }
 
-  /** A query made ready to run on the latest commit: the segment readers,
-    * `q0` with multi-term nodes expanded over the merged dictionary, and
-    * its global df per term and corpus stats. */
-  private final case class Prepared(readers: Seq[SegmentReader], q: Query,
-      dfm: Map[String, Long], stats: graft.score.CorpusStats)
-
-  private def prepare(indexDir: String, q0: Query): Prepared = {
+  /** The latest commit's segment readers, and `q0` made ready to run on
+    * them: multi-term nodes expanded over the merged dictionary, rewritten,
+    * with its global df per term and corpus stats. */
+  private def prepare(indexDir: String, q0: Query): (Seq[SegmentReader], PreparedQuery) = {
     val meta = IndexMetaIO.readLatest(indexDir).get
     val readers = meta.segments.map(m =>
       new SegmentReader(new java.io.File(indexDir, SegmentFormat.segDirName(m.segId))))
@@ -159,6 +152,7 @@ object LocalIndex {
       }
     val dfm = Query.allTerms(q).map(t =>
       t -> readers.flatMap(_.termInfo(t)).map(_.df.toLong).sum).toMap
-    Prepared(readers, q, dfm, graft.score.CorpusStats(meta.numDocs, meta.avgDocLength))
+    (readers, PreparedQuery(Query.rewrite(q), dfm,
+      graft.score.CorpusStats(meta.numDocs, meta.avgDocLength)))
   }
 }

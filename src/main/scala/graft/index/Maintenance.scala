@@ -181,12 +181,6 @@ object Maintenance {
     meta
   }
 
-  /** Compact all segments smaller than `minDocs` into their neighbors
-    * (greedy adjacent grouping — the LogMergePolicy level idea simplified),
-    * then write a new snapshot without the retired inputs. */
-  def compact(spark: SparkSession, indexDir: String, minDocs: Int): IndexMeta =
-    compact(spark, indexDir, minDocs, maxGroupSegments = 32)
-
   /** Tiered compaction: adjacent runs of sub-`minDocs` segments merge;
     * segments at or above the threshold are left alone (the reference's
     * LogMergePolicy size tiers, `src/core/index/LogMergePolicy.cpp` —
@@ -198,7 +192,7 @@ object Maintenance {
     * streaming ingest left thousands of mini-segments compacts at cluster
     * width, with the driver only committing the new snapshot. */
   def compact(spark: SparkSession, indexDir: String, minDocs: Int,
-      maxGroupSegments: Int): IndexMeta = {
+      maxGroupSegments: Int = 32): IndexMeta = {
     require(maxGroupSegments >= 2, s"maxGroupSegments must be >= 2: $maxGroupSegments")
     val meta = IndexMetaIO.readLatest(indexDir)
       .getOrElse(throw new IllegalStateException(s"no committed index at $indexDir"))
@@ -241,19 +235,14 @@ object Maintenance {
     if (groups.isEmpty) return meta
     val groupsWithIds: Seq[(Seq[Int], Int)] =
       groups.zipWithIndex.map { case (g, k) => (g.map(_.segId), nextId + k) }.toSeq
-    val merged =
-      if (groupsWithIds.size == 1)
-        groupsWithIds.map { case (ids, nid) => mergeSegments(indexDir, ids, nid) }
-      else {
-        // distribute: one merge group per task (mergeSegments streams its
-        // k-way merge, so per-task memory is bounded by block buffers ×
-        // maxGroupSegments, independent of segment or index size)
-        val idx = indexDir
-        spark.sparkContext
-          .parallelize(groupsWithIds, groupsWithIds.size)
-          .map { case (ids, nid) => Maintenance.mergeSegments(idx, ids, nid) }
-          .collect().toSeq
-      }
+    // one merge group per task (mergeSegments streams its k-way merge, so
+    // per-task memory is bounded by block buffers × maxGroupSegments,
+    // independent of segment or index size)
+    val idx = indexDir
+    val merged = spark.sparkContext
+      .parallelize(groupsWithIds, groupsWithIds.size)
+      .map { case (ids, nid) => Maintenance.mergeSegments(idx, ids, nid) }
+      .collect().toSeq
     val retired = groups.flatten.map(_.segId).toSet
     val newSegs = (segs.filterNot(s => retired.contains(s.segId)) ++ merged).sortBy(_.docBase)
     // the commit carries the deletion generation (segments NOT merged may

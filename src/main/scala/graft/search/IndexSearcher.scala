@@ -7,7 +7,7 @@ import scala.reflect.ClassTag
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
-import graft.index.{IndexMeta, IndexMetaIO, SegmentFormat, SegmentReader}
+import graft.index.{IndexMeta, IndexMetaIO, SegmentFormat, SegmentReader, TermOrder}
 import graft.score.{CorpusStats, Similarity}
 
 /** Per-executor segment reader cache — segments are immutable, so a
@@ -94,10 +94,12 @@ object FilterCache {
   * global weights (df, N, avgdl) are computed once driver-side and
   * broadcast, and the final merge is a driver heap over ≤ k hits per task.
   *
-  * Queries are executed in BATCHES: one single-stage Spark job computes
-  * global df for all query terms (each task returns one dense count array
-  * aligned to the broadcast term array; the driver sums them, no shuffle),
-  * one job scores all queries against all segments. Within a task each
+  * Queries are executed in BATCHES. One prepare step (the reference's
+  * createWeight) expands multi-term nodes, rewrites, and computes global df
+  * for all query terms in one single-stage Spark job (each task returns one
+  * dense count array aligned to the broadcast term array; the driver sums
+  * them, no shuffle); the prepared batch is broadcast once, and one job
+  * scores all queries against all segments. Within a task each
   * query runs through ONE top-k collector across the task's segments, so
   * the k-th score found so far is the starting WAND threshold for the next
   * segment. Per-query driver work is O(tasks · k).
@@ -180,63 +182,29 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     termArr.iterator.zip(dfs.iterator).filter(_._2 > 0).toMap
   }
 
-  def search(q: Query, k: Int, sim: Similarity, useWand: Boolean = true): Array[ScoredDoc] =
-    searchBatch(Seq("q" -> q), k, sim, useWand)("q")
+  /** The one prepare step (the reference's Searcher::createWeight): expand
+    * every multi-term node against this index's dictionary, rewrite, and
+    * compute the global df of the batch's terms. Every entry point scores
+    * through the result. */
+  private def prepare(queries: Seq[(String, Query)]): Seq[(String, PreparedQuery)] =
+    IndexSearcher.prepare(queries, multiTermMatches(queries.map(_._2)), globalDf, stats)
 
-  /** Time-budgeted search: each task gets the whole `timeoutMs` budget for
-    * its run of segments, on its own clock; past the deadline it stops
-    * collecting, skips the rest of its run, and returns what it gathered —
-    * partial top-k plus a timed-out flag (the reference's
-    * TimeLimitingCollector semantics, applied per task). */
-  def searchWithTimeout(q0: Query, k: Int, sim: Similarity,
-      timeoutMs: Long): (Array[ScoredDoc], Boolean) = {
-    val q = Query.rewrite(expandQueries(Seq("q" -> q0)).head._2)
-    val dfMap = globalDf(Query.allTerms(q))
-    val sc = spark.sparkContext
-    val bcDf = sc.broadcast(dfMap)
-    val bcQ = sc.broadcast(q)
-    val st = stats
-    val budgetNanos = timeoutMs * 1000000L
-    val perTask = segmentTasks(segDirs)
-      .mapPartitions { dirs =>
-        val deadline = System.nanoTime() + budgetNanos
-        val readers = dirs.map(ReaderCache.get).toVector
-        val df = (t: String) => bcDf.value.getOrElse(t, 0L)
-        Iterator.single(SegmentSearch.topKTimed(readers, bcQ.value, k, sim, st, df,
-          useWand = false, deadline))
-      }
-      .collect()
-    bcQ.destroy()
-    bcDf.destroy()
-    val hits = perTask.iterator.flatMap(_._1).toArray
-      .sortBy(h => (-h.score, h.docId)).take(k)
-    (hits, perTask.exists(_._2))
-  }
+  private def prepare(q: Query): PreparedQuery = prepare(Seq("q" -> q)).head._2
 
-  /** Expand multi-term nodes against the distributed term dictionary: one
-    * job collects each node's matching terms per segment (seek + bounded
-    * scan), the driver unions them and rewrites the plan. Per-node match
-    * is a pure function of term text, so the union is exactly the global
-    * dictionary expansion (MultiTerm scaladoc). */
-  private def expandQueries(queries: Seq[(String, Query)]): Seq[(String, Query)] = {
-    if (!queries.exists { case (_, q) => Query.hasMultiTerm(q) }) return queries
-    val nodes: Seq[MultiTermQ] =
-      queries.flatMap { case (_, q) => IndexSearcher.collectMultiTermNodes(q) }.distinct
-    if (nodes.isEmpty) return queries
-    IndexSearcher.rewriteWithTermSets(queries, multiTermMatches(nodes))
-  }
-
-  /** Matched dictionary terms per multi-term node, collected across this
-    * index's segments (the distributed half of expansion — exposed so a
-    * cross-index MultiSearcher can union the sets before rewriting once,
-    * like the reference's rewrite against the combined reader). One stage:
-    * each task dedupes over its run of segments, the driver across tasks. */
-  private[search] def multiTermMatches(
-      nodes: Seq[MultiTermQ]): Map[MultiTermQ, Seq[String]] = {
+  /** The dictionary terms that any multi-term node of `queries` matches in
+    * this index: one single-stage job (each task dedupes over its run of
+    * segments, the driver across tasks), none when no query has such a
+    * node. A node's match is a pure function of the term text, so expanding
+    * against this set is exactly the dictionary expansion, and a
+    * cross-index searcher expands against the union of its sub-indexes'
+    * sets (the reference's rewrite against the combined reader). */
+  private[search] def multiTermMatches(queries: Seq[Query]): Set[String] = {
+    val nodes = queries.flatMap(IndexSearcher.collectMultiTermNodes).distinct
+    if (nodes.isEmpty) return Set.empty
     val bcNodes = spark.sparkContext.broadcast(nodes)
-    val matched: Map[MultiTermQ, Seq[String]] = segmentTasks(segDirs)
+    val matched = segmentTasks(segDirs)
       .mapPartitions { dirs =>
-        val out = scala.collection.mutable.LinkedHashSet.empty[(MultiTermQ, String)]
+        val out = scala.collection.mutable.HashSet.empty[String]
         dirs.foreach { dir =>
           val r = ReaderCache.get(dir)
           bcNodes.value.foreach { node =>
@@ -245,47 +213,99 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
             while (!done && it.hasNext) {
               val t = it.next().term
               if (MultiTerm.pastUpperBound(node, t)) done = true
-              else if (MultiTerm.matchBoost(node, t).isDefined) out += ((node, t))
+              else if (MultiTerm.matchBoost(node, t).isDefined) out += t
             }
           }
         }
         out.iterator
       }
-      .collect()
-      .distinct
-      .groupBy(_._1)
-      .map { case (n, ts) => n -> ts.map(_._2).toSeq.sorted }
+      .collect().toSet
     bcNodes.destroy()
     matched
+  }
+
+  def search(q: Query, k: Int, sim: Similarity, useWand: Boolean = true): Array[ScoredDoc] =
+    searchBatch(Seq("q" -> q), k, sim, useWand)("q")
+
+  def searchBatch(queries: Seq[(String, Query)], k: Int, sim: Similarity,
+      useWand: Boolean = true): Map[String, Array[ScoredDoc]] =
+    searchBatchWith(prepare(queries), k, sim, useWand, IndexSearcher.NoDeadline, 0L)
+      .map { case (id, (hits, _)) => id -> hits }
+
+  /** Time-budgeted search: the scoring job of [[searchBatch]] with a
+    * deadline `timeoutMs` after each task starts, on the task's own clock;
+    * past it the task stops collecting, skips the rest of its run and
+    * returns what it gathered — partial top-k plus a timed-out flag (the
+    * reference's TimeLimitingCollector semantics, applied per task). */
+  def searchWithTimeout(q: Query, k: Int, sim: Similarity,
+      timeoutMs: Long): (Array[ScoredDoc], Boolean) =
+    searchBatchWith(prepare(Seq("q" -> q)), k, sim, useWand = false,
+      timeoutMs * 1000000L, 0L)("q")
+
+  /** The one scoring job: every prepared query against every run of
+    * segments, with the batch broadcast once. Each task runs a query through
+    * one top-k collector across its run, so the k-th score found so far is
+    * the starting WAND threshold for the next segment, and stops at
+    * `budgetNanos` after it starts (never at `NoDeadline`). Per query it
+    * returns the merged top-k by (score desc, docId asc), docIds shifted by
+    * `docIdOffset`, and whether any task timed out. The caller-supplied
+    * prepared queries are the hook a cross-index MultiSearcher uses so every
+    * sub-index scores with the combined corpus's weights (reference
+    * MultiSearcher::createWeight + CachedDfSource,
+    * /root/reference/src/core/search/MultiSearcher.cpp). */
+  private[search] def searchBatchWith(prepared: Seq[(String, PreparedQuery)], k: Int,
+      sim: Similarity, useWand: Boolean, budgetNanos: Long,
+      docIdOffset: Long): Map[String, (Array[ScoredDoc], Boolean)] = {
+    val bc = spark.sparkContext.broadcast(prepared)
+    // ≤ k hits per query per task
+    val perTask = segmentTasks(segDirs)
+      .mapPartitions { dirs =>
+        val deadline =
+          if (budgetNanos == IndexSearcher.NoDeadline) budgetNanos
+          else System.nanoTime() + budgetNanos
+        val readers = dirs.map(ReaderCache.get).toVector
+        bc.value.iterator.map { case (id, p) =>
+          (id, p.topK(readers, k, sim, useWand, deadline))
+        }
+      }
+
+    val merge: ((Array[ScoredDoc], Boolean), (Array[ScoredDoc], Boolean)) =>
+        (Array[ScoredDoc], Boolean) =
+      (a, b) => (IndexSearcher.best(a._1 ++ b._1, k), a._2 || b._2)
+
+    // the driver receives tasks × queries × ≤ k hits, so above a TASK-count
+    // threshold the merge goes through reduceByKey instead: the shuffle
+    // folds hits per query first, and the driver receives O(queries · k)
+    val collected =
+      if (perTask.getNumPartitions <= 256) perTask.collect()
+      else perTask.reduceByKey(merge, math.max(1, prepared.size)).collect()
+    bc.destroy()
+
+    collected.groupBy(_._1).map { case (id, rs) =>
+      val merged = IndexSearcher.best(rs.flatMap(_._2._1), k)
+      id -> ((if (docIdOffset == 0L) merged
+              else merged.map(h => h.copy(docId = h.docId + docIdOffset)),
+        rs.exists(_._2._2)))
+    }
   }
 
   /** ALL matching docIds as a DataFrame — the match-set path. Matches are
     * enumerated inside tasks (one per run of segments) and returned as a
     * distributed result; nothing is materialized on the driver, so a
-    * stop-word phrase over 10^12 docs streams straight to the sink. Scoring is skipped:
+    * stop-word phrase over 10^12 docs streams straight to the sink (each
+    * task holds one segment's match bitset at a time). Scoring is skipped:
     * only the scorer tree's matching behavior runs. */
-  def matchingDocs(q0: Query): org.apache.spark.sql.DataFrame = {
-    val q = Query.rewrite(expandQueries(Seq("q" -> q0)).head._2)
-    val dfMap = globalDf(Query.allTerms(q))
-    val sc = spark.sparkContext
-    val bcDf = sc.broadcast(dfMap)
-    val bcQ = sc.broadcast(q)
-    val st = stats
-    val sim: Similarity = graft.score.BM25()
+  def matchingDocs(q: Query): org.apache.spark.sql.DataFrame = {
+    val bc = spark.sparkContext.broadcast(prepare(q))
     val rdd = segmentTasks(segDirs)
       .flatMap { dir =>
         val reader = ReaderCache.get(dir)
-        val df = (t: String) => bcDf.value.getOrElse(t, 0L)
+        val bits = bc.value.matchBits(reader)
         val docBase = reader.meta.docBase
-        val qn = sim.queryNorm(SegmentSearch.sumOfSquaredWeights(bcQ.value, sim, st, df))
-        SegmentSearch.scorer(bcQ.value, reader, sim, st, df, qn) match {
-          case None => Iterator.empty
-          case Some(s) =>
-            Iterator.continually(s.nextDoc())
-              .takeWhile(_ != Scorer.NoMoreDocs)
-              .filter(d => !reader.deleted(d))
-              .map(d => docBase + d)
-        }
+        Iterator.iterate(bits.nextSetBit(0))(d => bits.nextSetBit(d + 1))
+          .takeWhile(_ >= 0)
+          .filter(d => !reader.deleted(d))
+          .map(d => docBase + d)
       }
     val sp = spark
     import sp.implicits._
@@ -299,36 +319,25 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     explainMany(q0, Seq(docId), sim).head
 
   /** Every (query, doc) explanation in ONE Spark job (tasks over the
-    * touched segments, one shared df job and broadcast pair) instead of a
-    * df job + a one-task job per doc. The trees are built on the executors,
-    * where the segment files live; order follows `docIds`. */
+    * touched segments, one shared prepare) instead of a df job + a one-task
+    * job per doc. The trees are built on the executors, where the segment
+    * files live; order follows `docIds`. */
   def explainMany(q0: Query, docIds: Seq[Long], sim: Similarity): Seq[Explanation] = {
-    val q = Query.rewrite(expandQueries(Seq("q" -> q0)).head._2)
-    val dfMap = globalDf(Query.allTerms(q))
-    val st = stats
-    val sc = spark.sparkContext
     val bySeg = docIds.distinct.flatMap { docId =>
-      meta.segments.find(m => docId >= m.docBase && docId < m.docBase + m.docCount)
-        .map(m => cacheKey(new File(indexDir,
-          graft.index.SegmentFormat.segDirName(m.segId)).getPath) -> docId)
+      meta.segments.zip(segDirs).collectFirst {
+        case (m, dir) if docId >= m.docBase && docId < m.docBase + m.docCount => dir -> docId
+      }
     }.groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
     val results: Map[Long, Explanation] =
       if (bySeg.isEmpty) Map.empty
       else {
-        val bcQ = sc.broadcast(q)
-        val bcDf = sc.broadcast(dfMap)
+        val bc = spark.sparkContext.broadcast(prepare(q0))
         val out = segmentTasks(bySeg).flatMap { case (dir, ids) =>
           val reader = ReaderCache.get(dir)
-          val df = (t: String) => bcDf.value.getOrElse(t, 0L)
-          val qn = sim.queryNorm(SegmentSearch.sumOfSquaredWeights(bcQ.value, sim, st, df))
-          ids.map { docId =>
-            val local = (docId - reader.meta.docBase).toInt
-            val view = Explain.docView(reader, local, Explain.viewTerms(bcQ.value))
-            docId -> Explain.explainDoc(bcQ.value, view, sim, st, bcDf.value, qn)
-          }
+          ids.map(docId =>
+            docId -> bc.value.explain(reader, (docId - reader.meta.docBase).toInt, sim))
         }.collect().toMap
-        bcQ.destroy()
-        bcDf.destroy()
+        bc.destroy()
         out
       }
     docIds.map(id => results.getOrElse(id,
@@ -351,12 +360,7 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     * commit (the reference's IndexWriter::updateDocument,
     * /root/reference/src/core/index/IndexWriter.cpp:981-1004). */
   def deleteDocs(q0: Query, commit: Boolean): Long = {
-    val q = Query.rewrite(expandQueries(Seq("q" -> q0)).head._2)
-    val dfMap = globalDf(Query.allTerms(q))
-    val sc = spark.sparkContext
-    val bcDf = sc.broadcast(dfMap)
-    val bcQ = sc.broadcast(q)
-    val st = stats
+    val bc = spark.sparkContext.broadcast(prepare(q0))
     // the CURRENT committed generation (not this searcher's open-time
     // snapshot — a second batch through the same instance must seed from
     // the first batch's committed bitsets), and the generation the new
@@ -383,8 +387,6 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     val newly = segmentTasks(segDirs)
       .map { dir =>
         val reader = ReaderCache.get(dir)
-        val df = (t: String) => bcDf.value.getOrElse(t, 0L)
-        val sim: Similarity = graft.score.BM25()
         // seed from the CURRENT COMMITTED bitset, NOT the cached reader's
         // open-time snapshot: this searcher's reader-cache key is pinned to
         // its open-time delGen, so a second delete batch through the same
@@ -392,18 +394,13 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
         // and silently resurrect the first batch's committed tombstones
         val bits = SegmentFormat.readDeletes(reader.dir, committedGen)
         val before = bits.cardinality()
-        val qn = sim.queryNorm(SegmentSearch.sumOfSquaredWeights(bcQ.value, sim, st, df))
-        SegmentSearch.scorer(bcQ.value, reader, sim, st, df, qn).foreach { s =>
-          var d = s.nextDoc()
-          while (d != Scorer.NoMoreDocs) { bits.set(d); d = s.nextDoc() }
-        }
+        bits.or(bc.value.matchBits(reader))
         val added = bits.cardinality() - before
         if (added > 0) SegmentFormat.writeDeletes(reader.dir, bits, targetGen)
         added.toLong
       }
       .collect().sum
-    bcQ.destroy()
-    bcDf.destroy()
+    bc.destroy()
     if (newly > 0 && commit) {
       // publish: a fresh snapshot (meta unchanged) whose delgen references
       // the just-written generation — readers flip atomically to it
@@ -417,59 +414,38 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     meta.numDocs - segmentTasks(segDirs)
       .map(dir => ReaderCache.get(dir).delCount.toLong).collect().sum
   }
+}
 
-  def searchBatch(queries0: Seq[(String, Query)], k: Int, sim: Similarity,
-      useWand: Boolean = true): Map[String, Array[ScoredDoc]] = {
-    val queries = expandQueries(queries0)
-    val allTerms = queries.flatMap { case (_, q) => Query.allTerms(q) }.toSet
-    searchBatchWith(queries, k, sim, useWand, stats, globalDf(allTerms), 0L)
+/** A query prepared to score — the reference's Weight: multi-term nodes
+  * expanded, rewritten, with the global df of its terms and the corpus
+  * stats it scores under. A job broadcasts its prepared queries once, and
+  * this value alone builds a segment's scorer, match set, top-k or
+  * explanation. Queries of one batch share one df map, which a broadcast
+  * serializes once. */
+private[graft] final case class PreparedQuery(q: Query, dfMap: Map[String, Long],
+    stats: CorpusStats) {
+
+  def df(t: String): Long = dfMap.getOrElse(t, 0L)
+
+  def queryNorm(sim: Similarity): Float =
+    sim.queryNorm(SegmentSearch.sumOfSquaredWeights(q, sim, stats, df))
+
+  /** Every local doc of `reader` the query matches, tombstoned ones
+    * included. The match set does not depend on the similarity. */
+  def matchBits(reader: SegmentReader): java.util.BitSet = {
+    val sim: Similarity = graft.score.BM25()
+    SegmentSearch.matchBits(q, reader, sim, stats, df, queryNorm(sim))
   }
 
-  /** The post-expansion scatter/merge with CALLER-SUPPLIED scoring stats,
-    * document frequencies, and a docId offset — the hook a cross-index
-    * MultiSearcher uses so every sub-index scores with the combined
-    * corpus's weights (reference MultiSearcher::createWeight +
-    * CachedDfSource, /root/reference/src/core/search/MultiSearcher.cpp). */
-  private[search] def searchBatchWith(queries: Seq[(String, Query)], k: Int,
-      sim: Similarity, useWand: Boolean, st0: CorpusStats,
-      dfMap: Map[String, Long], docIdOffset: Long): Map[String, Array[ScoredDoc]] = {
-    val st = st0
-    val sc = spark.sparkContext
-    val bcDf = sc.broadcast(dfMap)
-    val bcQueries = sc.broadcast(queries)
+  def topK(readers: Seq[SegmentReader], k: Int, sim: Similarity, useWand: Boolean,
+      deadlineNanos: Long): (Array[ScoredDoc], Boolean) =
+    SegmentSearch.topKTimed(readers, q, k, sim, stats, df, useWand, deadlineNanos)
 
-    // one collector per (task, query) across the task's run of segments:
-    // ≤ k hits per query per task
-    val perTask = segmentTasks(segDirs)
-      .mapPartitions { dirs =>
-        val readers = dirs.map(ReaderCache.get).toVector
-        val df = (t: String) => bcDf.value.getOrElse(t, 0L)
-        bcQueries.value.iterator.map { case (id, q) =>
-          (id, SegmentSearch.topK(readers, q, k, sim, st, df, useWand))
-        }
-      }
-
-    val mergeTopK: (Array[ScoredDoc], Array[ScoredDoc]) => Array[ScoredDoc] =
-      (a, b) => (a ++ b).sortBy(h => (-h.score, h.docId)).take(k)
-
-    // merge with the reference tie-break (score desc, docId asc). The
-    // driver receives tasks × queries × ≤ k hits, so above a TASK-count
-    // threshold the merge goes through reduceByKey instead: the shuffle
-    // folds hits per query first, and the driver receives O(queries · k)
-    val collected =
-      if (perTask.getNumPartitions <= 256) perTask.collect()
-      else perTask.reduceByKey(mergeTopK, math.max(1, queries.size)).collect()
-
-    bcQueries.destroy()
-    bcDf.destroy()
-
-    collected.groupBy(_._1).map { case (id, hits) =>
-      val merged = hits.iterator.flatMap(_._2).toArray
-        .sortBy(h => (-h.score, h.docId)).take(k)
-      id -> (if (docIdOffset == 0L) merged
-             else merged.map(h => h.copy(docId = h.docId + docIdOffset)))
-    }
-  }
+  /** Explain the score of `reader`'s local doc `local` (the value search
+    * collects for a hit; matched=false and 0 for a non-hit). */
+  def explain(reader: SegmentReader, local: Int, sim: Similarity): Explanation =
+    Explain.explainDoc(q, Explain.docView(reader, local, Explain.viewTerms(q)),
+      sim, stats, dfMap, queryNorm(sim))
 }
 
 /** Cross-index searcher — the reference's MultiSearcher over several
@@ -500,37 +476,26 @@ final class MultiIndexSearcher(subs: Seq[IndexSearcher]) {
       useWand: Boolean = true): Array[ScoredDoc] =
     searchBatch(Seq("q" -> q), k, sim, useWand)("q")
 
-  def searchBatch(queries0: Seq[(String, Query)], k: Int, sim: Similarity,
+  def searchBatch(queries: Seq[(String, Query)], k: Int, sim: Similarity,
       useWand: Boolean = true): Map[String, Array[ScoredDoc]] = {
-    // union multi-term expansion across every sub-dictionary, then one
-    // rewrite — per-index expansion would pick different fuzzy/budget
-    // subsets and make scores incomparable
-    val nodes = queries0
-      .flatMap { case (_, q) => IndexSearcher.collectMultiTermNodes(q) }.distinct
-    val queries =
-      if (nodes.isEmpty) queries0
-      else {
-        val union = subs.map(_.multiTermMatches(nodes))
-          .foldLeft(Map.empty[MultiTermQ, Seq[String]]) { (acc, m) =>
-            m.foldLeft(acc) { case (a, (n, ts)) =>
-              a.updated(n, (a.getOrElse(n, Nil) ++ ts).distinct.sorted)
-            }
-          }
-        IndexSearcher.rewriteWithTermSets(queries0, union)
-      }
-    val allTerms = queries.flatMap { case (_, q) => Query.allTerms(q) }.toSet
-    val dfMap = globalDf(allTerms)
+    // expand against the union of every sub-dictionary's matches —
+    // per-index expansion would pick different fuzzy/budget subsets and
+    // make scores incomparable
+    val matched = subs.map(_.multiTermMatches(queries.map(_._2))).reduce(_ union _)
+    val prepared = IndexSearcher.prepare(queries, matched, globalDf, stats)
     val perSub = subs.zip(starts).map { case (s, base) =>
-      s.searchBatchWith(queries, k, sim, useWand, stats, dfMap, base)
+      s.searchBatchWith(prepared, k, sim, useWand, IndexSearcher.NoDeadline, base)
     }
     queries.map { case (id, _) =>
-      id -> perSub.iterator.flatMap(_.getOrElse(id, Array.empty[ScoredDoc]))
-        .toArray.sortBy(h => (-h.score, h.docId)).take(k)
+      id -> IndexSearcher.best(perSub.flatMap(_.get(id)).flatMap(_._1).toArray, k)
     }.toMap
   }
 }
 
 object IndexSearcher {
+
+  /** The scoring job's budget when it has no deadline. */
+  private[search] val NoDeadline = Long.MaxValue
 
   private[search] def collectMultiTermNodes(q: Query): Seq[MultiTermQ] = q match {
     case mt: MultiTermQ => Seq(mt)
@@ -543,23 +508,26 @@ object IndexSearcher {
     case _ => Nil
   }
 
-  /** Rewrite with per-node term sets (expand consumes a term iterator; feed
-    * it the node's own matched list by re-dispatching per node). */
-  private[search] def rewriteWithTermSets(queries: Seq[(String, Query)],
-      termSets: Map[MultiTermQ, Seq[String]]): Seq[(String, Query)] = {
-    def rewriteTree(q: Query): Query = q match {
-      case mt: MultiTermQ =>
-        val terms = termSets.getOrElse(mt, Nil)
-        MultiTerm.expand(mt, _ => terms.iterator)
-      case BoolQ(m, s, n, msm) =>
-        BoolQ(m.map(rewriteTree), s.map(rewriteTree), n.map(rewriteTree), msm)
-      case ConstantScoreQ(inner, boost) => ConstantScoreQ(rewriteTree(inner), boost)
-      case CachedQ(inner) => CachedQ(rewriteTree(inner))
-      case cs: CustomScoreQ => cs.copy(sub = rewriteTree(cs.sub))
-      case DisMaxQ(ds, tie, boost) => DisMaxQ(ds.map(rewriteTree), tie, boost)
-      case FilteredQ(q2, f) => FilteredQ(rewriteTree(q2), rewriteTree(f))
-      case other => other
-    }
-    queries.map { case (id, q) => id -> rewriteTree(q) }
+  /** Prepare a batch: expand each query's multi-term nodes against
+    * `matched` (every dictionary term some node matches, walked in the
+    * dictionary's code-point order like a merged term enumeration), rewrite,
+    * and score the batch with `globalDf` of all its terms and `stats`. */
+  private[search] def prepare(queries: Seq[(String, Query)], matched: Set[String],
+      globalDf: Set[String] => Map[String, Long],
+      stats: CorpusStats): Seq[(String, PreparedQuery)] = {
+    val dict = matched.toArray.sorted(TermOrder.ordering)
+    val rewritten = queries.map { case (id, q) => id -> Query.rewrite(expandQueries(dict)(q)) }
+    val dfMap = globalDf(rewritten.flatMap { case (_, q) => Query.allTerms(q) }.toSet)
+    rewritten.map { case (id, q) => id -> PreparedQuery(q, dfMap, stats) }
   }
+
+  /** Expand multi-term nodes against `dict`, sorted dictionary terms. */
+  private def expandQueries(dict: Array[String])(q: Query): Query =
+    if (!Query.hasMultiTerm(q)) q
+    else MultiTerm.expand(q, lower =>
+      lower.fold(dict.iterator)(lo => dict.iterator.dropWhile(t => TermOrder.lt(t, lo))))
+
+  /** The best `k` of `hits` by the reference tie-break: score desc, docId asc. */
+  private[search] def best(hits: Array[ScoredDoc], k: Int): Array[ScoredDoc] =
+    hits.sortBy(h => (-h.score, h.docId)).take(k)
 }

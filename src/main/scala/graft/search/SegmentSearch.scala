@@ -253,14 +253,8 @@ object SegmentSearch {
 
     case CachedQ(inner) =>
       // memoized match bitset per (segment, filter) — scoreless
-      val bits = FilterCache.getOrCompute(reader.dir.getPath, inner) {
-        val b = new java.util.BitSet(reader.meta.docCount)
-        scorer(inner, reader, sim, stats, df, queryNorm).foreach { s =>
-          var d = s.nextDoc()
-          while (d != Scorer.NoMoreDocs) { b.set(d); d = s.nextDoc() }
-        }
-        b
-      }
+      val bits = FilterCache.getOrCompute(reader.dir.getPath, inner)(
+        matchBits(inner, reader, sim, stats, df, queryNorm))
       if (bits.isEmpty) None else Some(new BitSetScorer(bits, 0.0))
 
     case TermSetQ(terms, boost) =>
@@ -332,6 +326,19 @@ object SegmentSearch {
       }
   }
 
+  /** Every local doc of the segment that `q` matches, tombstoned ones
+    * included — the one match enumerator behind CachedQ's filter bitsets
+    * and IndexSearcher's matchingDocs and deleteDocs. */
+  def matchBits(q: Query, reader: SegmentReader, sim: Similarity, stats: CorpusStats,
+      df: String => Long, queryNorm: Float): java.util.BitSet = {
+    val bits = new java.util.BitSet(reader.meta.docCount)
+    scorer(q, reader, sim, stats, df, queryNorm).foreach { s =>
+      var d = s.nextDoc()
+      while (d != Scorer.NoMoreDocs) { bits.set(d); d = s.nextDoc() }
+    }
+    bits
+  }
+
   /** Per-doc value of a source within one segment (function package). */
   def valueFn(src: ValueSource, reader: SegmentReader): Int => Double = src match {
     case DocLenVS => d => reader.doclens(d).toDouble
@@ -365,15 +372,8 @@ object SegmentSearch {
     * (/root/reference/src/core/search/TimeLimitingCollector.cpp: the
     * collector aborts collection past the budget; hits gathered so far are
     * the partial result). The deadline is checked after every collected
-    * doc. */
-  def topKTimed(reader: SegmentReader, q0: Query, k: Int, sim: Similarity,
-      stats: CorpusStats, df: String => Long, useWand: Boolean,
-      deadlineNanos: Long): (Array[ScoredDoc], Boolean) =
-    topKTimed(Seq(reader), q0, k, sim, stats, df, useWand, deadlineNanos)
-
-  /** [[topK]] over a run of segments with one deadline for the whole run:
-    * the first collect past it stops the current segment and skips the
-    * rest of the run. */
+    * doc, and it holds for the whole run: the first collect past it stops
+    * the current segment and skips the rest of the run. */
   def topKTimed(readers: Seq[SegmentReader], q0: Query, k: Int, sim: Similarity,
       stats: CorpusStats, df: String => Long, useWand: Boolean,
       deadlineNanos: Long): (Array[ScoredDoc], Boolean) = {

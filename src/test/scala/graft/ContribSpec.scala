@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +12,7 @@ import graft.search._
 /** Contrib-surface analogs: MemoryIndex (percolation), Highlighter,
   * TimeLimitingCollector (reference: src/contrib/memory/MemoryIndex.cpp,
   * src/contrib/highlighter/, src/core/search/TimeLimitingCollector.cpp). */
-class ContribSpec extends AnyFunSuite {
+class ContribSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -35,7 +33,7 @@ class ContribSpec extends AnyFunSuite {
     assert(mi.score(TermQ("quick")) > 0.0)
     assert(mi.score(TermQ("missing")) == 0.0)
     // scores equal the engine's on an equivalent one-doc index
-    val dir = Files.createTempDirectory("graft-mi").toString
+    val dir = tmpDir()
     LocalIndex.build(dir, Seq((0L, "the quick brown fox jumps over the lazy dog")), "standard")
     val engine = LocalIndex.search(dir, TermQ("quick"), 1, BM25())
     assert(engine.head.score == mi.score(TermQ("quick")))
@@ -139,7 +137,7 @@ class ContribSpec extends AnyFunSuite {
       "quick|2.0 fox|3.0 fox|1.0",
       "quick|1.0 dog|4.0",
       "plain fox here")
-    val dir = Files.createTempDirectory("graft-pay").toString
+    val dir = tmpDir()
     graft.index.LocalIndex.build(dir,
       texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }, "delimited",
       docsPerSegment = 2, storePayloads = true)
@@ -206,7 +204,7 @@ class ContribSpec extends AnyFunSuite {
       "b|9.0 a|1.5 b|2.5",             // one ordered "a b"; payloads (2.5, 1.5)
       "a b",                            // ordered match, no payloads -> factor 1.0
       "b|1.0 a|2.0")                   // unordered-only match
-    val dir = Files.createTempDirectory("graft-paynear").toString
+    val dir = tmpDir()
     LocalIndex.build(dir, texts.zipWithIndex.map { case (t, i) => (i.toLong, t) },
       "delimited", docsPerSegment = 2, storePayloads = true)
     val bf = BruteForce.analyzeCorpus(graft.analysis.DelimitedPayloadAnalyzer,
@@ -256,7 +254,7 @@ class ContribSpec extends AnyFunSuite {
   }
 
   test("time-limited search: immediate deadline times out with partial results") {
-    val dir = Files.createTempDirectory("graft-tlc").toString
+    val dir = tmpDir()
     val corpus = SyntheticCorpus.generate(spark, 400, seed = 7, avgLen = 30, vocab = 50)
     IndexBuilder.build(spark, corpus, IndexConfig(dir, docsPerSegment = 100, writeDocMap = false))
     val searcher = new IndexSearcher(spark, dir)

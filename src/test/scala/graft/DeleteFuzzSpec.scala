@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analysis.Analyzer
@@ -15,7 +13,7 @@ import graft.search._
   * a merge, like the reference) and then filters dead docs from the
   * results — exactly the semantics the engine implements with its
   * collection-time del-bitset gate. */
-class DeleteFuzzSpec extends AnyFunSuite {
+class DeleteFuzzSpec extends AnyFunSuite with TempDirs {
 
   test("400 random query trees over random tombstone sets: engine == spec") {
     val rnd = new scala.util.Random(4242)
@@ -23,7 +21,7 @@ class DeleteFuzzSpec extends AnyFunSuite {
       (0 until (3 + rnd.nextInt(10)))
         .map(_ => QueryGen.vocab(rnd.nextInt(QueryGen.vocab.size))).mkString(" ")
     }
-    val dir = Files.createTempDirectory("graft-delfuzz").toString
+    val dir = tmpDir()
     LocalIndex.build(dir, texts.zipWithIndex.map { case (t, i) => (i.toLong, t) },
       "whitespace", docsPerSegment = 37)
     val corpus = BruteForce.analyzeCorpus(Analyzer.byName("whitespace"),

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +12,7 @@ import graft.search._
   * bitset at open, deleted docs vanish from every result, space is
   * reclaimed at merge, readers are point-in-time). Tombstone model: docIDs
   * stay stable (url ranks), so no docmap rewrite. */
-class DeleteSpec extends AnyFunSuite {
+class DeleteSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -24,7 +22,7 @@ class DeleteSpec extends AnyFunSuite {
 
   private def buildIndex(texts: Seq[String]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-del").toString
+    val dir = tmpDir()
     val df = texts.zipWithIndex.map { case (t, i) => (f"u$i%05d", t) }.toDF("url", "text")
     IndexBuilder.build(spark, df, IndexConfig(dir, analyzer = "whitespace",
       docsPerSegment = 4, writeDocMap = false))
@@ -90,7 +88,7 @@ class DeleteSpec extends AnyFunSuite {
 
   test("re-running a complete build keeps the committed deletes") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-del-rebuild").toString
+    val dir = tmpDir()
     val df = (0 until 12).map { i =>
       (f"u$i%05d", s"${if (i % 3 == 0) "redink" else "keepme"} common w$i")
     }.toDF("url", "text")

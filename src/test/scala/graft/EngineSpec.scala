@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analysis.Analyzer
@@ -12,10 +10,7 @@ import graft.search._
 
 /** Engine vs brute-force executable spec, plus reference-derived goldens
   * (FIXTURES.md §2; corpora lifted from the reference's own test files). */
-class EngineSpec extends AnyFunSuite {
-
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-idx").toString
+class EngineSpec extends AnyFunSuite with TempDirs {
 
   private def indexOf(texts: Seq[String], analyzer: String, dps: Int = Int.MaxValue): String = {
     val dir = tmpDir()

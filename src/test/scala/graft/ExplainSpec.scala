@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,7 +14,7 @@ import graft.search._
   * over FuzzSpec's random whole-algebra trees, every collected hit's
   * explanation must carry exactly the collected score, and every
   * explained non-hit must say matched=false with value 0. */
-class ExplainSpec extends AnyFunSuite {
+class ExplainSpec extends AnyFunSuite with TempDirs {
 
   test("explanation value == collected score over 300 random trees, 3 sims") {
     val rnd = new scala.util.Random(4242)
@@ -24,7 +22,7 @@ class ExplainSpec extends AnyFunSuite {
       (0 until (3 + rnd.nextInt(10)))
         .map(_ => QueryGen.vocab(rnd.nextInt(QueryGen.vocab.size))).mkString(" ")
     }
-    val dir = Files.createTempDirectory("graft-explain").toString
+    val dir = tmpDir()
     LocalIndex.build(dir, texts.zipWithIndex.map { case (t, i) => (i.toLong, t) },
       "whitespace", docsPerSegment = 37)
 
@@ -56,7 +54,7 @@ class ExplainSpec extends AnyFunSuite {
 
   test("explanation details: term/bool/payload structure renders the why") {
     val texts = Seq("a|1.0 b|2.0 a|3.0", "b|4.0 a|5.0", "c d")
-    val dir = Files.createTempDirectory("graft-explain2").toString
+    val dir = tmpDir()
     LocalIndex.build(dir, texts.zipWithIndex.map { case (t, i) => (i.toLong, t) },
       "delimited", docsPerSegment = 2, storePayloads = true)
     val sim = graft.score.PayloadDecodingSimilarity()
@@ -98,7 +96,7 @@ class ExplainSpec extends AnyFunSuite {
       (0 until (3 + rnd.nextInt(8)))
         .map(_ => QueryGen.vocab(rnd.nextInt(QueryGen.vocab.size))).mkString(" ")
     }
-    val dir = Files.createTempDirectory("graft-explain-dist").toString
+    val dir = tmpDir()
     LocalIndex.build(dir, texts.zipWithIndex.map { case (t, i) => (i.toLong, t) },
       "whitespace", docsPerSegment = 13)
     val searcher = new IndexSearcher(spark, dir)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analysis.Analyzer
@@ -17,14 +15,14 @@ import graft.search._
   * discipline of the reference test suite
   * (/root/reference/src/test/search/QueryUtils.cpp) applied to the full
   * query ADT at once. */
-class FuzzSpec extends AnyFunSuite {
+class FuzzSpec extends AnyFunSuite with TempDirs {
 
   test("800 random mixed query trees: engine == spec bit-for-bit") {
     val rnd = new scala.util.Random(777)
     val texts = (0 until 250).map { _ =>
       (0 until (3 + rnd.nextInt(10))).map(_ => QueryGen.vocab(rnd.nextInt(QueryGen.vocab.size))).mkString(" ")
     }
-    val dir = Files.createTempDirectory("graft-fuzz").toString
+    val dir = tmpDir()
     LocalIndex.build(dir, texts.zipWithIndex.map { case (t, i) => (i.toLong, t) },
       "whitespace", docsPerSegment = 41)
     val corpus = BruteForce.analyzeCorpus(Analyzer.byName("whitespace"),

@@ -6,7 +6,7 @@ import graft.analysis._
 
 /** Non-English analyzers vs the reference's own contrib test fixtures
   * (/root/reference/src/test/contrib/analyzers/common/analysis/...). */
-class LangSpec extends AnyFunSuite {
+class LangSpec extends AnyFunSuite with TempDirs {
 
   private def toks(a: Analyzer, text: String): Seq[String] =
     a.analyze(text).map(_.term).toSeq
@@ -174,7 +174,7 @@ class LangSpec extends AnyFunSuite {
     import graft.index.LocalIndex
     import graft.score.BM25
     import graft.search.{PhraseQ, TermQ}
-    val dir = java.nio.file.Files.createTempDirectory("graft-cjk").toString
+    val dir = tmpDir()
     val texts = Seq("東京都 に 住む", "京都 の 寺", "大阪 の 城")
     LocalIndex.build(dir, texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }, "cjk")
     // "東京" hits only doc 0; "京都" hits the 東京都 bigram chain AND doc 1

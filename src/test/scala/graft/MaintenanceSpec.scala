@@ -11,7 +11,7 @@ import graft.index._
 import graft.score.BM25
 import graft.search.{BoolQ, IndexSearcher, TermQ}
 
-class MaintenanceSpec extends AnyFunSuite {
+class MaintenanceSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -22,7 +22,7 @@ class MaintenanceSpec extends AnyFunSuite {
   private def texts(n: Int) = SyntheticCorpus.localPages(n, seed = 21, avgLen = 25, vocab = 60).map(_.text)
 
   test("checkIndex passes on a fresh index and catches corruption") {
-    val dir = Files.createTempDirectory("graft-check").toString
+    val dir = tmpDir()
     LocalIndex.build(dir, texts(120).zipWithIndex.map { case (t, i) => (i.toLong, t) },
       "standard", docsPerSegment = 40)
     val checks = Maintenance.checkIndex(spark, dir)
@@ -39,8 +39,8 @@ class MaintenanceSpec extends AnyFunSuite {
   test("merged segment files are byte-identical to a direct single-segment build") {
     val ts = texts(90)
     val docs = ts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-    val multi = Files.createTempDirectory("graft-m1").toString
-    val single = Files.createTempDirectory("graft-m2").toString
+    val multi = tmpDir()
+    val single = tmpDir()
     LocalIndex.build(multi, docs, "standard", docsPerSegment = 30)
     LocalIndex.build(single, docs, "standard", docsPerSegment = Int.MaxValue)
 
@@ -56,7 +56,7 @@ class MaintenanceSpec extends AnyFunSuite {
   test("duplicate merge attempts never unpublish a live segment; del bitset rides the publish rename") {
     val ts = texts(90)
     val docs = ts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-    val dir = Files.createTempDirectory("graft-zombie").toString
+    val dir = tmpDir()
     LocalIndex.build(dir, docs, "standard", docsPerSegment = 30) // segs 0,1,2
 
     // tombstone doc 5 at the committed generation (LocalIndex commits delgen 0)
@@ -93,7 +93,7 @@ class MaintenanceSpec extends AnyFunSuite {
 
   test("compaction of streaming mini-segments preserves query results") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-compact").toString
+    val dir = tmpDir()
     val ts = texts(60)
     // ingest as 6 tiny batches -> 6 segments
     ts.grouped(10).zipWithIndex.foreach { case (g, b) =>
@@ -116,7 +116,7 @@ class MaintenanceSpec extends AnyFunSuite {
   test("term vectors: stored per doc, match analysis, survive merge") {
     val ts = texts(90)
     val docs = ts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-    val dir = Files.createTempDirectory("graft-tv").toString
+    val dir = tmpDir()
     LocalIndex.build(dir, docs, "standard", docsPerSegment = 30, storeTermVectors = true)
     val bf = graft.search.BruteForce.analyzeCorpus(graft.analysis.StandardAnalyzer(), docs)
 
@@ -141,7 +141,7 @@ class MaintenanceSpec extends AnyFunSuite {
 
     // distributed invert-mode build stores the same vectors
     val corpus = SyntheticCorpus.generate(spark, 128, seed = 21, avgLen = 25, vocab = 60)
-    val ddir = Files.createTempDirectory("graft-tv-dist").toString
+    val ddir = tmpDir()
     IndexBuilder.build(spark, corpus,
       IndexConfig(ddir, docsPerSegment = 64, writeDocMap = false, storeTermVectors = true))
     val pages = SyntheticCorpus.localPages(128, seed = 21, avgLen = 25, vocab = 60).sortBy(_.url)
@@ -156,7 +156,7 @@ class MaintenanceSpec extends AnyFunSuite {
 
   test("multi-group compaction runs distributed and respects the merge factor") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-compact-par").toString
+    val dir = tmpDir()
     val ts = texts(100)
     // 10 tiny batches -> 10 adjacent 10-doc segments
     ts.grouped(10).zipWithIndex.foreach { case (g, b) =>
@@ -186,7 +186,7 @@ class MaintenanceSpec extends AnyFunSuite {
 
   test("compaction purges exactly the commit points that reference retired segments") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-compact-commits").toString
+    val dir = tmpDir()
     val ts = texts(60)
     ts.grouped(20).zipWithIndex.foreach { case (g, b) =>
       val df = g.zipWithIndex.map { case (t, i) => (f"u${b * 20 + i}%04d", t) }.toDF("url", "text")
@@ -219,7 +219,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("build resume after compaction does not double-index merged ranges") {
-    val dir = Files.createTempDirectory("graft-resume-compact").toString
+    val dir = tmpDir()
     val corpus = SyntheticCorpus.generate(spark, 256, seed = 33, avgLen = 25, vocab = 80)
     val first = IndexBuilder.build(spark, corpus,
       IndexConfig(dir, docsPerSegment = 64, writeDocMap = false))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +11,7 @@ import graft.search._
   * combined corpus stats, and starts[] docId remapping, the multi-index
   * scores must be bit-identical to a single index holding the same docs
   * (the reference MultiSearcher's comparable-scores contract). */
-class MultiIndexSpec extends AnyFunSuite {
+class MultiIndexSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -23,7 +21,7 @@ class MultiIndexSpec extends AnyFunSuite {
 
   private def build(texts: Seq[(String, String)]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-multi").toString
+    val dir = tmpDir()
     IndexBuilder.build(spark, texts.toDF("url", "text"),
       IndexConfig(dir, analyzer = "whitespace", docsPerSegment = 4,
         writeDocMap = false))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analysis.Analyzer
@@ -14,9 +12,7 @@ import graft.search._
   * against the brute-force spec (reference semantics: MultiTermQuery.cpp,
   * DisjunctionMaxQuery.cpp, ConstantScoreQuery.cpp, SloppyPhraseScorer.cpp,
   * fixtures re-expressed from PhraseQueryTest.cpp:91-107). */
-class QueryFamilySpec extends AnyFunSuite {
-
-  private def tmpDir(): String = Files.createTempDirectory("graft-qf").toString
+class QueryFamilySpec extends AnyFunSuite with TempDirs {
 
   private def indexOf(texts: Seq[String], analyzer: String, dps: Int = Int.MaxValue): String = {
     val dir = tmpDir()

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.analysis.StandardAnalyzer
 import graft.search._
 
-class QueryParserSpec extends AnyFunSuite {
+class QueryParserSpec extends AnyFunSuite with TempDirs {
 
   private val a = StandardAnalyzer()
   private def p(s: String): Query = QueryParser.parse(s, a)
@@ -107,7 +107,7 @@ class QueryParserSpec extends AnyFunSuite {
   }
 
   test("parsed query is searchable end-to-end") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-qp").toString
+    val dir = tmpDir()
     val texts = Seq("the quick brown fox", "a quick dog", "slow brown turtle")
     graft.index.LocalIndex.build(dir,
       texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }, "standard")

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,9 +14,7 @@ import graft.search._
   * unordered / or fixtures), NearSpansOrderedTest.cpp (span sequences and
   * skipTo), BasicSpansTest.cpp (1000 intToEnglish docs end-to-end), plus
   * engine-vs-brute-force parity on randomized span queries. */
-class SpanSpec extends AnyFunSuite {
-
-  private def tmpDir(): String = Files.createTempDirectory("graft-span").toString
+class SpanSpec extends AnyFunSuite with TempDirs {
 
   private def indexOf(texts: Seq[String], analyzer: String, dps: Int = Int.MaxValue): String = {
     val dir = tmpDir()

@@ -11,7 +11,7 @@ import graft.index._
 import graft.score.BM25
 import graft.search._
 
-class SparkIndexSpec extends AnyFunSuite {
+class SparkIndexSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -20,8 +20,6 @@ class SparkIndexSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
-
-  private def tmpDir(): String = Files.createTempDirectory("graft-spark").toString
 
   private val N = 500
   private lazy val corpus = SyntheticCorpus.generate(spark, N, seed = 11, avgLen = 50, vocab = 400)

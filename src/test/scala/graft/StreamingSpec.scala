@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,7 +9,7 @@ import graft.score.BM25
 import graft.search.{IndexSearcher, TermQ}
 import graft.streaming.StreamingIndexer
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -23,7 +21,7 @@ class StreamingSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("appendBatch grows the index; snapshots stay queryable") {
-    val dir = Files.createTempDirectory("graft-stream").toString
+    val dir = tmpDir()
     val b1 = Seq(("u1", "spark streaming index"), ("u2", "batch append")).toDF("url", "text")
     val b2 = Seq(("u3", "more spark docs"), ("u4", "spark again")).toDF("url", "text")
 
@@ -42,7 +40,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("the exactly-once watermark survives compaction, updates and unnumbered appends") {
-    val dir = Files.createTempDirectory("graft-stream-wm").toString
+    val dir = tmpDir()
     def batch(b: Int) =
       (0 until 5).map(i => (f"b$b-u$i%02d", s"page batch$b item$i")).toDF("url", "text")
     (0 to 2).foreach(b => StreamingIndexer.appendBatch(spark, batch(b), dir, batchId = b))
@@ -68,7 +66,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("appendBatch refuses an analyzer or positions setting the index does not have") {
-    val dir = Files.createTempDirectory("graft-stream-mixed").toString
+    val dir = tmpDir()
     IndexBuilder.build(spark, Seq(("u1", "Alpha beta"), ("u2", "gamma")).toDF("url", "text"),
       IndexConfig(dir, analyzer = "whitespace", writeDocMap = false))
     val gen = IndexMetaIO.latestGen(dir)
@@ -89,7 +87,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("foreachBatch streaming ingestion end-to-end") {
-    val dir = Files.createTempDirectory("graft-stream2").toString
+    val dir = tmpDir()
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(String, String)]
     val q = StreamingIndexer.start(spark, mem.toDF().toDF("url", "text"), dir,
