@@ -23,7 +23,7 @@ object EngineQueries {
   private val searchers =
     scala.collection.concurrent.TrieMap.empty[String, (Int, IndexSearcher)]
 
-  private def rm(f: java.io.File): Unit = {
+  private[graft] def rm(f: java.io.File): Unit = {
     if (f.isDirectory) { val l = f.listFiles(); if (l != null) l.foreach(rm) }
     f.delete()
   }

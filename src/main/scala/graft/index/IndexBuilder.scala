@@ -1,6 +1,5 @@
 package graft.index
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.analysis.Analyzer
@@ -14,9 +13,6 @@ final case class IndexConfig(
       * docs/segment over thousands of executors; tests shrink it. */
     docsPerSegment: Int = IndexConfig.DefaultDocsPerSegment,
     storePositions: Boolean = true,
-    /** Partitions of the segment shuffle; 0 → one per segment, capped at
-      * 4 × defaultParallelism. */
-    buildPartitions: Int = 0,
     /** Also persist a (docId, url) map table next to the index. */
     writeDocMap: Boolean = true,
     /** Store per-doc term vectors (doc-ordered sidecar). */
@@ -44,25 +40,27 @@ final case class BuildReport(
   *
   * Shape of the job — designed for 10^12 docs / 1000 executors:
   *
-  *  1. deterministic dense docIDs: sort the URLS ONLY (key-sized shuffle),
-  *     rank them via per-partition counts + exclusive scan (the one place
-  *     we drop to the RDD API — the scan has no Dataset equivalent), and
-  *     hash-join ids back onto the text. Rank-identical output across
-  *     cluster sizes requires ids that do not depend on partitioning; a
-  *     total order + rank is the only assignment with that property
-  *     (SURVEY.md §7.4-2). The corpus text is never sorted and never
-  *     cached — at 10^12 docs either would be a corpus-sized sort/spill.
-  *  2. resume filter: docs inside any committed segment's [docBase,
-  *     docBase+docCount) range are skipped BEFORE tokenization (range, not
-  *     segId, so compacted segments resume correctly — north rule
-  *     resumability).
-  *  3. ONE segment shuffle: raw docs keyed by (segId = docId /
-  *     docsPerSegment, docId) through `repartitionAndSortWithinPartitions`
-  *     ([[writeSegments]]). Partitioning by doc-range (not term!) is the
-  *     skew story: every segment gets ~docsPerSegment docs regardless of
-  *     term distribution, so stop-word-class terms cannot skew a reducer
-  *     (the "salted groupBy" of the north rule, with the doc-range bucket
-  *     as the salt — SURVEY.md §4.4).
+  *  1. deterministic dense docIDs = rank in (url, text) order, nulls first
+  *     ([[DocOrder]]; the rule [[writeSegments]] shares with
+  *     `StreamingIndexer.appendBatch`). Only the URLS are sorted (a
+  *     key-sized shuffle); per-partition counts and one scan for the url at
+  *     each segment boundary (with the rank where its run of copies starts)
+  *     place every url. Rank-identical output across cluster sizes requires
+  *     ids that do not depend on partitioning; a total order + rank is the
+  *     only assignment with that property (SURVEY.md §7.4-2). The corpus
+  *     text is never cached and crosses the network once.
+  *  2. resume filter: docs of segments inside a committed segment's
+  *     [docBase, docBase+docCount) range are dropped before the shuffle
+  *     (range, not segId, so compacted segments resume correctly — north
+  *     rule resumability).
+  *  3. ONE segment shuffle: each raw doc goes, by binary search over the
+  *     boundary urls, to the segment(s) its url's run of copies overlaps;
+  *     each task sorts a segment by (url, text) and numbers its docs by
+  *     position. Partitioning by doc-range (not term!) is the skew story:
+  *     every segment gets ~docsPerSegment docs regardless of term
+  *     distribution, so stop-word-class terms cannot skew a reducer (the
+  *     "salted groupBy" of the north rule, with the doc-range bucket as the
+  *     salt — SURVEY.md §4.4).
   *  4. each task analyzes and inverts its segments one at a time in RAM
   *     (the reference's DocumentsWriter; tf needs no shuffle — SURVEY.md
   *     §2.4) and streams term-sorted postings into a SegmentWriter; atomic
@@ -73,9 +71,14 @@ object IndexBuilder {
 
   def segIdOf(docId: Long, docsPerSegment: Int): Int = (docId / docsPerSegment).toInt
 
+  /** The order docIds follow: urls, and among copies of one url their
+    * texts, in code-point order ([[TermOrder]], the order of Spark SQL's
+    * string sort) with nulls first, as an ascending `orderBy` puts them. */
+  private val DocOrder: Ordering[String] = (a: String, b: String) =>
+    if (a eq b) 0 else if (a == null) -1 else if (b == null) 1 else TermOrder.compare(a, b)
+
   /** corpus must have `url` and `text` string columns. */
   def build(spark: SparkSession, corpus: DataFrame, cfg: IndexConfig): BuildReport = {
-    import spark.implicits._
     new java.io.File(cfg.indexDir).mkdirs()
 
     Analyzer.byName(cfg.analyzer) // fail fast on an unknown analyzer name
@@ -87,90 +90,110 @@ object IndexBuilder {
     }
     val committed = IndexMetaIO.committedSegments(cfg.indexDir)
       .filter(m => m.analyzer == cfg.analyzer && m.hasPositions == cfg.storePositions)
-    val dps0 = cfg.docsPerSegment
     // Resume skips by committed DOC RANGE, not segId: compaction produces
     // fresh segIds covering several original ranges, and a segId-based skip
     // would rebuild those docs alongside the merged segment (overlapping
-    // ranges, duplicate docIds). Ranges must stay aligned to docsPerSegment
-    // so the remaining docs form whole buildable segments.
-    val committedRanges: Array[(Long, Long)] =
-      committed.map(m => (m.docBase, m.docBase + m.docCount)).sortBy(_._1).toArray
-    committedRanges.foreach { case (s, _) =>
-      require(s % dps0 == 0,
-        s"cannot resume: committed segment docBase $s is not aligned to docsPerSegment=$dps0")
-    }
-
-    // (1) deterministic dense docIDs: global url order → rank. Only the
-    // URLS are sorted (a key-sized shuffle); per-partition counts + an
-    // exclusive scan turn the sort into dense ranks, and a hash join
-    // attaches ids back to the text. The corpus text is therefore NEVER
-    // sorted and NEVER cached — at 10^12 docs either would be a
-    // corpus-sized sort/spill. Requires unique urls (one doc per url —
-    // the web-crawl snapshot contract; also what the docmap assumes).
-    val sortedUrls = corpus.select($"url").as[String].orderBy($"url").rdd
-    val partCounts: Array[Long] = sortedUrls
-      .mapPartitionsWithIndex { (i, it) =>
-        var n = 0L
-        while (it.hasNext) { it.next(); n += 1 }
-        Iterator((i, n))
-      }.collect().sortBy(_._1).map(_._2)
-    val offsets: Array[Long] = partCounts.scanLeft(0L)(_ + _)
-    val idsDF = sortedUrls.mapPartitionsWithIndex { (i, it) =>
-      var id = offsets(i) - 1
-      it.map { url => id += 1; (url, id) }
-    }.toDF("url", "docId")
-    // shuffle-hash over sort-merge (the ids are the small, fixed-width
-    // side; SMJ would re-sort the text); AQE still upgrades this to a
-    // broadcast join when the id side is small enough
-    val sorted = corpus.select($"url", $"text")
-      .join(idsDF.hint("shuffle_hash"), Seq("url"))
-      .select($"docId", $"url", $"text").as[(Long, String, String)]
-      .rdd
-
-    {
-      val numDocs = offsets.last
-      val dps = cfg.docsPerSegment
-      val numSegments = math.max(1, ((numDocs + dps - 1) / dps).toInt)
-      committedRanges.foreach { case (_, e) =>
-        require(e % dps == 0 || e == numDocs,
-          s"cannot resume: committed segment end $e is not aligned to docsPerSegment=$dps")
-      }
-
-      if (cfg.writeDocMap) {
-        val docMapPath = new java.io.File(cfg.indexDir, "docmap").getPath
-        if (!new java.io.File(docMapPath, "_SUCCESS").exists()) {
-          idsDF.select($"docId", $"url")
-            .write.mode("overwrite").parquet(docMapPath)
-        }
-      }
-
-      // (2) resume: skip committed doc-ranges before any tokenize work
-      val ranges = committedRanges
-      val todo =
-        if (ranges.isEmpty) sorted
-        else sorted.filter { case (id, _, _) => !inRanges(ranges, id) }
-
-      val keyed = todo.map { case (docId, _, text) => ((segIdOf(docId, dps), docId), text) }
-      val metas = writeSegments(keyed, numSegments, numDocs, cfg)
-
-      val meta = IndexMetaIO.commit(cfg.indexDir, IndexMeta(cfg.analyzer, cfg.storePositions,
-        (committed ++ metas).sortBy(m => (m.docBase, m.segId)))).meta
-      BuildReport(numDocs, numSegments, metas.size, committed.size, meta)
-    }
+    // ranges, duplicate docIds).
+    val (numDocs, metas) = writeSegments(corpus, cfg,
+      committed = committed.map(m => (m.docBase, m.docBase + m.docCount)))
+    val numSegments = math.max(1, ((numDocs + cfg.docsPerSegment - 1) / cfg.docsPerSegment).toInt)
+    val meta = IndexMetaIO.commit(cfg.indexDir, IndexMeta(cfg.analyzer, cfg.storePositions,
+      (committed ++ metas).sortBy(m => (m.docBase, m.segId)))).meta
+    BuildReport(numDocs, numSegments, metas.size, committed.size, meta)
   }
 
-  /** Binary search over sorted, non-overlapping [start, end) ranges. */
-  private[graft] def inRanges(ranges: Array[(Long, Long)], id: Long): Boolean = {
-    var lo = 0
-    var hi = ranges.length - 1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val (s, e) = ranges(mid)
-      if (id < s) hi = mid - 1
-      else if (id >= e) lo = mid + 1
-      else return true
+  /** The docId rule and segment writer of [[build]] and
+    * `StreamingIndexer.appendBatch`: each doc (`url`, `text`) gets docId
+    * `docIdOffset` + its rank in [[DocOrder]]; segment k (ranks from
+    * k·docsPerSegment) becomes segId `segIdOffset` + k unless its first docId
+    * lies in a `committed` [start, end) range. Jobs: range sample, rank
+    * count, boundary scan (if > 1 segment), docmap (if `cfg.writeDocMap`),
+    * segments over min(#segments, 4 × defaultParallelism) tasks. Returns
+    * the doc count and the written segments. */
+  private[graft] def writeSegments(
+      docs: DataFrame,
+      cfg: IndexConfig,
+      segIdOffset: Int = 0,
+      docIdOffset: Long = 0L,
+      committed: Seq[(Long, Long)] = Nil): (Long, Seq[SegmentMeta]) = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val dps = cfg.docsPerSegment
+
+    // rank: sort the urls only, count each sorted partition. Equal urls
+    // land in one partition (the range partitioner is a function of the key)
+    val sortedUrls = {
+      implicit val order: Ordering[String] = DocOrder
+      docs.select($"url").as[String].rdd.map(u => (u, null))
+        .sortByKey(numPartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt).keys
     }
-    false
+    val offsets =
+      sortedUrls.mapPartitions(it => Iterator(it.size.toLong)).collect().scanLeft(0L)(_ + _)
+    val numDocs = offsets.last
+    val numSegments = ((numDocs + dps - 1) / dps).toInt
+    // committed ranges stay aligned to segments, so the rest form whole segments
+    committed.foreach { case (s, e) =>
+      require((s - docIdOffset) % dps == 0 &&
+        ((e - docIdOffset) % dps == 0 || e == docIdOffset + numDocs),
+        s"cannot resume: committed segment [$s, $e) is not aligned to docsPerSegment=$dps")
+    }
+
+    // boundaries: for each segment k ≥ 1, the url at rank k·dps and the
+    // rank where that url's run of copies starts
+    val boundaryParts = offsets.indices.init.filter(p => (offsets(p + 1) - 1) / dps > (offsets(p) - 1) / dps)
+    val boundaries = if (boundaryParts.isEmpty) Array.empty[(String, Long)] else
+      sc.runJob(sortedUrls, (ctx: org.apache.spark.TaskContext, it: Iterator[String]) => {
+        val first = offsets(ctx.partitionId())
+        val last = (offsets(ctx.partitionId() + 1) - 1) / dps * dps // the partition's last boundary
+        var (runStart, prev) = (first, "")
+        it.zip(Iterator.iterate(first)(_ + 1)).map { case (url, r) =>
+          if (r == first || url != prev) { runStart = r; prev = url }
+          (url, r, runStart)
+        }.takeWhile(_._2 <= last).collect { case (url, r, s) if r % dps == 0 && r > 0 => (url, s) }
+          .toArray
+      }, boundaryParts).flatten
+
+    if (cfg.writeDocMap) {
+      val docMapPath = new java.io.File(cfg.indexDir, "docmap").getPath
+      if (!new java.io.File(docMapPath, "_SUCCESS").exists()) {
+        sortedUrls.mapPartitionsWithIndex { (p, it) =>
+          var id = docIdOffset + offsets(p) - 1
+          it.map { url => id += 1; (id, url) }
+        }.coalesce(math.max(1, (numDocs / IndexConfig.DefaultDocsPerSegment).toInt)) // ~1M urls a file
+          .toDF("docId", "url").write.mode("overwrite").parquet(docMapPath)
+      }
+    }
+    if (numDocs == 0) return (0L, Nil)
+
+    // route each doc to the uncommitted segments its url's run of copies
+    // overlaps: one, unless the run straddles a boundary
+    val done = new Array[Boolean](numSegments)
+    for ((s, e) <- committed; k <- ((s - docIdOffset) / dps).toInt until
+        math.min(numSegments, ((e - docIdOffset + dps - 1) / dps).toInt)) done(k) = true
+    val bounds = sc.broadcast((boundaries.map(_._1), boundaries.map(_._2), done))
+    val parts = math.min(numSegments, math.max(1, 4 * sc.defaultParallelism))
+    val partitioner = new org.apache.spark.Partitioner {
+      override def numPartitions: Int = parts
+      override def getPartition(key: Any): Int = key.asInstanceOf[(Int, String, String)]._1 % parts
+    }
+    implicit val rowOrder: Ordering[(Int, String, String)] =
+      Ordering.Tuple3(Ordering.Int, DocOrder, DocOrder)
+    val metas = docs.select($"url", $"text").as[(String, String)].rdd
+      .flatMap { case (url, text) =>
+        val (urls, starts, done) = bounds.value
+        val at = java.util.Arrays.binarySearch(urls, url, DocOrder)
+        var (lo, hi) = if (at >= 0) (at, at) else (-at - 1, -at - 1)
+        while (lo > 0 && urls(lo - 1) == url) lo -= 1 // lo, hi: boundaries < url, <= url
+        while (hi < urls.length && urls(hi) == url) hi += 1
+        val first = if (hi > lo) (starts(lo) / dps).toInt else lo
+        (first to hi).iterator.filter(k => !done(k)).map(k => ((k, url, text), null))
+      }
+      .repartitionAndSortWithinPartitions(partitioner)
+      .mapPartitions(it => invertPartitionSegments(it.map(_._1), cfg, numDocs, bounds.value._2,
+        segIdOffset, docIdOffset))
+      .collect().toSeq
+    (numDocs, metas)
   }
 
   private final class IntBuf(initial: Int = 8) {
@@ -190,45 +213,20 @@ object IndexBuilder {
     var payloads: scala.collection.mutable.ArrayBuffer[Array[Byte]] = null
   }
 
-  /** The build's segment writer, shared by [[build]] and
-    * `StreamingIndexer.appendBatch`: ONE shuffle groups each segment's raw
-    * docs (keyed (segId, docId)) in one task, sorted by docId, and each task
-    * inverts its segments in RAM ([[invertPartitionSegments]]). Segments are
-    * spread over `cfg.buildPartitions` tasks (0 → one per segment, capped at
-    * 4 × defaultParallelism) by segId modulo the task count. `numDocs` counts
-    * the docs from `docIdOffset` on, which sets the last segment's size.
-    * Returns the new segments' metadata. */
-  private[graft] def writeSegments(
-      docs: RDD[((Int, Long), String)],
-      numSegments: Int,
-      numDocs: Long,
-      cfg: IndexConfig,
-      segIdOffset: Int = 0,
-      docIdOffset: Long = 0L): Seq[SegmentMeta] = {
-    val parts = if (cfg.buildPartitions > 0) cfg.buildPartitions
-      else math.min(numSegments, math.max(1, 4 * docs.sparkContext.defaultParallelism))
-    val partitioner = new org.apache.spark.Partitioner {
-      override def numPartitions: Int = parts
-      override def getPartition(key: Any): Int = {
-        val m = key.asInstanceOf[(Int, Long)]._1 % parts
-        if (m < 0) m + parts else m
-      }
-    }
-    docs.repartitionAndSortWithinPartitions(partitioner)
-      .mapPartitions(it => invertPartitionSegments(it, cfg, numDocs, segIdOffset, docIdOffset))
-      .collect().toSeq
-  }
-
-  /** Docs arrive sorted by (segId, docId); invert one segment at a time in
-    * memory, then stream term-sorted postings into a SegmentWriter. Task
-    * memory is bounded by docsPerSegment only: 2048-doc test segments take
-    * MBs, and at cluster scale ~256k docs/segment fit a 4 GB executor. The
-    * 1 << 20 default is above that guidance; lower docsPerSegment for
-    * long-document corpora. */
+  /** Rows arrive sorted by (segment, url, text); invert one segment at a
+    * time in memory, then stream term-sorted postings into a SegmentWriter.
+    * Docs are numbered by position, after the copies of the first url that
+    * earlier segments number (its run starts at rank `starts(seg - 1)`);
+    * copies past the last doc belong to the next segment. Task memory is
+    * bounded by docsPerSegment only: 2048-doc test segments take MBs, and at
+    * cluster scale ~256k docs/segment fit a 4 GB executor. The 1 << 20
+    * default is above that guidance; lower docsPerSegment for long-document
+    * corpora. */
   private def invertPartitionSegments(
-      it: Iterator[((Int, Long), String)],
+      it: Iterator[(Int, String, String)],
       cfg: IndexConfig,
       numDocs: Long,
+      starts: Array[Long],
       segIdOffset: Int,
       docIdOffset: Long): Iterator[SegmentMeta] = {
     val docsPerSegment = cfg.docsPerSegment
@@ -239,12 +237,17 @@ object IndexBuilder {
     val metas = scala.collection.mutable.ArrayBuffer.empty[SegmentMeta]
 
     var curSeg = -1
-    var docBase = 0L
+    var docCount = 0
+    var lead = 0L
+    var localDoc = 0
+    var lastUrl: String = null
     var writer: SegmentWriter = null
     var inv: java.util.HashMap[String, TermBuf] = null
 
     def flushSegment(): Unit = {
       if (writer == null) return
+      require(localDoc == docCount, s"segment ${segIdOffset + curSeg} got $localDoc docs of " +
+        s"$docCount: the corpus changed between the url sort and the text read")
       val terms = inv.keySet.toArray(new Array[String](0))
       // code-point order, the engine's one term order (TermOrder scaladoc);
       // java.util.Arrays.sort's natural UTF-16 order would disagree on
@@ -273,18 +276,7 @@ object IndexBuilder {
       inv = null
     }
 
-    while (it.hasNext) {
-      val ((segId, docId), text) = it.next()
-      if (segId != curSeg) {
-        flushSegment()
-        curSeg = segId
-        docBase = docIdOffset + (segId.toLong - segIdOffset) * docsPerSegment
-        val docCount = math.min(docsPerSegment.toLong, docIdOffset + numDocs - docBase).toInt
-        writer = new SegmentWriter(cfg.indexDir, segId, docBase, docCount, cfg.analyzer,
-          storePositions, storeVectors, storePayloads)
-        inv = new java.util.HashMap[String, TermBuf]()
-      }
-      val localDoc = (docId - docBase).toInt
+    def indexDoc(text: String): Unit = {
       // analyze + per-doc tf directly into the segment inversion; when term
       // vectors are on, also track this doc's own term map for the sidecar
       var pos = -1
@@ -333,6 +325,24 @@ object IndexBuilder {
         writer.addDocVector(localDoc, terms, freqs, positions)
       }
       writer.addDocLength(localDoc, len)
+    }
+    while (it.hasNext) {
+      val (seg, url, text) = it.next()
+      if (seg != curSeg) {
+        flushSegment()
+        curSeg = seg
+        val first = seg.toLong * docsPerSegment
+        docCount = math.min(docsPerSegment.toLong, numDocs - first).toInt
+        lead = if (seg == 0) 0L else first - starts(seg - 1)
+        localDoc = 0
+        writer = new SegmentWriter(cfg.indexDir, segIdOffset + seg, docIdOffset + first, docCount,
+          cfg.analyzer, storePositions, storeVectors, storePayloads)
+        inv = new java.util.HashMap[String, TermBuf]()
+      }
+      if (lead > 0) lead -= 1 // numbered by an earlier segment
+      else if (localDoc == docCount) // numbered by the next segment
+        require(url == lastUrl, s"segment ${segIdOffset + seg} got more than $docCount docs")
+      else { lastUrl = url; indexDoc(text); localDoc += 1 }
     }
     flushSegment()
     metas.iterator

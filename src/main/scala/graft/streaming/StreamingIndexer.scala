@@ -11,9 +11,11 @@ import graft.index._
   * reader (IndexWriter::getReader, /root/reference/src/core/index/IndexWriter.cpp:275-298;
   * SURVEY.md §2.10).
   *
-  * Append semantics: docIDs continue from the last snapshot's maxDoc; each
-  * batch is url-sorted internally (per-batch rank) and starts fresh
-  * segments. Exactly-once: the snapshot records the last applied batch id —
+  * Append semantics: docIDs continue from the last snapshot's maxDoc, and
+  * each batch starts fresh segments. Within a batch, docIds follow the
+  * build's rule (`IndexBuilder.writeSegments`): rank in (url, text) order,
+  * code-point order with nulls first, so duplicate urls get the same docIds
+  * at any input partitioning. Exactly-once: the snapshot records the last applied batch id —
   * a replayed batch (after a crash between segment publish and snapshot) is
   * re-applied idempotently over the same segment ids/docBase, and queries
   * only ever see snapshotted segments. The watermark lives in the commit
@@ -30,7 +32,6 @@ object StreamingIndexer {
       docsPerSegment: Int = IndexConfig.DefaultDocsPerSegment,
       storePositions: Boolean = true, batchId: Long = -1L,
       delGenOverride: Option[Int] = None): IndexMeta = {
-    import spark.implicits._
     new java.io.File(indexDir).mkdirs()
 
     val prior = IndexMetaIO.readLatestSnapshot(indexDir)
@@ -39,27 +40,13 @@ object StreamingIndexer {
     val base = IndexMeta(analyzer, storePositions,
       prior.fold(Seq.empty[SegmentMeta])(_.meta.segments)).requireUniform()
 
-    val sortedBase = batch.select($"url", $"text").as[(String, String)]
-      .orderBy($"url").rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    try {
-      val newDocs = sortedBase.count()
-      // an empty batch commits only the deletes of an update
-      if (newDocs == 0 && delGenOverride.isEmpty) return base
-      val numSegments = ((newDocs + docsPerSegment - 1) / docsPerSegment).toInt
-      val segOff = base.nextSegId
-      val docOff = base.nextDocId
-      val keyed = sortedBase.zipWithIndex()
-        .map { case ((_, text), rank) =>
-          ((segOff + (rank / docsPerSegment).toInt, docOff + rank), text)
-        }
-      val metas =
-        if (newDocs == 0) Nil
-        else IndexBuilder.writeSegments(keyed, numSegments, newDocs,
-          IndexConfig(indexDir, analyzer, docsPerSegment, storePositions), segOff, docOff)
-      IndexMetaIO.commit(indexDir, base.copy(segments = (base.segments ++ metas).sortBy(_.segId)),
-        delGen = delGenOverride, streamBatch = Some(batchId).filter(_ >= 0)).meta
-    } finally sortedBase.unpersist()
+    val (newDocs, metas) = IndexBuilder.writeSegments(batch,
+      IndexConfig(indexDir, analyzer, docsPerSegment, storePositions, writeDocMap = false),
+      base.nextSegId, base.nextDocId)
+    // an empty batch commits only the deletes of an update
+    if (newDocs == 0 && delGenOverride.isEmpty) return base
+    IndexMetaIO.commit(indexDir, base.copy(segments = (base.segments ++ metas).sortBy(_.segId)),
+      delGen = delGenOverride, streamBatch = Some(batchId).filter(_ >= 0)).meta
   }
 
   /** Atomic update: tombstone every existing doc matching `deleteQ`, then

@@ -17,8 +17,13 @@ object Demo {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    val root = java.nio.file.Files.createTempDirectory("graft-demo").toFile // holds every index
+    try run(spark, root) finally { graft.EngineQueries.rm(root); spark.stop() }
+  }
+
+  private def run(spark: SparkSession, root: java.io.File): Unit = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-demo").toString
+    val dir = new java.io.File(root, "index").getPath
 
     // 1. build an index over the driver's documents table
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -110,8 +115,7 @@ object Demo {
 
     // cross-index search: this index + a tiny second index, combined stats
     locally {
-      import spark.implicits._
-      val dir2 = java.nio.file.Files.createTempDirectory("graft-demo-idx2").toString
+      val dir2 = new java.io.File(root, "idx2").getPath
       graft.index.IndexBuilder.build(spark,
         Seq(("zz-x1", "window into a second index"),
           ("zz-x2", "merge of two worlds")).toDF("url", "text"),
@@ -174,7 +178,7 @@ object Demo {
         "near-dedup" -> kept2, "decontaminated" -> kept3, "sampled" -> sampled)
       println("[demo] curation chain: " +
         stages.map { case (n, df) => s"$n=${df.count()}" }.mkString(" -> "))
-      val curDir = java.nio.file.Files.createTempDirectory("graft-demo-cur").toString
+      val curDir = new java.io.File(root, "cur").getPath
       IndexBuilder.build(spark,
         sampled.select(format_string("%012d", col("doc_id")).as("url"), col("text")),
         IndexConfig(curDir, analyzer = "whitespace", docsPerSegment = 64, writeDocMap = false))
@@ -192,6 +196,5 @@ object Demo {
     catch { case e: IllegalStateException => println("[demo] probe missing index: " + e.getMessage) }
     println("[demo] probe k=0: " +
       new IndexSearcher(spark, dir).search(QueryParser.parse("batch", WhitespaceAnalyzer), 0, BM25()).length)
-    spark.stop()
   }
 }

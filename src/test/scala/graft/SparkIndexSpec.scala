@@ -10,6 +10,7 @@ import graft.corpus.SyntheticCorpus
 import graft.index._
 import graft.score.BM25
 import graft.search._
+import graft.streaming.StreamingIndexer
 
 class SparkIndexSpec extends AnyFunSuite with TempDirs {
 
@@ -151,32 +152,40 @@ class SparkIndexSpec extends AnyFunSuite with TempDirs {
     assert(df("common") == texts.size && df("onlyhere") == 1)
 
     // job shape: the df job and the scoring job, the df job one stage
-    val group = "graft-search-shape"
-    val stagesPerJob = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val stagesPerJob = jobsOf {
+      searcher.searchBatch(Seq("a" -> BoolQ(should = Seq(TermQ("common"), TermQ("w3"))),
+        "b" -> TermQ("onlyhere")), 5, BM25())
+    }.map(_.size)
+    assert(stagesPerJob == Seq(1, 1), s"stages per job: $stagesPerJob")
+  }
+
+  /** The jobs `f` runs, each as the names of its stages, seen by a
+    * SparkListener. */
+  private def jobsOf(f: => Unit): Seq[Seq[String]] = {
+    val group = "graft-job-shape"
+    val jobs = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         if (e.properties != null &&
             e.properties.getProperty("spark.jobGroup.id") == group)
-          stagesPerJob.synchronized { stagesPerJob += e.stageInfos.size }
+          jobs.synchronized { jobs += e.stageInfos.map(_.name) }
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "searchBatch job shape")
-      searcher.searchBatch(Seq("a" -> BoolQ(should = Seq(TermQ("common"), TermQ("w3"))),
-        "b" -> TermQ("onlyhere")), 5, BM25())
-      sc.clearJobGroup()
+      sc.setJobGroup(group, "job shape")
+      try f finally sc.clearJobGroup()
       org.apache.spark.ListenerBusDrain(sc)
     } finally sc.removeSparkListener(listener)
-    assert(stagesPerJob.toSeq == Seq(1, 1), s"stages per job: $stagesPerJob")
+    jobs.toSeq
   }
 
   test("build output is byte-identical across partitionings and to LocalIndex") {
     val d4 = tmpDir(); val d8 = tmpDir(); val dl = tmpDir()
-    IndexBuilder.build(spark, corpus, IndexConfig(d4, docsPerSegment = 64,
-      buildPartitions = 2, writeDocMap = false))
-    IndexBuilder.build(spark, corpus, IndexConfig(d8, docsPerSegment = 64,
-      buildPartitions = 8, writeDocMap = false))
+    IndexBuilder.build(spark, corpus.repartition(1), IndexConfig(d4, docsPerSegment = 64,
+      writeDocMap = false))
+    IndexBuilder.build(spark, corpus.repartition(7), IndexConfig(d8, docsPerSegment = 64,
+      writeDocMap = false))
     LocalIndex.build(dl, rankedDocs, "standard", docsPerSegment = 64)
     val h4 = fileHashes(d4)
     val h8 = fileHashes(d8)
@@ -286,5 +295,81 @@ class SparkIndexSpec extends AnyFunSuite with TempDirs {
       assert(h.keys.exists(_.endsWith("vectors.bin")) == vectors, h.keys)
       assert(h.nonEmpty && h == fileHashes(local), s"vectors=$vectors")
     }
+  }
+
+  /** The reference for rows that share urls: [[LocalIndex.build]] over the
+    * rows in (url, text) order as Spark's `orderBy` puts them, nulls first. */
+  private def localOfSorted(rows: Seq[(String, String)], docsPerSegment: Int): String = {
+    import spark.implicits._
+    val sorted = rows.toDF("url", "text").orderBy("url", "text")
+      .as[(String, String)].collect().toSeq
+    val dir = tmpDir()
+    LocalIndex.build(dir, sorted.zipWithIndex.map { case ((_, t), i) => (i.toLong, t) },
+      "standard", docsPerSegment = docsPerSegment)
+    dir
+  }
+
+  /** Builds `rows` under two input partitionings with [[IndexBuilder.build]]
+    * and with `StreamingIndexer.appendBatch` into a fresh dir; checks every
+    * index is byte-identical to `reference` and counts every doc and token.
+    * Returns the index dirs. */
+  private def buildAndAppendMatch(rows: Seq[(String, String)], docsPerSegment: Int,
+      reference: String): Seq[String] = {
+    import spark.implicits._
+    val analyzer = graft.analysis.Analyzer.byName("standard")
+    val tokens = rows.map { case (_, t) => analyzer.analyze(Option(t).getOrElse("")).size }.sum
+    val expected = fileHashes(reference)
+    assert(expected.nonEmpty)
+    for (parts <- Seq(1, 7); append <- Seq(false, true)) yield {
+      val df = rows.toDF("url", "text").repartition(parts)
+      val dir = tmpDir()
+      val meta =
+        if (append) StreamingIndexer.appendBatch(spark, df, dir, docsPerSegment = docsPerSegment)
+        else IndexBuilder.build(spark, df,
+          IndexConfig(dir, docsPerSegment = docsPerSegment, writeDocMap = false)).meta
+      val what = s"${if (append) "appendBatch" else "build"} over $parts partitions"
+      assert(meta.numDocs == rows.size, what)
+      assert(meta.sumDocLength == tokens, what)
+      assert(fileHashes(dir) == expected, what)
+      dir
+    }
+  }
+
+  test("duplicate urls: one docId rule for build and append, at any input partitioning") {
+    // docsPerSegment = 4: "dup" holds ranks 6..14, a run that starts inside
+    // segment 1, fills segment 2 and ends inside segment 3, so it straddles
+    // the boundaries at ranks 8 and 12; two of its copies are identical
+    // rows and one has a null text
+    val dupTexts = Seq("red fish", "blue fish", "one fish", "two fish", "red fish",
+      "old fish", null, "new fish", "sad fish")
+    val rows = (0 until 6).map(i => (s"a$i", s"alpha w$i")) ++
+      dupTexts.map(t => ("dup", t)) ++
+      (0 until 5).map(i => (s"z$i", s"zeta w$i"))
+    // scrambled input order, so a tie order that followed the input would show
+    val scrambled = rows.zipWithIndex.sortBy { case (_, i) => (i * 7) % rows.size }.map(_._1)
+    val reference = localOfSorted(rows, docsPerSegment = 4)
+    assert(IndexMetaIO.readLatest(reference).get.segments.size == 5)
+    buildAndAppendMatch(scrambled, docsPerSegment = 4, reference)
+  }
+
+  test("a null url sorts first and is indexed alike by build and append") {
+    val rows = Seq(("b", "beta words"), (null, "nullurl words"), ("a", "alpha words"))
+    val reference = localOfSorted(rows, docsPerSegment = 2)
+    buildAndAppendMatch(rows, docsPerSegment = 2, reference).foreach { dir =>
+      val hits = new IndexSearcher(spark, dir).search(TermQ("nullurl"), 10, BM25())
+      assert(hits.map(_.docId).toSeq == Seq(0L), dir)
+    }
+  }
+
+  test("job shape: build runs <= 5 jobs (<= 4 without the docmap), a one-segment append <= 3") {
+    val withDocMap = jobsOf(IndexBuilder.build(spark, corpus,
+      IndexConfig(tmpDir(), docsPerSegment = 64)))
+    val noDocMap = jobsOf(IndexBuilder.build(spark, corpus,
+      IndexConfig(tmpDir(), docsPerSegment = 64, writeDocMap = false)))
+    val append = jobsOf(StreamingIndexer.appendBatch(spark, corpus, tmpDir(),
+      docsPerSegment = N))
+    assert(withDocMap.size <= 5, withDocMap.mkString("\n"))
+    assert(noDocMap.size <= 4, noDocMap.mkString("\n"))
+    assert(append.size <= 3, append.mkString("\n"))
   }
 }
