@@ -39,10 +39,10 @@ object EngineQueries {
     * single parameterized builder behind [[searcher]] / [[payloadSearcher]]
     * (their expectedPerSeg / staleness / rm-rebuild plumbing used to be
     * duplicated). A committed index is reused only when its format version,
-    * segment layout, and payload/docmap requirements all match — anything
-    * stale is wiped and rebuilt. */
+    * segment layout, and payload/stored-url requirements all match —
+    * anything stale is wiped and rebuilt. */
   private def cachedIndex(spark: SparkSession, sfDir: String, tag: String,
-      analyzer: String, payloads: Boolean, docMap: Boolean)(
+      analyzer: String, payloads: Boolean, urls: Boolean)(
       corpusOf: DataFrame => DataFrame): IndexSearcher = {
     val key = tag + ":" + sfDir
     val dir = new java.io.File(sys.props("java.io.tmpdir"),
@@ -55,10 +55,10 @@ object EngineQueries {
           .filter { m => // stale segment layout → rebuild
             m.segments.nonEmpty &&
               (!payloads || m.segments.forall(_.hasPayloads)) &&
+              (!urls || m.segments.forall(_.hasUrls)) &&
               m.segments.map(_.docCount).max ==
                 math.min(expectedPerSeg(m.numDocs).toLong, m.numDocs)
           }
-          .filter(_ => !docMap || new java.io.File(dir, "docmap/_SUCCESS").exists())
         if (committed.isEmpty) {
           if (new java.io.File(dir).exists()) rm(new java.io.File(dir))
           val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -71,7 +71,7 @@ object EngineQueries {
           val perSeg = expectedPerSeg(corpus.count())
           IndexBuilder.build(spark, corpus,
             IndexConfig(dir, analyzer = analyzer, docsPerSegment = perSeg,
-              storePositions = true, writeDocMap = docMap, storePayloads = payloads))
+              storePositions = true, writeDocMap = urls, storePayloads = payloads))
         }
         val s = new IndexSearcher(spark, dir)
         searchers.put(key, (IndexMetaIO.latestGen(dir).getOrElse(0), s))
@@ -82,7 +82,7 @@ object EngineQueries {
   /** docIDs: the builder assigns docId = rank of url; urls are zero-padded
     * doc_ids, so engine docId == documents.doc_id. */
   def searcher(spark: SparkSession, sfDir: String): IndexSearcher =
-    cachedIndex(spark, sfDir, "", "whitespace", payloads = false, docMap = true)(
+    cachedIndex(spark, sfDir, "", "whitespace", payloads = false, urls = true)(
       _.select(format_string("%012d", col("doc_id")).as("url"), col("text")))
 
   /** Payload-carrying twin of [[searcher]]: the same documents corpus with
@@ -90,7 +90,7 @@ object EngineQueries {
     * through the delimited-payload analyzer. Token positions are
     * SQL-recoverable, so payload scoring gets a real DuckDB oracle. */
   def payloadSearcher(spark: SparkSession, sfDir: String): IndexSearcher =
-    cachedIndex(spark, sfDir, "pay-", "delimited", payloads = true, docMap = false) { docs =>
+    cachedIndex(spark, sfDir, "pay-", "delimited", payloads = true, urls = false) { docs =>
       val toks = filter(split(col("text"), " "), t => t =!= "")
       docs.select(
         format_string("%012d", col("doc_id")).as("url"),
@@ -103,21 +103,24 @@ object EngineQueries {
     toDF(spark, payloadSearcher(spark, sfDir)
       .search(q, k, graft.score.PayloadDecodingSimilarity()))
 
-  /** Stored-field fetch: hits joined back to the (docId, url) map — the
-    * "source table IS the doc store" pattern (SURVEY.md §2.1 stored-fields
-    * scan = broadcast lookup join). */
+  /** Stored-field fetch: the top-k hits with the url each hit's segment
+    * stores (SURVEY.md §1 stored fields; one fetch job over the ≤ k
+    * segments the hits fall in). */
   def topKWithUrls(spark: SparkSession, sfDir: String, q: Query, k: Int): DataFrame = {
     val s = searcher(spark, sfDir)
-    val hits = toDF(spark, s.search(q, k, BM25Exact()))
-    val docmap = spark.read.parquet(s.indexDir + "/docmap")
-    hits.join(broadcast(docmap), hits("doc_id") === docmap("docId"))
-      .select(hits("doc_id"), docmap("url"), hits("score"))
+    val hits = s.search(q, k, BM25Exact())
+    import spark.implicits._
+    hits.zip(s.urls(hits.map(_.docId).toSeq))
+      .map { case (h, url) => (h.docId, url, round4(h.score)) }
+      .toSeq.toDF("doc_id", "url", "score")
   }
+
+  private def round4(score: Double): Double =
+    BigDecimal(score).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   private def toDF(spark: SparkSession, hits: Array[graft.search.ScoredDoc]): DataFrame = {
     import spark.implicits._
-    hits.map(h => (h.docId, BigDecimal(h.score).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble))
-      .toSeq.toDF("doc_id", "score")
+    hits.map(h => (h.docId, round4(h.score))).toSeq.toDF("doc_id", "score")
   }
 
   def topK(spark: SparkSession, sfDir: String, q: Query, k: Int,
@@ -218,31 +221,27 @@ object EngineQueries {
     * parity into TWO separately-built indexes, searched through
     * [[graft.search.MultiIndexSearcher]] (summed df, combined corpus
     * stats, starts[] docId remap), and the offset docIds are mapped back
-    * to global doc_ids through each sub-index's docmap. The result must
-    * hash-match the same BM25 score CTE as the single-index `bm25_topk`
+    * to global doc_ids through the urls each sub-index stores. The result
+    * must hash-match the same BM25 score CTE as the single-index `bm25_topk`
     * — possible only if cross-index df/stats combination is exact. (The
     * oracle's tie-break clause is `doc_id % 2, doc_id` — the merged-docId
     * order of the reference's docBase-offset MultiSearcher merge — so an
     * exact score tie at the k boundary selects identically.) */
   def multiIndexTopK(spark: SparkSession, sfDir: String, q: Query, k: Int): DataFrame = {
     val subs = Seq(0, 1).map { p =>
-      cachedIndex(spark, sfDir, s"mi$p-", "whitespace", payloads = false, docMap = true)(
+      cachedIndex(spark, sfDir, s"mi$p-", "whitespace", payloads = false, urls = true)(
         _.filter(col("doc_id") % 2 === p)
           .select(format_string("%012d", col("doc_id")).as("url"), col("text")))
     }
     val multi = new MultiIndexSearcher(subs)
     val hits = multi.search(q, k, BM25Exact())
+    // starts[]-offset docId → the sub-index's url, a zero-padded doc_id
+    val docIds = subs.zip(multi.starts).flatMap { case (s, off) =>
+      val mine = hits.map(_.docId).filter(d => d >= off && d < off + s.meta.numDocs)
+      mine.zip(s.urls(mine.map(_ - off).toSeq).map(_.get.toLong))
+    }.toMap
     import spark.implicits._
-    val hitDf = hits.map(h => (h.docId,
-      BigDecimal(h.score).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble))
-      .toSeq.toDF("mdoc", "score")
-    // starts[]-offset docId → global doc_id via the sub-index docmaps
-    // (urls are zero-padded doc_ids); k rows join a broadcastable map
-    val dm = subs.zip(multi.starts).map { case (s, off) =>
-      spark.read.parquet(s.indexDir + "/docmap")
-        .select((col("docId") + off).as("mdoc"), col("url").cast("long").as("doc_id"))
-    }.reduce(_ union _)
-    hitDf.join(broadcast(dm), "mdoc").select(col("doc_id"), col("score"))
+    hits.map(h => (docIds(h.docId), round4(h.score))).toSeq.toDF("doc_id", "score")
   }
 
   /** Atomic update-then-requery — the reference's core mutation,

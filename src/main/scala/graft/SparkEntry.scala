@@ -280,7 +280,8 @@ object SparkEntry {
     "parsed_field_match" -> ((s, dir) =>
       EngineQueries.parsedFieldMatch(s, dir, "lang:en -source:src0 batch")),
 
-    // stored-field fetch: hits joined to the docmap (url = padded doc_id)
+    // stored-field fetch: hits with the urls their segments store (url =
+    // padded doc_id)
     "doc_fetch" -> ((s, dir) =>
       EngineQueries.topKWithUrls(s, dir,
         BoolQ(should = Seq(TermQ("window"), TermQ("spark"), TermQ("merge"))), 10)),

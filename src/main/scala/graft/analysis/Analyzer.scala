@@ -246,11 +246,6 @@ object SnowballStemmers {
   def apply(name: String): String => String =
     byName.getOrElse(name.toLowerCase(java.util.Locale.ROOT),
       throw new IllegalArgumentException(s"language not available for stemming: $name"))
-
-  def snowballFilter(name: String)(in: Iterator[Token]): Iterator[Token] = {
-    val stem = apply(name)
-    in.map(t => t.copy(term = stem(t.term)))
-  }
 }
 
 /** StandardAnalyzer chain + a Snowball stemmer picked by language name

@@ -83,6 +83,9 @@ final class ByteReader(private val bb: ByteBuffer) {
     val out = new Array[Byte](n); bb.get(out); out
   }
 
+  /** Fill `dst` from index `off` to its end. */
+  def readInto(dst: Array[Byte], off: Int): Unit = bb.get(dst, off, dst.length - off)
+
   def readVInt(): Int = {
     var b = bb.get()
     var v = b & 0x7f
@@ -113,8 +116,4 @@ final class ByteReader(private val bb: ByteBuffer) {
     new String(bs, java.nio.charset.StandardCharsets.UTF_8)
   }
 
-  /** Independent reader sharing the same underlying bytes. */
-  def duplicateAt(p: Int): ByteReader = {
-    val d = bb.duplicate(); d.position(p); new ByteReader(d)
-  }
 }

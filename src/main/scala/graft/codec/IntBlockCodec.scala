@@ -37,8 +37,6 @@ object IntBlockCodec {
     if (accBits > 0) out.writeByte((acc & 0xff).toByte)
   }
 
-  def packedBytes(n: Int, w: Int): Int = (n * w + 7) / 8
-
   /** Decode `n` values of width `w` into `out[0..n)`. */
   def unpack(in: ByteReader, n: Int, w: Int, out: Array[Int]): Unit = {
     var acc = 0L
@@ -79,7 +77,4 @@ object IntBlockCodec {
     val w = in.readByte().toInt
     unpack(in, n, w, out)
   }
-
-  def encodedBlockBytes(vals: Array[Int], n: Int): Int =
-    1 + packedBytes(n, maxBits(vals, n))
 }

@@ -13,7 +13,8 @@ final case class IndexConfig(
       * docs/segment over thousands of executors; tests shrink it. */
     docsPerSegment: Int = IndexConfig.DefaultDocsPerSegment,
     storePositions: Boolean = true,
-    /** Also persist a (docId, url) map table next to the index. */
+    /** Store each doc's url in its segment (urls.bin/urls.idx), fetched by
+      * `IndexSearcher.urls`. */
     writeDocMap: Boolean = true,
     /** Store per-doc term vectors (doc-ordered sidecar). */
     storeTermVectors: Boolean = false,
@@ -48,7 +49,9 @@ final case class BuildReport(
   *     place every url. Rank-identical output across cluster sizes requires
   *     ids that do not depend on partitioning; a total order + rank is the
   *     only assignment with that property (SURVEY.md §7.4-2). The corpus
-  *     text is never cached and crosses the network once.
+  *     text is never cached and crosses the network once. Two jobs read
+  *     the sorted urls; the segments store them (step 4), so no job writes
+  *     a separate docId → url table.
   *  2. resume filter: docs of segments inside a committed segment's
   *     [docBase, docBase+docCount) range are dropped before the shuffle
   *     (range, not segId, so compacted segments resume correctly — north
@@ -63,7 +66,8 @@ final case class BuildReport(
   *     salt — SURVEY.md §4.4).
   *  4. each task analyzes and inverts its segments one at a time in RAM
   *     (the reference's DocumentsWriter; tf needs no shuffle — SURVEY.md
-  *     §2.4) and streams term-sorted postings into a SegmentWriter; atomic
+  *     §2.4) and streams term-sorted postings into a SegmentWriter, with
+  *     each doc's url in docId order when `writeDocMap` is set; atomic
   *     per-segment publish = per-partition lineage commit; one commit
   *     snapshot at the end.
   */
@@ -89,7 +93,8 @@ object IndexBuilder {
           s"(current ${IndexMetaIO.FormatVersion}); delete it and rebuild")
     }
     val committed = IndexMetaIO.committedSegments(cfg.indexDir)
-      .filter(m => m.analyzer == cfg.analyzer && m.hasPositions == cfg.storePositions)
+      .filter(m => m.analyzer == cfg.analyzer && m.hasPositions == cfg.storePositions &&
+        m.hasUrls == cfg.writeDocMap)
     // Resume skips by committed DOC RANGE, not segId: compaction produces
     // fresh segIds covering several original ranges, and a segId-based skip
     // would rebuild those docs alongside the merged segment (overlapping
@@ -106,10 +111,10 @@ object IndexBuilder {
     * `StreamingIndexer.appendBatch`: each doc (`url`, `text`) gets docId
     * `docIdOffset` + its rank in [[DocOrder]]; segment k (ranks from
     * k·docsPerSegment) becomes segId `segIdOffset` + k unless its first docId
-    * lies in a `committed` [start, end) range. Jobs: range sample, rank
-    * count, boundary scan (if > 1 segment), docmap (if `cfg.writeDocMap`),
-    * segments over min(#segments, 4 × defaultParallelism) tasks. Returns
-    * the doc count and the written segments. */
+    * lies in a `committed` [start, end) range; its urls are stored iff
+    * `cfg.writeDocMap`. Jobs: range sample, rank count, boundary scan (if
+    * > 1 segment), segments over min(#segments, 4 × defaultParallelism)
+    * tasks. Returns the doc count and the written segments. */
   private[graft] def writeSegments(
       docs: DataFrame,
       cfg: IndexConfig,
@@ -154,16 +159,6 @@ object IndexBuilder {
           .toArray
       }, boundaryParts).flatten
 
-    if (cfg.writeDocMap) {
-      val docMapPath = new java.io.File(cfg.indexDir, "docmap").getPath
-      if (!new java.io.File(docMapPath, "_SUCCESS").exists()) {
-        sortedUrls.mapPartitionsWithIndex { (p, it) =>
-          var id = docIdOffset + offsets(p) - 1
-          it.map { url => id += 1; (id, url) }
-        }.coalesce(math.max(1, (numDocs / IndexConfig.DefaultDocsPerSegment).toInt)) // ~1M urls a file
-          .toDF("docId", "url").write.mode("overwrite").parquet(docMapPath)
-      }
-    }
     if (numDocs == 0) return (0L, Nil)
 
     // route each doc to the uncommitted segments its url's run of copies
@@ -233,6 +228,7 @@ object IndexBuilder {
     val storePositions = cfg.storePositions
     val storeVectors = cfg.storeTermVectors
     val storePayloads = cfg.storePayloads
+    val storeUrls = cfg.writeDocMap
     val analyzer = Analyzer.byName(cfg.analyzer)
     val metas = scala.collection.mutable.ArrayBuffer.empty[SegmentMeta]
 
@@ -336,13 +332,18 @@ object IndexBuilder {
         lead = if (seg == 0) 0L else first - starts(seg - 1)
         localDoc = 0
         writer = new SegmentWriter(cfg.indexDir, segIdOffset + seg, docIdOffset + first, docCount,
-          cfg.analyzer, storePositions, storeVectors, storePayloads)
+          cfg.analyzer, storePositions, storeVectors, storePayloads, storeUrls)
         inv = new java.util.HashMap[String, TermBuf]()
       }
       if (lead > 0) lead -= 1 // numbered by an earlier segment
       else if (localDoc == docCount) // numbered by the next segment
         require(url == lastUrl, s"segment ${segIdOffset + seg} got more than $docCount docs")
-      else { lastUrl = url; indexDoc(text); localDoc += 1 }
+      else {
+        lastUrl = url
+        if (storeUrls) writer.addUrl(localDoc, url)
+        indexDoc(text)
+        localDoc += 1
+      }
     }
     flushSegment()
     metas.iterator

@@ -85,6 +85,7 @@ object IndexMetaIO {
     w.writeByte(if (m.hasPositions) 1 else 0)
     w.writeByte(if (m.hasVectors) 1 else 0)
     w.writeByte(if (m.hasPayloads) 1 else 0)
+    w.writeByte(if (m.hasUrls) 1 else 0)
     w.toArray
   }
 
@@ -92,6 +93,7 @@ object IndexMetaIO {
     val r = new ByteReader(bytes)
     SegmentMeta(r.readVInt(), r.readVLong(), r.readVInt(), r.readVLong(),
       r.readVInt(), r.readVLong(), r.readVLong(), r.readString(), r.readByte() == 1,
+      r.remaining > 0 && r.readByte() == 1,
       r.remaining > 0 && r.readByte() == 1,
       r.remaining > 0 && r.readByte() == 1)
   }
@@ -109,7 +111,8 @@ object IndexMetaIO {
       s""""sumDocLength":${m.sumDocLength},"termCount":${m.termCount},""" +
       s""""postingCount":${m.postingCount},"bytes":${m.bytes},""" +
       s""""analyzer":${jsonStr(m.analyzer)},"hasPositions":${m.hasPositions},""" +
-      s""""hasVectors":${m.hasVectors},"hasPayloads":${m.hasPayloads}}"""
+      s""""hasVectors":${m.hasVectors},"hasPayloads":${m.hasPayloads},""" +
+      s""""hasUrls":${m.hasUrls}}"""
 
   /** The one commit path: writes the next generation holding `meta`, with
     * `delGen` and `streamBatch` where the writer sets them and the latest

@@ -62,6 +62,7 @@ object Maintenance {
           if (bits.length > m.docCount) problems += s"del bit beyond docCount: ${bits.length}"
         }
         if (postingCount != m.postingCount) problems += s"postingCount $postingCount != ${m.postingCount}"
+        if (m.hasUrls) problems ++= r.checkUrls()
         if (m.hasVectors) {
           // vector sidecar: every doc decodes; freqs sum to the doc length
           var d1 = 0
@@ -113,13 +114,15 @@ object Maintenance {
     val hasPos = readers.head.meta.hasPositions
     val hasVecs = readers.forall(_.meta.hasVectors)
     val hasPays = readers.forall(_.meta.hasPayloads)
+    val hasUrls = readers.forall(_.meta.hasUrls)
     val writer = new SegmentWriter(indexDir, newSegId, newBase, docCount, analyzer,
-      hasPos, hasVecs, hasPays)
+      hasPos, hasVecs, hasPays, hasUrls)
 
-    // norms/doclens (and term vectors, if all inputs carry them)
+    // norms/doclens (and term vectors and urls, if all inputs carry them)
     // concatenate. Tombstoned docs keep their id SLOT (docIds are stable
-    // url ranks): postings, doclens and vectors are reclaimed below, and the
-    // dead slots are CARRIED FORWARD into the merged segment's del bitset —
+    // url ranks) and their url: postings, doclens and vectors are reclaimed
+    // below, and the dead slots are CARRIED FORWARD into the merged
+    // segment's del bitset —
     // MatchAll/value-source scorers iterate 0..docCount, so dropping the
     // bitset would resurrect deleted docs in every non-postings-driven
     // result (the reference removes deleted docs entirely at merge; with
@@ -127,9 +130,11 @@ object Maintenance {
     val carried = new java.util.BitSet(docCount)
     var off = 0
     readers.foreach { r =>
+      val urls = if (hasUrls) r.urlsFrom(0) else null
       var i = 0
       while (i < r.meta.docCount) {
         val dead = r.deleted(i)
+        if (hasUrls) writer.addUrl(off + i, urls.next().orNull)
         if (dead) carried.set(off + i)
         writer.addDocLength(off + i, if (dead) 0 else r.doclens(i))
         if (hasVecs) {

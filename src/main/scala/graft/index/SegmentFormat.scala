@@ -26,7 +26,8 @@ final case class SegmentMeta(
     analyzer: String,
     hasPositions: Boolean,
     hasVectors: Boolean = false,
-    hasPayloads: Boolean = false) extends Serializable
+    hasPayloads: Boolean = false,
+    hasUrls: Boolean = false) extends Serializable
 
 /** One term-dictionary entry (df + term-level max-impact metadata +
   * postings location). */
@@ -135,6 +136,9 @@ object SegmentFormat {
     * entries live contiguously after the term's blocks, so one level
     * binary-searches in O(log)). */
   val SkipInterval = 16
+  /** Every UrlIndexInterval-th url restarts front coding and is recorded
+    * in urls.idx, so a fetch decodes at most this many urls. */
+  val UrlIndexInterval = 64
   val NoMoreDocs: Int = Int.MaxValue
 
   def segDirName(segId: Int): String = f"seg-$segId%05d"
@@ -155,6 +159,10 @@ object SegmentFormat {
   *                 per-block (lastDoc, maxFreq, minDl) block-max metadata
   *                 enabling Block-Max WAND (Ding & Suel, WSDM 2011)
   *
+  * and, when asked to, the term-vector sidecar (vectors.bin/.idx) and each
+  * doc's url (urls.bin/.idx, the reference's stored fields — FieldsWriter's
+  * .fdt/.fdx — for the one stored field graft has).
+  *
   * Write is atomic: files land in an attempt-unique `<dir>.tmp.<nonce>` and
   * are renamed into place in `finish()` — the crash-safe commit unit of the
   * resumable build (analog of the reference's write-once segments_N,
@@ -174,7 +182,8 @@ final class SegmentWriter(
     analyzerName: String,
     storePositions: Boolean,
     storeVectors: Boolean = false,
-    storePayloads: Boolean = false) {
+    storePayloads: Boolean = false,
+    storeUrls: Boolean = false) {
 
   require(!storePayloads || storePositions, "payloads require positions")
 
@@ -204,6 +213,14 @@ final class SegmentWriter(
   private val vecOut = if (storeVectors) new ByteWriter(1 << 16) else null
   private val vecOffsets = if (storeVectors) new Array[Long](docCount + 1) else null
   private var vecNextDoc = 0
+  // urls, front-coded on their UTF-8 bytes like the term dict: each entry
+  // is VInt(shared prefix + 1), VInt(suffix length), suffix bytes; VInt 0
+  // is a null url. Every UrlIndexInterval-th doc restarts the prefix and
+  // urls.idx holds its offset (fixed-width, for random access)
+  private val urlsOut = if (storeUrls) new ByteWriter(1 << 12) else null
+  private val urlIdxOut = if (storeUrls) new ByteWriter(8 * (docCount / UrlIndexInterval + 1)) else null
+  private var urlNextDoc = 0
+  private var prevUrl: Array[Byte] = null
 
   private var termCount = 0
   private var postingCount = 0L
@@ -264,6 +281,33 @@ final class SegmentWriter(
       i += 1
     }
     vecNextDoc = localDoc + 1
+  }
+
+  /** Doc `localDoc`'s url (may be null); called once per doc, in localDoc
+    * order. */
+  def addUrl(localDoc: Int, url: String): Unit = {
+    require(storeUrls, "writer built without storeUrls")
+    require(localDoc == urlNextDoc, s"urls out of order: doc $localDoc, expected $urlNextDoc")
+    if (localDoc % UrlIndexInterval == 0) {
+      urlIdxOut.writeLongBE(urlsOut.size.toLong)
+      prevUrl = null
+    }
+    if (url == null) {
+      urlsOut.writeVInt(0)
+      prevUrl = null
+    } else {
+      val bs = url.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      var p = 0
+      if (prevUrl != null) {
+        val max = math.min(prevUrl.length, bs.length)
+        while (p < max && prevUrl(p) == bs(p)) p += 1
+      }
+      urlsOut.writeVInt(p + 1)
+      urlsOut.writeVInt(bs.length - p)
+      urlsOut.writeBytes(bs, p, bs.length - p)
+      prevUrl = bs
+    }
+    urlNextDoc += 1
   }
 
   /** Terms must arrive in ascending order; docs ascending within a term. */
@@ -455,10 +499,15 @@ final class SegmentWriter(
       while (d <= docCount) { vi.writeLongBE(vecOffsets(d)); d += 1 }
       writeFile(new File(tmpDir, "vectors.idx"), vi.toArray)
     }
+    if (storeUrls) {
+      require(urlNextDoc == docCount, s"segment $segId got $urlNextDoc urls for $docCount docs")
+      writeFile(new File(tmpDir, "urls.bin"), urlsOut.toArray)
+      writeFile(new File(tmpDir, "urls.idx"), urlIdxOut.toArray)
+    }
 
     val bytes = tmpDir.listFiles().map(_.length()).sum
     val meta = SegmentMeta(segId, docBase, docCount, sumDl, termCount,
-      postingCount, bytes, analyzerName, storePositions, storeVectors, storePayloads)
+      postingCount, bytes, analyzerName, storePositions, storeVectors, storePayloads, storeUrls)
     writeFile(new File(tmpDir, "meta.bin"), IndexMetaIO.encodeSegment(meta))
     // carried del bitset rides inside the same atomic rename (after meta.bin
     // so the byte count stays the segment-proper size)
@@ -598,6 +647,50 @@ final class SegmentReader(val dir: File, delGenBound: Int = Int.MaxValue) {
   private lazy val vectorsIdxBuf: java.nio.ByteBuffer =
     if (meta.hasVectors) mmap(new File(dir, "vectors.idx")) else null
 
+  /** Doc `localDoc`'s url, None for a null url: seek to the restart point
+    * at or before it through urls.idx, then decode forward. The url files
+    * are mapped on first use, so searches never open them. Fails on a
+    * segment that stores no urls. */
+  def url(localDoc: Int): Option[String] = urlsFrom(localDoc).next()
+
+  /** The urls of docs `localDoc` until the segment's last doc, in order. */
+  def urlsFrom(localDoc: Int): Iterator[Option[String]] = {
+    require(meta.hasUrls, s"segment ${meta.segId} stores no urls")
+    require(localDoc >= 0 && localDoc < meta.docCount, s"doc $localDoc out of range")
+    val start = localDoc / UrlIndexInterval
+    val idx = new ByteReader(urlsIdxBuf.duplicate())
+    idx.seek(start * 8)
+    val r = new ByteReader(urlsBuf.duplicate())
+    r.seek(idx.readLongBE().toInt)
+    new UrlIterator(r, meta.docCount - start * UrlIndexInterval)
+      .drop(localDoc - start * UrlIndexInterval)
+  }
+
+  /** Problems with the url files: urls.bin must decode to exactly docCount
+    * urls, and each urls.idx entry must be the offset of its restart
+    * point. */
+  private[index] def checkUrls(): Seq[String] = {
+    val idx = new ByteReader(urlsIdxBuf.duplicate())
+    val restarts = (meta.docCount + UrlIndexInterval - 1) / UrlIndexInterval
+    if (idx.remaining != 8 * restarts)
+      return Seq(s"urls.idx is ${idx.remaining} bytes, expected ${8 * restarts} for $restarts restarts")
+    val r = new ByteReader(urlsBuf.duplicate())
+    val it = new UrlIterator(r, meta.docCount)
+    val problems = Seq.newBuilder[String]
+    var d = 0
+    try while (d < meta.docCount) {
+      if (d % UrlIndexInterval == 0 && idx.readLongBE() != r.pos)
+        problems += s"urls.idx entry ${d / UrlIndexInterval} is not the offset of doc $d"
+      it.next()
+      d += 1
+    } catch { case _: java.nio.BufferUnderflowException => problems += s"urls.bin ends at doc $d" }
+    if (r.remaining > 0) problems += s"urls.bin has ${r.remaining} bytes past the last doc"
+    problems.result()
+  }
+
+  private lazy val urlsBuf: java.nio.ByteBuffer = mmap(new File(dir, "urls.bin"))
+  private lazy val urlsIdxBuf: java.nio.ByteBuffer = mmap(new File(dir, "urls.idx"))
+
   private def mmap(f: File): java.nio.ByteBuffer = {
     val ch = FileChannel.open(f.toPath, StandardOpenOption.READ)
     try {
@@ -721,6 +814,27 @@ final class SegmentReader(val dir: File, delGenBound: Int = Int.MaxValue) {
     new PostingsIterator(
       new ByteReader({ val d = postingsBuf.duplicate(); d.position(ti.postingsOffset.toInt); d }),
       ti.df, meta.hasPositions, needPositions, skipDocs, skipOffs, meta.hasPayloads)
+  }
+}
+
+/** Decodes `n` front-coded urls from a restart point of urls.bin
+  * (layout: [[SegmentWriter.addUrl]]). */
+private final class UrlIterator(r: ByteReader, private var n: Int)
+    extends Iterator[Option[String]] {
+  private var prev = Array.emptyByteArray
+
+  override def hasNext: Boolean = n > 0
+
+  override def next(): Option[String] = {
+    n -= 1
+    val h = r.readVInt()
+    if (h == 0) { prev = Array.emptyByteArray; None }
+    else {
+      val cur = java.util.Arrays.copyOf(prev, h - 1 + r.readVInt())
+      r.readInto(cur, h - 1)
+      prev = cur
+      Some(new String(cur, java.nio.charset.StandardCharsets.UTF_8))
+    }
   }
 }
 

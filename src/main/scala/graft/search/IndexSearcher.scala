@@ -7,7 +7,7 @@ import scala.reflect.ClassTag
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
-import graft.index.{IndexMeta, IndexMetaIO, SegmentFormat, SegmentReader, TermOrder}
+import graft.index.{IndexMeta, IndexMetaIO, SegmentFormat, SegmentMeta, SegmentReader, TermOrder}
 import graft.score.{CorpusStats, Similarity}
 
 /** Per-executor segment reader cache — segments are immutable, so a
@@ -323,26 +323,51 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     * job per doc. The trees are built on the executors, where the segment
     * files live; order follows `docIds`. */
   def explainMany(q0: Query, docIds: Seq[Long], sim: Similarity): Seq[Explanation] = {
-    val bySeg = docIds.distinct.flatMap { docId =>
-      meta.segments.zip(segDirs).collectFirst {
-        case (m, dir) if docId >= m.docBase && docId < m.docBase + m.docCount => dir -> docId
-      }
-    }.groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
+    val bySeg = bySegment(docIds)
     val results: Map[Long, Explanation] =
       if (bySeg.isEmpty) Map.empty
       else {
         val bc = spark.sparkContext.broadcast(prepare(q0))
-        val out = segmentTasks(bySeg).flatMap { case (dir, ids) =>
-          val reader = ReaderCache.get(dir)
-          ids.map(docId =>
-            docId -> bc.value.explain(reader, (docId - reader.meta.docBase).toInt, sim))
-        }.collect().toMap
+        val out = perDoc(bySeg)((reader, local) => bc.value.explain(reader, local, sim))
         bc.destroy()
         out
       }
     docIds.map(id => results.getOrElse(id,
       Explanation(0.0, s"doc $id not in index", matched = false)))
   }
+
+  /** The stored url of each of `docIds`, in order (None for a null url) —
+    * the reference's IndexSearcher::doc for graft's one stored field. One
+    * job over the segments the ids fall in; tombstoned docs keep their url.
+    * Fails on an id outside the index or in a segment that stores no urls. */
+  def urls(docIds: Seq[Long]): Seq[Option[String]] = {
+    val bySeg = bySegment(docIds)
+    bySeg.foreach { case (m, _, _) =>
+      require(m.hasUrls, s"segment ${m.segId} of $indexDir stores no urls")
+    }
+    val found = if (bySeg.isEmpty) Map.empty[Long, Option[String]]
+      else perDoc(bySeg)((reader, local) => reader.url(local))
+    docIds.map(id => found.getOrElse(id,
+      throw new IllegalArgumentException(s"doc $id is not in $indexDir")))
+  }
+
+  /** The distinct `docIds` that fall in a segment, grouped by it as
+    * (segment, reader dir, ids). */
+  private def bySegment(docIds: Seq[Long]): Seq[(SegmentMeta, String, Seq[Long])] =
+    docIds.distinct.flatMap { docId =>
+      meta.segments.zip(segDirs).collectFirst {
+        case (m, dir) if docId >= m.docBase && docId < m.docBase + m.docCount => (m, dir, docId)
+      }
+    }.groupBy(_._2).toSeq.map { case (dir, hits) => (hits.head._1, dir, hits.map(_._3)) }
+
+  /** `f(reader, localDoc)` for every id of `bySeg`, keyed by docId: one
+    * job, its tasks over runs of the touched segments. */
+  private def perDoc[T](bySeg: Seq[(SegmentMeta, String, Seq[Long])])(
+      f: (SegmentReader, Int) => T): Map[Long, T] =
+    segmentTasks(bySeg.map { case (_, dir, ids) => (dir, ids) }).flatMap { case (dir, ids) =>
+      val reader = ReaderCache.get(dir)
+      ids.map(docId => docId -> f(reader, (docId - reader.meta.docBase).toInt))
+    }.collect().toMap
 
   /** Delete every doc matching `q` — the reference's
     * IndexReader::deleteDocuments re-expressed: each task ORs the match

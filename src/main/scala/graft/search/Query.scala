@@ -1,7 +1,5 @@
 package graft.search
 
-import graft.analysis.Analyzer
-
 /** Query plan ADT — the engine's logical plan (SURVEY.md §2.3 "scorer-tree
   * planner"; reference Query classes /root/reference/src/core/search/).
   * Built programmatically (the reference's fixtures do the same —
@@ -282,17 +280,6 @@ object Query {
     case BoolQ(m, s, n, msm) =>
       BoolQ(m.map(rewrite), s.map(rewrite), n.map(rewrite), msm)
     case other => other
-  }
-
-  /** Analyze raw text into an OR (or AND) of term queries with the index's
-    * analyzer — the minimal query-string entry point. */
-  def fromText(analyzer: Analyzer, text: String, and: Boolean = false): Query = {
-    val terms = analyzer.analyze(text).map(_.term).toSeq
-    terms match {
-      case Seq(t) => TermQ(t)
-      case ts if and => BoolQ(must = ts.map(TermQ(_)))
-      case ts => BoolQ(should = ts.map(TermQ(_)))
-    }
   }
 
   /** Hoist top-level metadata-field predicates out of a parsed query:

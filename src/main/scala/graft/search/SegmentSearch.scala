@@ -21,10 +21,6 @@ final class TopKCollector(k: Int) {
   def full: Boolean = size == k
   /** Current kth score (−∞ until full). */
   def threshold: Double = if (size < k) Double.NegativeInfinity else scores(0)
-  def worstDoc: Long = if (size == 0) Long.MaxValue else docs(0)
-
-  def insertable(score: Double, doc: Long): Boolean =
-    size < k || worse(scores(0), docs(0), score, doc)
 
   def collect(score: Double, doc: Long): Unit = {
     if (size < k) {

@@ -26,7 +26,9 @@ object StreamingIndexer {
 
   /** Append one (non-streaming) batch DataFrame; used by foreachBatch and
     * directly testable. Returns the new snapshot. `analyzer` and
-    * `storePositions` must match the index's (checked before any work). */
+    * `storePositions` must match the index's (checked before any work). The
+    * new segments store their docs' urls iff the index has segments and
+    * every one of them stores urls. */
   def appendBatch(spark: SparkSession, batch: DataFrame, indexDir: String,
       analyzer: String = "standard",
       docsPerSegment: Int = IndexConfig.DefaultDocsPerSegment,
@@ -40,8 +42,9 @@ object StreamingIndexer {
     val base = IndexMeta(analyzer, storePositions,
       prior.fold(Seq.empty[SegmentMeta])(_.meta.segments)).requireUniform()
 
+    val storeUrls = base.segments.nonEmpty && base.segments.forall(_.hasUrls)
     val (newDocs, metas) = IndexBuilder.writeSegments(batch,
-      IndexConfig(indexDir, analyzer, docsPerSegment, storePositions, writeDocMap = false),
+      IndexConfig(indexDir, analyzer, docsPerSegment, storePositions, writeDocMap = storeUrls),
       base.nextSegId, base.nextDocId)
     // an empty batch commits only the deletes of an update
     if (newDocs == 0 && delGenOverride.isEmpty) return base

@@ -34,6 +34,23 @@ class MaintenanceSpec extends AnyFunSuite with TempDirs {
     graft.search.ReaderCache.clear()
     val checks2 = Maintenance.checkIndex(spark, dir)
     assert(checks2.count(!_.ok) == 1, checks2)
+
+    // stored urls: three segments of 70, 70 and 60 docs, two restart points
+    // each; then truncate segment 1's urls.bin
+    import spark.implicits._
+    val pages = SyntheticCorpus.localPages(200, seed = 21, avgLen = 25, vocab = 60)
+    val udir = tmpDir()
+    IndexBuilder.build(spark, pages.map(p => (p.url, p.text)).toDF("url", "text"),
+      IndexConfig(udir, docsPerSegment = 70))
+    assert(Maintenance.checkIndex(spark, udir).forall(_.ok))
+    assert(new IndexSearcher(spark, udir).urls(0L until 200L) ==
+      pages.map(_.url).sorted.map(Some(_)))
+    val urlsFile = new File(udir, SegmentFormat.segDirName(1) + "/urls.bin")
+    val bytes = Files.readAllBytes(urlsFile.toPath)
+    Files.write(urlsFile.toPath, java.util.Arrays.copyOf(bytes, bytes.length - 3))
+    graft.search.ReaderCache.clear()
+    val checks3 = Maintenance.checkIndex(spark, udir)
+    assert(checks3.filterNot(_.ok).map(_.segId) == Seq(1), checks3)
   }
 
   test("merged segment files are byte-identical to a direct single-segment build") {

@@ -335,16 +335,20 @@ class SparkIndexSpec extends AnyFunSuite with TempDirs {
     }
   }
 
-  test("duplicate urls: one docId rule for build and append, at any input partitioning") {
-    // docsPerSegment = 4: "dup" holds ranks 6..14, a run that starts inside
-    // segment 1, fills segment 2 and ends inside segment 3, so it straddles
-    // the boundaries at ranks 8 and 12; two of its copies are identical
-    // rows and one has a null text
+  // at docsPerSegment = 4, "dup" holds ranks 6..14, a run that starts
+  // inside segment 1, fills segment 2 and ends inside segment 3, so it
+  // straddles the boundaries at ranks 8 and 12; two of its copies are
+  // identical rows and one has a null text
+  private val dupRows: Seq[(String, String)] = {
     val dupTexts = Seq("red fish", "blue fish", "one fish", "two fish", "red fish",
       "old fish", null, "new fish", "sad fish")
-    val rows = (0 until 6).map(i => (s"a$i", s"alpha w$i")) ++
+    (0 until 6).map(i => (s"a$i", s"alpha w$i")) ++
       dupTexts.map(t => ("dup", t)) ++
       (0 until 5).map(i => (s"z$i", s"zeta w$i"))
+  }
+
+  test("duplicate urls: one docId rule for build and append, at any input partitioning") {
+    val rows = dupRows
     // scrambled input order, so a tie order that followed the input would show
     val scrambled = rows.zipWithIndex.sortBy { case (_, i) => (i * 7) % rows.size }.map(_._1)
     val reference = localOfSorted(rows, docsPerSegment = 4)
@@ -361,15 +365,72 @@ class SparkIndexSpec extends AnyFunSuite with TempDirs {
     }
   }
 
-  test("job shape: build runs <= 5 jobs (<= 4 without the docmap), a one-segment append <= 3") {
-    val withDocMap = jobsOf(IndexBuilder.build(spark, corpus,
+  test("stored urls: build, resume, append and compaction keep every docId's url") {
+    import spark.implicits._
+    val rows = dupRows :+ ((null: String, "nullurl words"))
+    // appended urls sort after every built one, so the compacted index is
+    // a direct build of all rows
+    val more = Seq(("zz1", "more words"), ("zz\u00e9", "accent words"), ("zz0", "more fish"),
+      ("zz\ud834\udd1e", "clef words"), ("zz0", "again fish"))
+    def urlColumn(rs: Seq[(String, String)]): Seq[Option[String]] =
+      rs.toDF("url", "text").orderBy("url", "text").as[(String, String)].collect()
+        .toSeq.map { case (u, _) => Option(u) }
+    def urlsOf(dir: String): Seq[Option[String]] = {
+      val s = new IndexSearcher(spark, dir)
+      s.urls(0L until s.meta.numDocs)
+    }
+    val expected = urlColumn(rows)
+    assert(expected.head.isEmpty && expected.count(_.contains("dup")) == 9)
+    def build(dir: String, rs: Seq[(String, String)], parts: Int, dps: Int) =
+      IndexBuilder.build(spark, rs.toDF("url", "text").repartition(parts),
+        IndexConfig(dir, docsPerSegment = dps))
+    for (parts <- Seq(1, 7)) {
+      val dir = tmpDir()
+      build(dir, rows, parts, 4)
+      assert(urlsOf(dir) == expected, s"build over $parts partitions")
+    }
+
+    val dir = tmpDir()
+    build(dir, rows, 7, 4)
+    Seq(1, 3).foreach { s =>
+      val f = new File(dir, SegmentFormat.segDirName(s))
+      f.listFiles().foreach(_.delete()); f.delete()
+    }
+    new File(dir, "commits").listFiles().foreach(_.delete())
+    val report = build(dir, rows, 7, 4)
+    assert(report.builtSegments == 2 && report.resumedSegments == 4, report)
+    assert(urlsOf(dir) == expected, "resume")
+
+    StreamingIndexer.appendBatch(spark, more.toDF("url", "text"), dir, docsPerSegment = 4)
+    val all = expected ++ urlColumn(more)
+    assert(urlsOf(dir) == all, "append")
+
+    // a tombstoned doc keeps its url slot through the merge
+    assert(new IndexSearcher(spark, dir).deleteDocs(TermQ("alpha")) == 6)
+    val merged = Maintenance.compact(spark, dir, minDocs = 100).segments
+    assert(merged.size == 1 && merged.head.hasUrls, merged)
+    assert(urlsOf(dir) == all, "compact")
+    assert(Maintenance.checkIndex(spark, dir).forall(_.ok))
+
+    val single = tmpDir()
+    build(single, rows ++ more, 1, 1000)
+    for (f <- Seq("urls.bin", "urls.idx")) {
+      def bytes(d: String, segId: Int) =
+        Files.readAllBytes(new File(d, SegmentFormat.segDirName(segId) + "/" + f).toPath)
+      assert(java.util.Arrays.equals(bytes(dir, merged.head.segId), bytes(single, 0)),
+        s"$f differs after merge")
+    }
+  }
+
+  test("job shape: build <= 4 jobs with or without stored urls, 1-segment append <= 3") {
+    val withUrls = jobsOf(IndexBuilder.build(spark, corpus,
       IndexConfig(tmpDir(), docsPerSegment = 64)))
-    val noDocMap = jobsOf(IndexBuilder.build(spark, corpus,
+    val noUrls = jobsOf(IndexBuilder.build(spark, corpus,
       IndexConfig(tmpDir(), docsPerSegment = 64, writeDocMap = false)))
     val append = jobsOf(StreamingIndexer.appendBatch(spark, corpus, tmpDir(),
       docsPerSegment = N))
-    assert(withDocMap.size <= 5, withDocMap.mkString("\n"))
-    assert(noDocMap.size <= 4, noDocMap.mkString("\n"))
+    assert(withUrls.size <= 4, withUrls.mkString("\n"))
+    assert(noUrls.size <= 4, noUrls.mkString("\n"))
     assert(append.size <= 3, append.mkString("\n"))
   }
 }
