@@ -449,7 +449,9 @@ final class SegmentWriter(
         var p = 0
         val max = math.min(prevTerm.length, curTerm.length)
         while (p < max && prevTerm.charAt(p) == curTerm.charAt(p)) p += 1
-        p
+        // never split a surrogate pair: the suffix must be well-formed
+        // UTF-8, and a lone low surrogate would be written as '?'
+        if (p > 0 && Character.isHighSurrogate(curTerm.charAt(p - 1))) p - 1 else p
       }
     if (restart) {
       termIdxOut.writeString(curTerm)
@@ -559,7 +561,13 @@ final class SegmentWriter(
   * /root/reference/src/core/store/MMapDirectory.cpp); the sampled term index
   * is decoded to memory for binary search, the term dict itself is scanned
   * sequentially from the nearest sample (TermInfosReader pattern,
-  * /root/reference/src/core/index/TermInfosReader.cpp:113-160). */
+  * /root/reference/src/core/index/TermInfosReader.cpp:113-160). The scan
+  * decodes each entry into a per-call char buffer and compares it in
+  * place, so a lookup allocates nothing per scanned entry.
+  *
+  * Thread-safe: every read works on its own duplicate of the mapped
+  * buffers and keeps no scratch state on the reader, so one reader serves
+  * concurrent tasks (`ReaderCache` shares readers across an executor's tasks). */
 final class SegmentReader(val dir: File, delGenBound: Int = Int.MaxValue) {
   import SegmentFormat._
 
@@ -598,9 +606,9 @@ final class SegmentReader(val dir: File, delGenBound: Int = Int.MaxValue) {
   private val (idxTerms, idxTermsOffsets, idxPostOffsets) = {
     val bytes = Files.readAllBytes(new File(dir, "terms.idx").toPath)
     val r = new ByteReader(bytes)
-    val ts = Vector.newBuilder[String]
-    val to = Vector.newBuilder[Long]
-    val po = Vector.newBuilder[Long]
+    val ts = Array.newBuilder[String]
+    val to = Array.newBuilder[Long]
+    val po = Array.newBuilder[Long]
     while (r.remaining > 0) {
       ts += r.readString()
       to += r.readVLong()
@@ -704,44 +712,26 @@ final class SegmentReader(val dir: File, delGenBound: Int = Int.MaxValue) {
     } finally ch.close()
   }
 
-  /** Binary search the sampled index, then scan ≤ TermIndexInterval entries. */
+  /** Binary search the sampled index, then scan ≤ TermIndexInterval
+    * entries in place: no String or TermInfo is built for a scanned entry,
+    * and a match returns a TermInfo that reuses `term`. */
   def termInfo(term: String): Option[TermInfo] = {
-    if (idxTerms.isEmpty) return None
     // greatest sample <= term (code-point order, matching the dict sort)
-    var lo = 0
-    var hi = idxTerms.length - 1
-    if (TermOrder.gt(idxTerms(0), term)) return None
-    while (lo < hi) {
-      val mid = (lo + hi + 1) >>> 1
-      if (TermOrder.lteq(idxTerms(mid), term)) lo = mid else hi = mid - 1
-    }
-    val r = new ByteReader(termsBuf.duplicate())
-    r.seek(idxTermsOffsets(lo).toInt)
-    var postingsPos = idxPostOffsets(lo)
-    var prev: String = null
+    if (idxTerms.isEmpty || TermOrder.gt(idxTerms(0), term)) return None
+    val c = cursorAt(sampleAtOrBelow(term))
     var scanned = 0
-    while (scanned < TermIndexInterval && r.remaining > 0) {
-      val prefixLen = r.readVInt()
-      val suffix = r.readString()
-      val t = if (prefixLen == 0) suffix else prev.substring(0, prefixLen) + suffix
-      val df = r.readVInt()
-      val maxFreq = r.readVInt()
-      val minDlByte = r.readByte()
-      val minDl = r.readVInt()
-      postingsPos += r.readVLong()
-      val len = r.readVLong()
-      val skipB = r.readVInt()
-      if (t == term) return Some(TermInfo(t, df, maxFreq, minDlByte, minDl, postingsPos, len, skipB))
-      if (TermOrder.gt(t, term)) return None
-      postingsPos += len
-      prev = t
+    while (scanned < TermIndexInterval && c.hasNext) {
+      c.next()
+      val cmp = c.compareTo(term)
+      if (cmp == 0) return Some(c.info(term))
+      if (cmp > 0) return None
       scanned += 1
     }
     None
   }
 
   /** Iterate the whole term dictionary (for stats jobs / merge). */
-  def allTerms: Iterator[TermInfo] = termsIterAt(0, 0L)
+  def allTerms: Iterator[TermInfo] = termsIterator(new TermCursor(termsReader(0), 0L), null)
 
   /** Sorted term iterator starting at the first term >= `lower` (multi-term
     * expansion seek — TermRangeTermEnum/PrefixQuery pattern). */
@@ -749,43 +739,42 @@ final class SegmentReader(val dir: File, delGenBound: Int = Int.MaxValue) {
     case None => allTerms
     case Some(lo) =>
       if (idxTerms.isEmpty) Iterator.empty
-      else {
-        // greatest sample <= lo (or the first sample)
-        var l = 0
-        var h = idxTerms.length - 1
-        if (TermOrder.lt(idxTerms(0), lo)) {
-          while (l < h) {
-            val mid = (l + h + 1) >>> 1
-            if (TermOrder.lteq(idxTerms(mid), lo)) l = mid else h = mid - 1
-          }
-        }
-        termsIterAt(idxTermsOffsets(l).toInt, idxPostOffsets(l))
-          .dropWhile(ti => TermOrder.lt(ti.term, lo))
-      }
+      else termsIterator(cursorAt(sampleAtOrBelow(lo)), lo)
   }
 
-  private def termsIterAt(termsOffset: Int, postingsStart: Long): Iterator[TermInfo] =
+  /** Index of the greatest sampled term <= `term`, or 0 when every sample
+    * is above it. */
+  private def sampleAtOrBelow(term: String): Int = {
+    var lo = 0
+    var hi = idxTerms.length - 1
+    while (lo < hi) {
+      val mid = (lo + hi + 1) >>> 1
+      if (TermOrder.lteq(idxTerms(mid), term)) lo = mid else hi = mid - 1
+    }
+    lo
+  }
+
+  private def termsReader(offset: Int): ByteReader = {
+    val r = new ByteReader(termsBuf.duplicate())
+    r.seek(offset)
+    r
+  }
+
+  private def cursorAt(sample: Int): TermCursor =
+    new TermCursor(termsReader(idxTermsOffsets(sample).toInt), idxPostOffsets(sample))
+
+  /** The entries of `c` from the first term >= `lower` (null = all); only
+    * returned entries build their term String. */
+  private def termsIterator(c: TermCursor, lower: String): Iterator[TermInfo] =
     new Iterator[TermInfo] {
-      private val r = new ByteReader(termsBuf.duplicate())
-      r.seek(termsOffset)
-      private var prev: String = null
-      private var postingsPos = postingsStart
-      override def hasNext: Boolean = r.remaining > 0
+      private var pending = false // c holds an entry not yet returned
+      if (lower != null)
+        while (!pending && c.hasNext) { c.next(); pending = c.compareTo(lower) >= 0 }
+      override def hasNext: Boolean = pending || c.hasNext
       override def next(): TermInfo = {
-        val prefixLen = r.readVInt()
-        val suffix = r.readString()
-        val t = if (prefixLen == 0) suffix else prev.substring(0, prefixLen) + suffix
-        val df = r.readVInt()
-        val maxFreq = r.readVInt()
-        val minDlByte = r.readByte()
-        val minDl = r.readVInt()
-        postingsPos += r.readVLong()
-        val len = r.readVLong()
-        val skipB = r.readVInt()
-        val ti = TermInfo(t, df, maxFreq, minDlByte, minDl, postingsPos, len, skipB)
-        postingsPos += len
-        prev = t
-        ti
+        if (!pending) c.next()
+        pending = false
+        c.info(c.term)
       }
     }
 
@@ -815,6 +804,57 @@ final class SegmentReader(val dir: File, delGenBound: Int = Int.MaxValue) {
       new ByteReader({ val d = postingsBuf.duplicate(); d.position(ti.postingsOffset.toInt); d }),
       ti.df, meta.hasPositions, needPositions, skipDocs, skipOffs, meta.hasPayloads)
   }
+}
+
+/** Decodes term-dictionary entries forward from a restart point of
+  * terms.bin; the one decoder of the entry layout written by
+  * [[SegmentWriter]] (`endTerm`): VInt shared-prefix length in UTF-16
+  * chars, the suffix as VInt byte length + UTF-8, VInt df, VInt maxFreq,
+  * the min-doclen norm byte, VInt minDl, VLong postings-offset delta,
+  * VLong postings length and VInt skip-table length. The current term
+  * lives in a char buffer the cursor owns: stepping and comparing build no
+  * String, and [[term]] makes one only when asked. One cursor per caller. */
+private final class TermCursor(r: ByteReader, postingsStart: Long) {
+  private var chars = new Array[Char](32)
+  private var len = 0
+  private var postingsEnd = postingsStart
+  private var df = 0
+  private var maxFreq = 0
+  private var minDlByte: Byte = 0
+  private var minDl = 0
+  private var postingsOffset = 0L
+  private var postingsBytes = 0L
+  private var skipBytes = 0
+
+  def hasNext: Boolean = r.remaining > 0
+
+  /** Decode the next entry. */
+  def next(): Unit = {
+    val prefixLen = r.readVInt()
+    if (prefixLen > len)
+      throw new IllegalStateException(s"term dict entry shares $prefixLen chars of a $len-char term")
+    val n = r.readVInt()
+    if (prefixLen + n > chars.length)
+      chars = java.util.Arrays.copyOf(chars, math.max(2 * chars.length, prefixLen + n))
+    len = prefixLen + r.readUtf8(n, chars, prefixLen)
+    df = r.readVInt()
+    maxFreq = r.readVInt()
+    minDlByte = r.readByte()
+    minDl = r.readVInt()
+    postingsOffset = postingsEnd + r.readVLong()
+    postingsBytes = r.readVLong()
+    skipBytes = r.readVInt()
+    postingsEnd = postingsOffset + postingsBytes
+  }
+
+  /** The current term against `term` in [[TermOrder]]. */
+  def compareTo(term: String): Int = TermOrder.compare(chars, len, term)
+
+  def term: String = new String(chars, 0, len)
+
+  /** The current entry, named `term` (which must equal it). */
+  def info(term: String): TermInfo =
+    TermInfo(term, df, maxFreq, minDlByte, minDl, postingsOffset, postingsBytes, skipBytes)
 }
 
 /** Decodes `n` front-coded urls from a restart point of urls.bin

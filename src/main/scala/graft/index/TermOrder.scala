@@ -19,18 +19,36 @@ object TermOrder {
     val len = math.min(a.length, b.length)
     var i = 0
     while (i < len) {
-      var ca = a.charAt(i).toInt
-      var cb = b.charAt(i).toInt
-      if (ca != cb) {
-        if (ca >= 0xD800 && cb >= 0xD800) {
-          if (ca >= 0xE000) ca -= 0x800 else ca += 0x2000
-          if (cb >= 0xE000) cb -= 0x800 else cb += 0x2000
-        }
-        return ca - cb
-      }
+      val ca = a.charAt(i)
+      val cb = b.charAt(i)
+      if (ca != cb) return charDiff(ca, cb)
       i += 1
     }
     a.length - b.length
+  }
+
+  /** [[compare]] of the first `aLen` chars of `a` with `b`, building no
+    * String (the term-dictionary scan compares its decode buffer in place). */
+  def compare(a: Array[Char], aLen: Int, b: String): Int = {
+    val len = math.min(aLen, b.length)
+    var i = 0
+    while (i < len) {
+      val ca = a(i)
+      val cb = b.charAt(i)
+      if (ca != cb) return charDiff(ca, cb)
+      i += 1
+    }
+    aLen - b.length
+  }
+
+  @inline private def charDiff(a: Char, b: Char): Int = {
+    var ca = a.toInt
+    var cb = b.toInt
+    if (ca >= 0xD800 && cb >= 0xD800) {
+      if (ca >= 0xE000) ca -= 0x800 else ca += 0x2000
+      if (cb >= 0xE000) cb -= 0x800 else cb += 0x2000
+    }
+    ca - cb
   }
 
   @inline def lt(a: String, b: String): Boolean = compare(a, b) < 0

@@ -83,17 +83,51 @@ final case class BM25(k1: Float = 1.2f, b: Float = 0.75f) extends Similarity {
 
 private final class BM25Weight(idfBoost: Float, k1: Float, b: Float, avgdl: Double)
   extends TermWeight {
-  // per-norm-byte denominator cache: k1 * (1 - b + b * dl/avgdl)
-  // (same trick as the reference's 256-entry norm decode table,
-  //  /root/reference/src/core/search/Similarity.cpp:37-55)
-  private val denomCache: Array[Float] = Array.tabulate(256) { i =>
-    val dl = SmallFloat.decodeDocLength(i.toByte)
-    k1 * (1 - b + b * (dl / avgdl).toFloat)
-  }
+  private val denomCache: Array[Float] = BM25Norms.denominators(k1, b, avgdl)
   override def score(freq: Float, normByte: Byte, exactDl: Int): Double =
     (idfBoost * (freq * (k1 + 1)) / (freq + denomCache(normByte & 0xff))).toDouble
   override def maxScore(maxFreq: Int, minDlByte: Byte, minDl: Int): Double =
     (idfBoost * (maxFreq * (k1 + 1)) / (maxFreq + denomCache(minDlByte & 0xff))).toDouble
+}
+
+/** BM25's per-norm-byte denominator table, k1 * (1 - b + b * dl/avgdl) for
+  * each of the 256 SmallFloat doc lengths. It depends only on (k1, b,
+  * avgdl), so every weight of a corpus shares one table, as the reference
+  * shares its one static norm decode table
+  * (/root/reference/src/core/search/Similarity.cpp:37-55). The memo holds
+  * the last table built; weights over other stats (MultiIndexSearcher's
+  * combined stats next to a single index's) build and publish their own,
+  * and a reader always gets a table whose key equals its arguments. Tables
+  * are never written after publication. */
+private object BM25Norms {
+  import java.lang.Double.doubleToRawLongBits
+  import java.lang.Float.floatToRawIntBits
+
+  private final class Table(k1: Float, b: Float, avgdl: Double, val denominators: Array[Float]) {
+    // keyed on bits: the table is reused only where it is bit-identical
+    def isFor(k1: Float, b: Float, avgdl: Double): Boolean =
+      floatToRawIntBits(k1) == floatToRawIntBits(this.k1) &&
+        floatToRawIntBits(b) == floatToRawIntBits(this.b) &&
+        doubleToRawLongBits(avgdl) == doubleToRawLongBits(this.avgdl)
+  }
+
+  @volatile private var last: Table = _
+
+  def denominators(k1: Float, b: Float, avgdl: Double): Array[Float] = {
+    val t = last
+    if (t != null && t.isFor(k1, b, avgdl)) t.denominators
+    else {
+      val d = new Array[Float](256)
+      var i = 0
+      while (i < 256) {
+        val dl = SmallFloat.decodeDocLength(i.toByte)
+        d(i) = k1 * (1 - b + b * (dl / avgdl).toFloat)
+        i += 1
+      }
+      last = new Table(k1, b, avgdl, d)
+      d
+    }
+  }
 }
 
 /** BM25 over exact doc lengths — double-precision math so a SQL engine

@@ -325,4 +325,35 @@ class EngineSpec extends AnyFunSuite with TempDirs {
       TermRangeQ(Some(bmpHigh), None, includeLower = false, includeUpper = true), 10, BM25())
     assert(hi.map(_.docId).toSet == Set(4L, 5L), s"got ${hi.toSeq}")
   }
+
+  test("BM25 norm table: weights over alternating corpus stats, from 8 threads, score exactly") {
+    val sim = BM25()
+    val stats = Seq(graft.score.CorpusStats(1000, 37.5), graft.score.CorpusStats(1000, 412.25))
+    // the formula, computed directly for one (stats, norm byte, freq)
+    def expected(st: graft.score.CorpusStats, df: Long, boost: Float, norm: Int, f: Float): Double = {
+      val dl = graft.codec.SmallFloat.decodeDocLength(norm.toByte)
+      val denom = sim.k1 * (1 - sim.b + sim.b * (dl / st.avgDocLength).toFloat)
+      (sim.idf(df, st) * boost * (f * (sim.k1 + 1)) / (f + denom)).toDouble
+    }
+    val bits = java.lang.Double.doubleToLongBits _
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val threads = (0 until 8).map { t =>
+      new Thread(() => {
+        for (round <- 0 until 100) {
+          val st = stats((t + round) % 2)
+          val df = 1L + (t * 37 + round) % 900
+          val w = sim.termWeight(df, 1.5f, st)
+          for (norm <- 0 until 256; f <- Seq(1, 3, 17)) {
+            val e = bits(expected(st, df, 1.5f, norm, f.toFloat))
+            if (bits(w.score(f.toFloat, norm.toByte, 0)) != e || bits(w.maxScore(f, norm.toByte, 0)) != e)
+              failures.add(s"thread $t round $round avgdl ${st.avgDocLength} norm $norm freq $f")
+          }
+        }
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    val mismatches = failures.size
+    assert(mismatches == 0, s"$mismatches mismatches, first: ${failures.peek()}")
+  }
 }

@@ -297,6 +297,63 @@ class SparkIndexSpec extends AnyFunSuite with TempDirs {
     }
   }
 
+  private def segmentReaders(dir: String): Seq[SegmentReader] =
+    IndexMetaIO.readLatest(dir).get.segments.map(m =>
+      new SegmentReader(new File(dir, SegmentFormat.segDirName(m.segId))))
+
+  test("adjacent terms sharing only a high surrogate: both stored, both searchable") {
+    val a = new String(Character.toChars(0x1D11E)) // 𝄞
+    val b = new String(Character.toChars(0x1D11F)) // 𝄟
+    val texts = Seq(s"$a $b")
+    val (dist, local) = buildBoth(texts, "whitespace", docsPerSegment = 10)
+    val spec = BruteForce.analyzeCorpus(graft.analysis.WhitespaceAnalyzer, Seq((0L, texts.head)))
+    Seq(dist, local).foreach { d =>
+      val readers = segmentReaders(d)
+      assert(readers.flatMap(_.allTerms.map(_.term)) == Seq(a, b), d)
+      assert(readers.head.termInfo(b).isDefined, d)
+      val q = TermQ(b)
+      assert(new IndexSearcher(spark, d).search(q, 10, BM25()).toSeq ==
+        BruteForce.search(spec, q, 10, BM25()).toSeq, d)
+    }
+    assert(fileHashes(dist) == fileHashes(local))
+  }
+
+  test("termInfo finds every dictionary entry and nothing else, across restart points") {
+    def cp(c: Int) = new String(Character.toChars(c))
+    val terms = (0 until 60).map(i => f"t$i%02d") ++
+      (0 until 30).map(i => s"café$i") ++
+      (0 until 30).map(i => s"中文${cp(0x4e00 + i)}") ++
+      (0 until 24).map(i => cp(0xE000 + i) + "x") ++
+      Seq("豈", "Ａb", "￻", "�", "￿") ++
+      // code points U+1D100.. share the high surrogate \uD834
+      (0 until 30).map(i => cp(0x1D100 + i)) ++
+      (0 until 30).map(i => cp(0x1D100 + i) + cp(0x1D180 + i))
+    assert(terms.distinct.size >= 3 * SegmentFormat.TermIndexInterval + 1)
+    // every 4-doc segment holds every term, at varying df and freq
+    val texts = (0 until 8).map { d =>
+      terms.indices.filter(i => (i + d) % 4 != 0)
+        .flatMap(i => Seq.fill(if (d % 2 == 0) i % 3 + 1 else 1)(terms(i))).mkString(" ")
+    }
+    val (dist, local) = buildBoth(texts, "whitespace", docsPerSegment = 4)
+    val dict = terms.toSet
+    val sorted = terms.sorted(TermOrder.ordering)
+    val absent = Seq("", "!", cp(0x10FFFF) + "z") ++ terms.map(_ + "\u0000") ++
+      terms.flatMap(t => (1 until t.length).map(t.substring(0, _))) ++
+      terms.flatMap { t =>
+        val last = t.codePointBefore(t.length)
+        val stem = t.substring(0, t.length - Character.charCount(last))
+        Seq(last - 1, last + 1).filter(c => c >= 0 && (c < 0xD800 || c > 0xDFFF)).map(stem + cp(_))
+      }
+    assert(TermOrder.lt("!", sorted.head) && TermOrder.gt(cp(0x10FFFF) + "z", sorted.last))
+    for (d <- Seq(dist, local); r <- segmentReaders(d)) {
+      val entries = r.allTerms.toSeq
+      assert(entries.map(_.term) == sorted, s"$d segment ${r.meta.segId}")
+      entries.foreach(ti => assert(r.termInfo(ti.term).contains(ti), s"$d: ${ti.term}"))
+      absent.filterNot(dict).foreach(t => assert(r.termInfo(t).isEmpty, s"$d: probe '$t'"))
+    }
+    assert(fileHashes(dist) == fileHashes(local))
+  }
+
   /** The reference for rows that share urls: [[LocalIndex.build]] over the
     * rows in (url, text) order as Spark's `orderBy` puts them, nulls first. */
   private def localOfSorted(rows: Seq[(String, String)], docsPerSegment: Int): String = {
