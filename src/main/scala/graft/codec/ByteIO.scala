@@ -118,51 +118,20 @@ final class ByteReader(private val bb: ByteBuffer) {
 
   /** Decode the next `n` bytes as UTF-8 into `dst` from index `off` (room
     * for `n` chars is enough) and return the number of chars written —
-    * the chars of `new String(bytes, UTF_8)`. Well-formed input decodes
-    * here without allocating; a run holding any malformed sequence is
-    * handed to the JDK decoder whole, so its replacement chars match. */
+    * the chars of `new String(bytes, UTF_8)`. An ASCII run decodes here
+    * without allocating; a run holding any byte >= 0x80 is handed to the
+    * JDK decoder whole. */
   def readUtf8(n: Int, dst: Array[Char], off: Int): Int = {
     val start = bb.position()
-    val end = start + n
-    var p = start
-    var o = off
-    while (p < end) {
-      val c = bb.get(p) & 0xff
-      if (c < 0x80) { dst(o) = c.toChar; o += 1; p += 1 }
-      else {
-        // sequence length and the allowed range of its second byte
-        // (RFC 3629: no overlongs, no surrogates, nothing past U+10FFFF)
-        var k = 0; var lo = 0x80; var hi = 0xbf
-        if (c >= 0xc2 && c <= 0xdf) k = 2
-        else if (c >= 0xe0 && c <= 0xef) {
-          k = 3
-          if (c == 0xe0) lo = 0xa0 else if (c == 0xed) hi = 0x9f
-        } else if (c >= 0xf0 && c <= 0xf4) {
-          k = 4
-          if (c == 0xf0) lo = 0x90 else if (c == 0xf4) hi = 0x8f
-        }
-        if (k == 0 || p + k > end) return readUtf8Jdk(start, n, dst, off)
-        val b1 = bb.get(p + 1) & 0xff
-        if (b1 < lo || b1 > hi) return readUtf8Jdk(start, n, dst, off)
-        var cp = (c & (0x7f >> k)) << 6 | (b1 & 0x3f)
-        var i = 2
-        while (i < k) {
-          val b = bb.get(p + i) & 0xff
-          if ((b & 0xc0) != 0x80) return readUtf8Jdk(start, n, dst, off)
-          cp = cp << 6 | (b & 0x3f)
-          i += 1
-        }
-        if (k < 4) { dst(o) = cp.toChar; o += 1 }
-        else {
-          dst(o) = Character.highSurrogate(cp)
-          dst(o + 1) = Character.lowSurrogate(cp)
-          o += 2
-        }
-        p += k
-      }
+    var i = 0
+    while (i < n) {
+      val c = bb.get(start + i)
+      if (c < 0) return readUtf8Jdk(start, n, dst, off)
+      dst(off + i) = c.toChar
+      i += 1
     }
-    bb.position(end)
-    o - off
+    bb.position(start + n)
+    n
   }
 
   private def readUtf8Jdk(start: Int, n: Int, dst: Array[Char], off: Int): Int = {
