@@ -75,6 +75,9 @@ final class ByteReader(private val bb: ByteBuffer) {
   def skip(n: Int): Unit = bb.position(bb.position() + n)
   def remaining: Int = bb.remaining()
 
+  /** A reader over the same bytes with its own position. */
+  def duplicate(): ByteReader = new ByteReader(bb.duplicate())
+
   def readByte(): Byte = bb.get()
 
   def readLongBE(): Long = bb.getLong()

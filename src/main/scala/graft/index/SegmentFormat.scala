@@ -897,7 +897,13 @@ final class PostingsIterator(
 
   private val docs = new Array[Int](BlockSize)
   private val freqs = new Array[Int](BlockSize)
-  private var posBytes: Array[Byte] = null
+  // Position cursor over the decoded block's position data, read in place
+  // through its own view of the segment buffer: posting `posIdx`'s
+  // positions start at offset `posOff`; `decodeBlock` resets it.
+  private val posIn = if (filePositions && needPositions) in.duplicate() else null
+  private var posBlockStart = 0
+  private var posIdx = 0
+  private var posOff = 0
 
   // State machine: either no block (start/end), a block with only the
   // HEADER read (payload pending — the skip state), or a DECODED block with
@@ -946,59 +952,65 @@ final class PostingsIterator(
   def docID: Int = _doc
   def freq: Int = freqs(blockIdx)
 
-  /** Positions of the current posting (requires needPositions). */
-  def positions(): Array[Int] = {
-    val r = new ByteReader(posBytes)
-    // skip positions of postings before blockIdx
-    var i = 0
-    var out: Array[Int] = null
-    while (i <= blockIdx) {
-      val f = freqs(i)
-      if (i == blockIdx) {
-        out = new Array[Int](f)
-        var prev = 0
-        var j = 0
-        while (j < f) {
-          prev += r.readVInt(); out(j) = prev
-          if (filePayloads) r.skip(r.readVInt())
-          j += 1
-        }
-      } else {
-        var j = 0
-        while (j < f) {
-          r.readVInt()
-          if (filePayloads) r.skip(r.readVInt())
-          j += 1
-        }
+  /** Moves the position cursor to the first position of posting
+    * `blockIdx` and leaves `posIn` there. Forward-only within the block:
+    * the positions of each posting in between are skipped once; a posting
+    * before the cursor rewinds it to the block start. */
+  private def seekPositions(): Unit = {
+    if (posIdx > blockIdx) { posIdx = 0; posOff = posBlockStart }
+    posIn.seek(posOff)
+    while (posIdx < blockIdx) {
+      var j = freqs(posIdx)
+      while (j > 0) {
+        posIn.readVInt()
+        if (filePayloads) posIn.skip(posIn.readVInt())
+        j -= 1
       }
-      i += 1
+      posIdx += 1
     }
+    posOff = posIn.pos
+  }
+
+  /** Writes the positions of the current posting into `buf` (length at
+    * least `freq`) and returns `freq`; requires needPositions. Reads go
+    * through the block's position cursor (see [[positions]]). */
+  def positionsInto(buf: Array[Int]): Int = {
+    seekPositions()
+    val f = freqs(blockIdx)
+    var prev = 0
+    var j = 0
+    while (j < f) {
+      prev += posIn.readVInt(); buf(j) = prev
+      if (filePayloads) posIn.skip(posIn.readVInt())
+      j += 1
+    }
+    f
+  }
+
+  /** Positions of the current posting (requires needPositions). The block
+    * keeps one position cursor: calls for postings in increasing order read
+    * each posting's positions once; a repeated call, or one after
+    * [[payloads]], re-reads the current posting; a call for a posting
+    * before the cursor rewinds to the block start. */
+  def positions(): Array[Int] = {
+    val out = new Array[Int](freqs(blockIdx))
+    positionsInto(out)
     out
   }
 
   /** Per-position payloads of the current posting (null entries = none);
-    * requires needPositions on a payload-enabled segment. */
+    * requires needPositions on a payload-enabled segment. Shares the
+    * position cursor of [[positions]], with the same contract. */
   def payloads(): Array[Array[Byte]] = {
     require(filePayloads, "segment stores no payloads")
-    val r = new ByteReader(posBytes)
-    var i = 0
-    var out: Array[Array[Byte]] = null
-    while (i <= blockIdx) {
-      val f = freqs(i)
-      if (i == blockIdx) {
-        out = new Array[Array[Byte]](f)
-        var j = 0
-        while (j < f) {
-          r.readVInt()
-          val n = r.readVInt()
-          out(j) = if (n == 0) null else r.readBytes(n)
-          j += 1
-        }
-      } else {
-        var j = 0
-        while (j < f) { r.readVInt(); r.skip(r.readVInt()); j += 1 }
-      }
-      i += 1
+    seekPositions()
+    val out = new Array[Array[Byte]](freqs(blockIdx))
+    var j = 0
+    while (j < out.length) {
+      posIn.readVInt()
+      val n = posIn.readVInt()
+      out(j) = if (n == 0) null else posIn.readBytes(n)
+      j += 1
     }
     out
   }
@@ -1030,7 +1042,8 @@ final class PostingsIterator(
     while (i < blockN) { freqs(i) += 1; i += 1 }
     if (filePositions) {
       val pb = in.readVInt()
-      if (needPositions) posBytes = in.readBytes(pb) else in.skip(pb)
+      if (needPositions) { posBlockStart = in.pos; posIdx = 0; posOff = posBlockStart }
+      in.skip(pb)
     }
     headerPending = false
     blockDecoded = true

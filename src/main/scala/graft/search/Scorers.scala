@@ -439,39 +439,68 @@ final class ExactPhraseScorer(
     d
   }
 
+  // per-term position buffers (grown on demand) and merge pointers
+  private val bufs = Array.fill(pis.length)(new Array[Int](8))
+  private val lens = new Array[Int](pis.length)
+  private val ptrs = new Array[Int](pis.length)
+
   /** Count alignment positions: p such that term_i occurs at p + offset_i. */
   private def phraseFreq(): Int = {
-    val posArrays = new Array[Array[Int]](pis.length)
     var i = 0
     while (i < pis.length) {
-      val ps = pis(i).positions()
+      val f = pis(i).freq
+      val ps = PhraseMatch.atLeast(bufs(i), f)
+      bufs(i) = ps
+      pis(i).positionsInto(ps)
       val off = offsets(i)
       var j = 0
-      while (j < ps.length) { ps(j) -= off; j += 1 }
-      posArrays(i) = ps
+      while (j < f) { ps(j) -= off; j += 1 }
+      lens(i) = f
       i += 1
     }
-    // intersect sorted arrays
+    PhraseMatch.countAligned(bufs, lens, ptrs)
+  }
+
+  override def score(): Double = {
+    val d = inner.docID
+    weight.score(_freq.toFloat, norms(d), doclens(d))
+  }
+}
+
+/** Position intersection shared by the exact phrase scorers. */
+private[search] object PhraseMatch {
+
+  /** `buf` if it holds at least `n` entries, else a new buffer that does. */
+  def atLeast(buf: Array[Int], n: Int): Array[Int] =
+    if (buf.length >= n) buf else new Array[Int](math.max(n, 2 * buf.length))
+
+  /** Counts the entries p among the first `lens(0)` of `pos(0)` that occur
+    * among the first `lens(t)` of every other `pos(t)`. Each array is sorted
+    * ascending; one linear merge with a pointer per array (`ptrs`, scratch
+    * of the same length as `pos`) reads each entry once. */
+  def countAligned(pos: Array[Array[Int]], lens: Array[Int], ptrs: Array[Int]): Int = {
+    java.util.Arrays.fill(ptrs, 0)
+    val first = pos(0)
     var count = 0
-    val first = posArrays(0)
     var j = 0
-    while (j < first.length) {
+    while (j < lens(0)) {
       val p = first(j)
       var all = true
       var t = 1
-      while (t < posArrays.length && all) {
-        if (java.util.Arrays.binarySearch(posArrays(t), p) < 0) all = false
+      while (t < pos.length && all) {
+        val a = pos(t)
+        val n = lens(t)
+        var k = ptrs(t)
+        while (k < n && a(k) < p) k += 1
+        ptrs(t) = k
+        if (k == n) return count // every later p is larger still
+        all = a(k) == p
         t += 1
       }
       if (all) count += 1
       j += 1
     }
     count
-  }
-
-  override def score(): Double = {
-    val d = inner.docID
-    weight.score(_freq.toFloat, norms(d), doclens(d))
   }
 }
 
@@ -594,21 +623,60 @@ final class MultiPhraseScorer(
       _doc
     }
     override def score(): Double = 0.0
-    /** offset-adjusted sorted distinct position union at the current doc. */
-    def positionsAt(doc: Int, offset: Int): Array[Int] = {
-      val all = scala.collection.mutable.ArrayBuffer.empty[Int]
+    private val bufs = Array.fill(pis.length)(new Array[Int](8))
+    private val lens = new Array[Int](pis.length)
+    private val heads = new Array[Int](pis.length)
+    /** The offset-adjusted sorted distinct position union at the doc of the
+      * last [[loadPositions]]: its first `unionLen` entries. */
+    var union = new Array[Int](8)
+    var unionLen = 0
+
+    def loadPositions(doc: Int, offset: Int): Unit = {
+      var total = 0
       var i = 0
       while (i < pis.length) {
-        if (pis(i).docID == doc) all ++= pis(i).positions().map(_ - offset)
+        lens(i) = 0
+        heads(i) = 0
+        if (pis(i).docID == doc) {
+          bufs(i) = PhraseMatch.atLeast(bufs(i), pis(i).freq)
+          lens(i) = pis(i).positionsInto(bufs(i))
+          total += lens(i)
+        }
         i += 1
       }
-      all.distinct.sorted.toArray
+      union = PhraseMatch.atLeast(union, total)
+      // k-way merge by min-scan over the sorted per-term arrays, dropping repeats
+      var n = 0
+      var more = true
+      while (more) {
+        var min = Int.MaxValue
+        more = false
+        i = 0
+        while (i < pis.length) {
+          if (heads(i) < lens(i) && (!more || bufs(i)(heads(i)) < min)) { min = bufs(i)(heads(i)); more = true }
+          i += 1
+        }
+        if (more) {
+          i = 0
+          while (i < pis.length) {
+            while (heads(i) < lens(i) && bufs(i)(heads(i)) == min) heads(i) += 1
+            i += 1
+          }
+          union(n) = min - offset
+          n += 1
+        }
+      }
+      unionLen = n
     }
   }
 
   private val slotScorers = slots.map(new SlotScorer(_))
   private val inner = new ConjunctionScorer(slotScorers.map(s => s: Scorer))
   private var _freq = 0
+  // per-slot position unions, their lengths, merge pointers
+  private val unions = new Array[Array[Int]](slots.length)
+  private val lens = new Array[Int](slots.length)
+  private val ptrs = new Array[Int](slots.length)
 
   override def docID: Int = inner.docID
   override def nextDoc(): Int = toMatch(inner.nextDoc())
@@ -617,11 +685,15 @@ final class MultiPhraseScorer(
   private def toMatch(first: Int): Int = {
     var d = first
     while (d != Scorer.NoMoreDocs) {
-      val arrs = slotScorers.zipWithIndex.map { case (s, i) => s.positionsAt(d, i) }
-      _freq =
-        if (arrs.exists(_.isEmpty)) 0
-        else arrs(0).count(p => (1 until arrs.length).forall(i =>
-          java.util.Arrays.binarySearch(arrs(i), p) >= 0))
+      var i = 0
+      while (i < slotScorers.length) {
+        val s = slotScorers(i)
+        s.loadPositions(d, i)
+        unions(i) = s.union
+        lens(i) = s.unionLen
+        i += 1
+      }
+      _freq = PhraseMatch.countAligned(unions, lens, ptrs)
       if (_freq > 0) return d
       d = inner.nextDoc()
     }

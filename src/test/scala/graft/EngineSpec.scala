@@ -162,6 +162,125 @@ class EngineSpec extends AnyFunSuite with TempDirs {
     assert(meta.numDocs == 6)
   }
 
+  test("postings iterator: positions and payloads under every access pattern") {
+    // 'hot' in all 2600 docs (21 blocks, a skip-table entry at block 16)
+    // with freq 1-4, some positions without a payload; 'warm' in every
+    // other doc
+    val n = 2600
+    val docs = (0 until n).map { i =>
+      val sb = new StringBuilder
+      var j = 0
+      while (j < 1 + i % 4) {
+        sb.append(if ((i + j) % 5 == 0) "hot " else s"hot|$i.$j ")
+        if (i % 2 == 0) sb.append(s"warm|$j.5 ")
+        sb.append("x").append(i % 7).append(' ')
+        j += 1
+      }
+      (i.toLong, sb.toString)
+    }
+    val expected = BruteForce.analyzeCorpus(graft.analysis.DelimitedPayloadAnalyzer, docs)
+    for (pays <- Seq(true, false)) {
+      val dir = tmpDir()
+      LocalIndex.build(dir, docs, "delimited", storePayloads = pays)
+      val reader = new graft.index.SegmentReader(
+        new java.io.File(dir, graft.index.SegmentFormat.segDirName(0)))
+      val hot = reader.termInfo("hot").get
+      assert(hot.df == n && hot.skipBytes > 0, hot)
+      def open(t: String) = reader.postings(reader.termInfo(t).get, needPositions = true)
+      def check(pi: graft.index.PostingsIterator, t: String, ctx: String): Unit = {
+        val d = pi.docID
+        val want = expected(d)
+        assert(pi.positions().toSeq == want.termPositions(t).toSeq, s"$ctx: positions of $t in doc $d")
+        val into = new Array[Int](pi.freq + 1)
+        assert(pi.positionsInto(into) == pi.freq && into.take(pi.freq).toSeq == want.termPositions(t).toSeq,
+          s"$ctx: positionsInto of $t in doc $d")
+        if (pays) {
+          val got = pi.payloads()
+          val w = want.termPayloads(t)
+          assert(got.length == w.length && got.indices.forall(k => java.util.Arrays.equals(got(k), w(k))),
+            s"$ctx: payloads of $t in doc $d")
+        }
+      }
+      val ctx0 = s"payloads=$pays"
+      // nextDoc over every posting
+      for (t <- Seq("hot", "warm")) {
+        val pi = open(t)
+        var c = 0
+        while (pi.nextDoc() != graft.index.SegmentFormat.NoMoreDocs) { check(pi, t, s"$ctx0 nextDoc"); c += 1 }
+        assert(c == expected.count(_.termPositions.contains(t)))
+      }
+      // advance landing mid-block, then neighbours of the landing posting
+      val adv = open("hot")
+      for (target <- Seq(5, 77, 130, 131, 400, 1000, 1001, 1900, 2599)) {
+        assert(adv.advance(target) == target)
+        check(adv, "hot", s"$ctx0 advance($target)")
+        if (target < n - 1) { adv.nextDoc(); check(adv, "hot", s"$ctx0 after advance($target)") }
+      }
+      // a skip-table jump (block 16 starts at posting 2048), then onward
+      val jump = open("hot")
+      assert(jump.nextDoc() == 0)
+      check(jump, "hot", s"$ctx0 first")
+      assert(jump.advance(2100) == 2100)
+      check(jump, "hot", s"$ctx0 skip-table jump")
+      while (jump.nextDoc() < 2200) check(jump, "hot", s"$ctx0 after jump")
+      // two calls on the same posting; payloads before and after positions
+      val twice = open("hot")
+      while (twice.nextDoc() < 300) {
+        check(twice, "hot", s"$ctx0 first call")
+        check(twice, "hot", s"$ctx0 second call")
+        if (pays) {
+          val before = twice.payloads()
+          twice.positions()
+          val after = twice.payloads()
+          assert(before.indices.forall(k => java.util.Arrays.equals(before(k), after(k))))
+        }
+      }
+      // reads on only every third posting
+      val third = open("hot")
+      var d = third.nextDoc()
+      while (d != graft.index.SegmentFormat.NoMoreDocs) {
+        if (d % 3 == 0) check(third, "hot", s"$ctx0 every third")
+        d = third.nextDoc()
+      }
+    }
+  }
+
+  /** Phrase-heavy corpus whose stop-word head spans several postings blocks
+    * and repeats within docs. */
+  private def stopHeadTexts(n: Int, seed: Long): Seq[String] = {
+    val rnd = new scala.util.Random(seed)
+    val head = Array("the", "of", "and", "to")
+    (0 until n).map { _ =>
+      Seq.fill(5 + rnd.nextInt(50)) {
+        if (rnd.nextDouble() < 0.5) head(rnd.nextInt(head.length))
+        else "w" + math.pow(60.0, rnd.nextDouble()).toInt
+      }.mkString(" ")
+    }
+  }
+
+  test("block-rich phrases: exact, sloppy, multi-phrase and span-near engine == spec") {
+    val texts = stopHeadTexts(420, seed = 14)
+    val queries = Seq[Query](
+      PhraseQ(Seq("the", "of")),
+      PhraseQ(Seq("of", "the", "and")),
+      PhraseQ(Seq("the", "the")),
+      PhraseQ(Seq("and", "w1")),
+      PhraseQ(Seq("the", "of"), slop = 1),
+      PhraseQ(Seq("the", "the"), slop = 2),
+      PhraseQ(Seq("to", "w2", "and"), slop = 3),
+      MultiPhraseQ(Seq(Seq("the", "of"), Seq("and", "to"))),
+      MultiPhraseQ(Seq(Seq("the"), Seq("the", "w1"), Seq("of", "w3"))),
+      SpanNearQ(Seq(SpanTermQ("the"), SpanTermQ("and")), slop = 1, inOrder = true),
+      BoolQ(must = Seq(PhraseQ(Seq("the", "of")), TermQ("to"))))
+    val dir = indexOf(texts, "whitespace")
+    val reader = new graft.index.SegmentReader(
+      new java.io.File(dir, graft.index.SegmentFormat.segDirName(0)))
+    Seq("the", "of", "and", "to").foreach { t =>
+      assert(reader.termInfo(t).get.df > 2 * graft.index.SegmentFormat.BlockSize, t)
+    }
+    for (dps <- Seq(Int.MaxValue, 97)) checkAll(texts, "whitespace", queries, dps = dps)
+  }
+
   test("many docs per term: blocks + skip + wand agree with spec") {
     // >128 matching docs forces multi-block postings and header skips
     val texts = (0 until 400).map(i => if (i % 3 == 0) s"common w$i filler" else s"rare w$i filler")

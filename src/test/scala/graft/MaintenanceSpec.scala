@@ -70,6 +70,34 @@ class MaintenanceSpec extends AnyFunSuite with TempDirs {
     }
   }
 
+  test("merged multi-block payload postings are byte-identical to a direct single-segment build") {
+    // stop-word terms in most of 450 docs (more than 2 blocks of 128), often
+    // several times per doc, with payloads on some positions
+    val rnd = new scala.util.Random(56)
+    val head = Array("the", "of", "and")
+    val docs = (0 until 450).map { i =>
+      val ts = Seq.fill(4 + rnd.nextInt(30)) {
+        val t = if (rnd.nextBoolean()) head(rnd.nextInt(head.length)) else "w" + rnd.nextInt(40)
+        if (rnd.nextInt(3) == 0) t else s"$t|${rnd.nextInt(100)}.5"
+      }
+      (i.toLong, ts.mkString(" "))
+    }
+    val multi = tmpDir()
+    val single = tmpDir()
+    LocalIndex.build(multi, docs, "delimited", docsPerSegment = 150, storePayloads = true)
+    LocalIndex.build(single, docs, "delimited", docsPerSegment = Int.MaxValue, storePayloads = true)
+    val reader = new SegmentReader(new File(single, SegmentFormat.segDirName(0)))
+    assert(reader.meta.hasPayloads)
+    head.foreach(t => assert(reader.termInfo(t).get.df > 2 * SegmentFormat.BlockSize, t))
+
+    Maintenance.mergeSegments(multi, Seq(0, 1, 2), newSegId = 3)
+    for (f <- Seq("terms.bin", "postings.bin", "norms.bin", "doclens.bin", "terms.idx")) {
+      val a = Files.readAllBytes(new File(multi, SegmentFormat.segDirName(3) + "/" + f).toPath)
+      val b = Files.readAllBytes(new File(single, SegmentFormat.segDirName(0) + "/" + f).toPath)
+      assert(java.util.Arrays.equals(a, b), s"$f differs after merge")
+    }
+  }
+
   test("duplicate merge attempts never unpublish a live segment; del bitset rides the publish rename") {
     val ts = texts(90)
     val docs = ts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
