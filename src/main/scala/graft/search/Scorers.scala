@@ -441,55 +441,35 @@ final class ExactPhraseScorer(
 
   // per-term position buffers (grown on demand) and merge pointers
   private val bufs = Array.fill(pis.length)(new Array[Int](8))
-  private val lens = new Array[Int](pis.length)
   private val ptrs = new Array[Int](pis.length)
 
-  /** Count alignment positions: p such that term_i occurs at p + offset_i. */
+  /** Count alignment positions: p such that term_i occurs at p + offset_i.
+    * Each term's positions are sorted ascending, so one linear merge with a
+    * pointer per term reads each position once. */
   private def phraseFreq(): Int = {
     var i = 0
     while (i < pis.length) {
       val f = pis(i).freq
-      val ps = PhraseMatch.atLeast(bufs(i), f)
-      bufs(i) = ps
+      if (bufs(i).length < f) bufs(i) = new Array[Int](math.max(f, 2 * bufs(i).length))
+      val ps = bufs(i)
       pis(i).positionsInto(ps)
       val off = offsets(i)
       var j = 0
       while (j < f) { ps(j) -= off; j += 1 }
-      lens(i) = f
+      ptrs(i) = 0
       i += 1
     }
-    PhraseMatch.countAligned(bufs, lens, ptrs)
-  }
-
-  override def score(): Double = {
-    val d = inner.docID
-    weight.score(_freq.toFloat, norms(d), doclens(d))
-  }
-}
-
-/** Position intersection shared by the exact phrase scorers. */
-private[search] object PhraseMatch {
-
-  /** `buf` if it holds at least `n` entries, else a new buffer that does. */
-  def atLeast(buf: Array[Int], n: Int): Array[Int] =
-    if (buf.length >= n) buf else new Array[Int](math.max(n, 2 * buf.length))
-
-  /** Counts the entries p among the first `lens(0)` of `pos(0)` that occur
-    * among the first `lens(t)` of every other `pos(t)`. Each array is sorted
-    * ascending; one linear merge with a pointer per array (`ptrs`, scratch
-    * of the same length as `pos`) reads each entry once. */
-  def countAligned(pos: Array[Array[Int]], lens: Array[Int], ptrs: Array[Int]): Int = {
-    java.util.Arrays.fill(ptrs, 0)
-    val first = pos(0)
+    val first = bufs(0)
+    val n0 = pis(0).freq
     var count = 0
     var j = 0
-    while (j < lens(0)) {
+    while (j < n0) {
       val p = first(j)
       var all = true
       var t = 1
-      while (t < pos.length && all) {
-        val a = pos(t)
-        val n = lens(t)
+      while (t < pis.length && all) {
+        val a = bufs(t)
+        val n = pis(t).freq
         var k = ptrs(t)
         while (k < n && a(k) < p) k += 1
         ptrs(t) = k
@@ -501,6 +481,11 @@ private[search] object PhraseMatch {
       j += 1
     }
     count
+  }
+
+  override def score(): Double = {
+    val d = inner.docID
+    weight.score(_freq.toFloat, norms(d), doclens(d))
   }
 }
 
@@ -623,60 +608,21 @@ final class MultiPhraseScorer(
       _doc
     }
     override def score(): Double = 0.0
-    private val bufs = Array.fill(pis.length)(new Array[Int](8))
-    private val lens = new Array[Int](pis.length)
-    private val heads = new Array[Int](pis.length)
-    /** The offset-adjusted sorted distinct position union at the doc of the
-      * last [[loadPositions]]: its first `unionLen` entries. */
-    var union = new Array[Int](8)
-    var unionLen = 0
-
-    def loadPositions(doc: Int, offset: Int): Unit = {
-      var total = 0
+    /** offset-adjusted sorted distinct position union at the current doc. */
+    def positionsAt(doc: Int, offset: Int): Array[Int] = {
+      val all = scala.collection.mutable.ArrayBuffer.empty[Int]
       var i = 0
       while (i < pis.length) {
-        lens(i) = 0
-        heads(i) = 0
-        if (pis(i).docID == doc) {
-          bufs(i) = PhraseMatch.atLeast(bufs(i), pis(i).freq)
-          lens(i) = pis(i).positionsInto(bufs(i))
-          total += lens(i)
-        }
+        if (pis(i).docID == doc) all ++= pis(i).positions().map(_ - offset)
         i += 1
       }
-      union = PhraseMatch.atLeast(union, total)
-      // k-way merge by min-scan over the sorted per-term arrays, dropping repeats
-      var n = 0
-      var more = true
-      while (more) {
-        var min = Int.MaxValue
-        more = false
-        i = 0
-        while (i < pis.length) {
-          if (heads(i) < lens(i) && (!more || bufs(i)(heads(i)) < min)) { min = bufs(i)(heads(i)); more = true }
-          i += 1
-        }
-        if (more) {
-          i = 0
-          while (i < pis.length) {
-            while (heads(i) < lens(i) && bufs(i)(heads(i)) == min) heads(i) += 1
-            i += 1
-          }
-          union(n) = min - offset
-          n += 1
-        }
-      }
-      unionLen = n
+      all.distinct.sorted.toArray
     }
   }
 
   private val slotScorers = slots.map(new SlotScorer(_))
   private val inner = new ConjunctionScorer(slotScorers.map(s => s: Scorer))
   private var _freq = 0
-  // per-slot position unions, their lengths, merge pointers
-  private val unions = new Array[Array[Int]](slots.length)
-  private val lens = new Array[Int](slots.length)
-  private val ptrs = new Array[Int](slots.length)
 
   override def docID: Int = inner.docID
   override def nextDoc(): Int = toMatch(inner.nextDoc())
@@ -685,15 +631,11 @@ final class MultiPhraseScorer(
   private def toMatch(first: Int): Int = {
     var d = first
     while (d != Scorer.NoMoreDocs) {
-      var i = 0
-      while (i < slotScorers.length) {
-        val s = slotScorers(i)
-        s.loadPositions(d, i)
-        unions(i) = s.union
-        lens(i) = s.unionLen
-        i += 1
-      }
-      _freq = PhraseMatch.countAligned(unions, lens, ptrs)
+      val arrs = slotScorers.zipWithIndex.map { case (s, i) => s.positionsAt(d, i) }
+      _freq =
+        if (arrs.exists(_.isEmpty)) 0
+        else arrs(0).count(p => (1 until arrs.length).forall(i =>
+          java.util.Arrays.binarySearch(arrs(i), p) >= 0))
       if (_freq > 0) return d
       d = inner.nextDoc()
     }
