@@ -12,12 +12,14 @@ import graft.codec.{ByteReader, ByteWriter}
   * (/root/reference/src/core/index/SegmentInfos.cpp:29-31,226-289):
   *  - each segment directory is published by atomic rename (task-level
   *    commit — the per-partition lineage row of the north rule);
-  *  - the driver then writes `commits/commit_<gen>.json` naming the full
-  *    segment set (snapshot). Readers use the highest complete generation;
-  *    a half-written commit file is ignored because generation files are
-  *    write-once + atomic-renamed.
-  * Resume = planned segments MINUS segments already on disk with valid
-  * meta (anti-join on segId). A commit generation ([[IndexMetaIO.Snapshot]])
+  *  - the driver then writes the generation's snapshot naming the full
+  *    segment set: a binary `commits/commit_<gen>.segs`, which readers
+  *    load, then its human-readable `commit_<gen>.json` twin. Readers take
+  *    the highest generation with a `.json`, which lands last, so a
+  *    half-written generation is never read (both files are write-once +
+  *    atomic-renamed).
+  * Resume skips the doc ranges that committed segments already cover
+  * (`IndexBuilder.build`). A commit generation ([[IndexMetaIO.Snapshot]])
   * holds `segments`, `analyzer`, `hasPositions`, `delGen`, `streamBatch` and
   * `format`; every writer commits through [[IndexMetaIO.commit]], which
   * starts from the latest generation, so every commit carries all of them.

@@ -87,8 +87,8 @@ object Maintenance {
     * concatenate (localDoc' = docBase - newBase + localDoc), term streams
     * k-way merge via a simple min-scan over the per-segment sorted
     * iterators. Produces a segment byte-compatible with a direct build of
-    * the union. Driver-side (one merge = one task's worth of work; a
-    * compaction job maps this over groups of small segments). */
+    * the union. Runs inside a task of [[compact]]'s job, one merge group
+    * per task; `compact` commits the new snapshot and retires the inputs. */
   def mergeSegments(indexDir: String, segIds: Seq[Int], newSegId: Int): SegmentMeta = {
     require(segIds.nonEmpty)
     // bound source readers by the COMMITTED delgen: a crashed uncommitted
@@ -179,11 +179,7 @@ object Maintenance {
     // writer publishes it INSIDE the same atomic rename as the segment —
     // no window where the merged segment is readable without its tombstones
     writer.addCarriedDeletes(carried, committedGen)
-    val meta = writer.finish()
-
-    // retire the merged inputs AFTER the new segment is published, then
-    // snapshot (readers only ever see snapshotted sets)
-    meta
+    writer.finish()
   }
 
   /** Tiered compaction: adjacent runs of sub-`minDocs` segments merge;

@@ -75,17 +75,15 @@ object SegmentFormat {
   def purgeOrphanDeletes(segDir: java.io.File, committedGen: Int): Unit = {
     val names = segDir.list()
     if (names != null) names.foreach { n =>
-      if (n.startsWith("del_")) {
-        if (n.endsWith(".bin.tmp")) new java.io.File(segDir, n).delete()
-        else if (n.endsWith(".bin")) {
-          val g =
-            try n.substring(4, n.length - 4).toInt
-            catch { case _: NumberFormatException => -1 }
-          if (g > committedGen) new java.io.File(segDir, n).delete()
-        }
-      }
+      if ((n.startsWith("del_") && n.endsWith(".bin.tmp")) || delFileGen(n).exists(_ > committedGen))
+        new java.io.File(segDir, n).delete()
     }
   }
+
+  /** The generation `g` of a `del_<g>.bin` file name; None for other names. */
+  private def delFileGen(name: String): Option[Int] =
+    if (name.startsWith("del_") && name.endsWith(".bin")) name.substring(4, name.length - 4).toIntOption
+    else None
 
   /** The newest deletion file with generation ≤ `genBound`, or the
     * un-suffixed legacy `del.bin` (pre-generational indexes) when no
@@ -95,12 +93,7 @@ object SegmentFormat {
     val names = segDir.list()
     var best = -1
     if (names != null) names.foreach { n =>
-      if (n.startsWith("del_") && n.endsWith(".bin")) {
-        val g =
-          try n.substring(4, n.length - 4).toInt
-          catch { case _: NumberFormatException => -1 }
-        if (g > best && g <= genBound) best = g
-      }
+      delFileGen(n).foreach(g => if (g > best && g <= genBound) best = g)
     }
     if (best >= 0) Some(new java.io.File(segDir, delFileName(best)))
     else {
@@ -144,9 +137,10 @@ object SegmentFormat {
   def segDirName(segId: Int): String = f"seg-$segId%05d"
 }
 
-/** Streaming segment writer. Consumes rows already sorted by
-  * (term, localDoc) — the Spark build pipeline guarantees this via
-  * sortWithinPartitions — and writes the four segment files:
+/** Streaming segment writer. Consumes postings in (term, localDoc) order
+  * — the build's inverter sorts each segment's terms before it flushes
+  * (`IndexBuilder.writeSegments`) and `Maintenance.mergeSegments` k-way
+  * merges sorted term streams — and writes the four segment files:
   *
   *  - norms.bin:   1 SmallFloat byte per doc (Lucene norm quantization)
   *  - doclens.bin: exact doc length VInts (exact-dl scoring + stats)
@@ -971,16 +965,17 @@ final class PostingsIterator(
     posOff = posIn.pos
   }
 
-  /** Writes the positions of the current posting into `buf` (length at
-    * least `freq`) and returns `freq`; requires needPositions. Reads go
-    * through the block's position cursor (see [[positions]]). */
-  def positionsInto(buf: Array[Int]): Int = {
+  /** Writes the positions of the current posting into `buf` from index
+    * `off` (room for at least `freq`) and returns `freq`; requires
+    * needPositions. Reads go through the block's position cursor (see
+    * [[positions]]). */
+  def positionsInto(buf: Array[Int], off: Int = 0): Int = {
     seekPositions()
     val f = freqs(blockIdx)
     var prev = 0
     var j = 0
     while (j < f) {
-      prev += posIn.readVInt(); buf(j) = prev
+      prev += posIn.readVInt(); buf(off + j) = prev
       if (filePayloads) posIn.skip(posIn.readVInt())
       j += 1
     }

@@ -199,7 +199,7 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     * cross-index searcher expands against the union of its sub-indexes'
     * sets (the reference's rewrite against the combined reader). */
   private[search] def multiTermMatches(queries: Seq[Query]): Set[String] = {
-    val nodes = queries.flatMap(IndexSearcher.collectMultiTermNodes).distinct
+    val nodes = queries.flatMap(Query.collectMultiTermNodes).distinct
     if (nodes.isEmpty) return Set.empty
     val bcNodes = spark.sparkContext.broadcast(nodes)
     val matched = segmentTasks(segDirs)
@@ -521,17 +521,6 @@ object IndexSearcher {
 
   /** The scoring job's budget when it has no deadline. */
   private[search] val NoDeadline = Long.MaxValue
-
-  private[search] def collectMultiTermNodes(q: Query): Seq[MultiTermQ] = q match {
-    case mt: MultiTermQ => Seq(mt)
-    case BoolQ(m, s, n, _) => (m ++ s ++ n).flatMap(collectMultiTermNodes)
-    case ConstantScoreQ(inner, _) => collectMultiTermNodes(inner)
-    case CachedQ(inner) => collectMultiTermNodes(inner)
-    case CustomScoreQ(sub, _, _, _) => collectMultiTermNodes(sub)
-    case DisMaxQ(ds, _, _) => ds.flatMap(collectMultiTermNodes)
-    case FilteredQ(q2, f) => collectMultiTermNodes(q2) ++ collectMultiTermNodes(f)
-    case _ => Nil
-  }
 
   /** Prepare a batch: expand each query's multi-term nodes against
     * `matched` (every dictionary term some node matches, walked in the

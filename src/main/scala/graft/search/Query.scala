@@ -247,30 +247,20 @@ object Query {
     case PayloadNearQ(cs, _, _, _, _) => cs.flatMap(spanAllTerms).toSet
   }
 
-  def needsPositions(q: Query): Boolean = q match {
-    case _: PhraseQ => true
-    case _: PayloadTermQ => true
-    case _: MultiPhraseQ => true
-    case _: SpanQuery => true
-    case BoolQ(m, s, n, _) => (m ++ s ++ n).exists(needsPositions)
-    case ConstantScoreQ(inner, _) => needsPositions(inner)
-    case CachedQ(inner) => needsPositions(inner)
-    case CustomScoreQ(sub, _, _, _) => needsPositions(sub)
-    case DisMaxQ(ds, _, _) => ds.exists(needsPositions)
-    case FilteredQ(q2, f) => needsPositions(q2) || needsPositions(f)
-    case _ => false
+  /** Every multi-term node (wildcard, prefix, fuzzy, ...) in `q`, in
+    * clause order; these are the nodes expansion rewrites. */
+  def collectMultiTermNodes(q: Query): Seq[MultiTermQ] = q match {
+    case mt: MultiTermQ => Seq(mt)
+    case BoolQ(m, s, n, _) => (m ++ s ++ n).flatMap(collectMultiTermNodes)
+    case ConstantScoreQ(inner, _) => collectMultiTermNodes(inner)
+    case CachedQ(inner) => collectMultiTermNodes(inner)
+    case CustomScoreQ(sub, _, _, _) => collectMultiTermNodes(sub)
+    case DisMaxQ(ds, _, _) => ds.flatMap(collectMultiTermNodes)
+    case FilteredQ(q2, f) => collectMultiTermNodes(q2) ++ collectMultiTermNodes(f)
+    case _ => Nil
   }
 
-  def hasMultiTerm(q: Query): Boolean = q match {
-    case _: MultiTermQ => true
-    case BoolQ(m, s, n, _) => (m ++ s ++ n).exists(hasMultiTerm)
-    case ConstantScoreQ(inner, _) => hasMultiTerm(inner)
-    case CachedQ(inner) => hasMultiTerm(inner)
-    case CustomScoreQ(sub, _, _, _) => hasMultiTerm(sub)
-    case DisMaxQ(ds, _, _) => ds.exists(hasMultiTerm)
-    case FilteredQ(q2, f) => hasMultiTerm(q2) || hasMultiTerm(f)
-    case _ => false
-  }
+  def hasMultiTerm(q: Query): Boolean = collectMultiTermNodes(q).nonEmpty
 
   /** Normalize: collapse 1-clause booleans (reference
     * BooleanQuery.cpp:87-102 rewrite). */

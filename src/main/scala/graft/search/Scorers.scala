@@ -404,26 +404,65 @@ final class MatchAllScorer(maxDoc: Int, value: Double) extends Scorer {
   override def score(): Double = value
 }
 
-/** Exact-phrase: docID leapfrog then in-doc sorted position intersection
-  * with query-offset normalization (reference ExactPhraseScorer.cpp:20-45,
-  * PhraseScorer.cpp:25-28). */
-final class ExactPhraseScorer(
-    pis: Array[PostingsIterator],
-    offsets: Array[Int],
+/** Phrase scorer for `PhraseQ` (exact and sloppy) and `MultiPhraseQ`
+  * (reference PhraseScorer.cpp, ExactPhraseScorer.cpp:20-45,
+  * SloppyPhraseScorer.cpp, MultiPhraseQuery.cpp). Slot i holds the terms
+  * that may stand at phrase offset i: one for a `PhraseQ`, the
+  * alternatives for a `MultiPhraseQ`. Docs: a conjunction over the slots,
+  * each slot sitting at the least docID of its alternatives. Positions: the
+  * alternatives on the doc decode into the slot's one reused buffer; a
+  * slot with several alternatives sorts it and drops repeats (the
+  * reference's per-slot union). Counting: slop 0 counts alignments with one
+  * linear merge, slop > 0 goes through [[SloppyPhrase.freq]]. */
+final class PhraseScorer(
+    slots: Array[Array[PostingsIterator]],
+    slop: Int,
     weight: TermWeight,
     norms: Array[Byte],
     doclens: Array[Int]) extends Scorer {
 
-  private val conj: Array[Scorer] = pis.map { pi =>
-    new Scorer {
-      override def docID: Int = pi.docID
-      override def nextDoc(): Int = pi.nextDoc()
-      override def advance(t: Int): Int = pi.advance(t)
-      override def score(): Double = 0.0
+  /** A slot's doc iterator: the least docID of its alternatives. */
+  private final class Slot(pis: Array[PostingsIterator]) extends Scorer {
+    private var _doc = -1
+    override def docID: Int = _doc
+    override def nextDoc(): Int = {
+      if (_doc == Scorer.NoMoreDocs) return _doc
+      var min = Scorer.NoMoreDocs
+      var i = 0
+      while (i < pis.length) {
+        val pi = pis(i)
+        if (pi.docID <= _doc) pi.nextDoc() // unstarted, or on the current doc
+        if (pi.docID < min) min = pi.docID
+        i += 1
+      }
+      _doc = min
+      _doc
     }
+    override def advance(target: Int): Int = {
+      if (_doc == Scorer.NoMoreDocs) return _doc
+      var min = Scorer.NoMoreDocs
+      var i = 0
+      while (i < pis.length) {
+        val pi = pis(i)
+        if (pi.docID < target) pi.advance(target)
+        if (pi.docID < min) min = pi.docID
+        i += 1
+      }
+      _doc = min
+      _doc
+    }
+    override def score(): Double = 0.0
   }
-  private val inner = new ConjunctionScorer(conj)
-  private var _freq = 0
+
+  private val slotDocs = slots.map(new Slot(_))
+  private val inner = new ConjunctionScorer(slotDocs.map(s => s: Scorer))
+  private val n = slots.length
+  private val offsets = Array.tabulate(n)(identity)
+  // per-slot position buffers (grown on demand), their lengths, merge pointers
+  private val bufs = Array.fill(n)(new Array[Int](8))
+  private val lens = new Array[Int](n)
+  private val ptrs = new Array[Int](n)
+  private var _freq = 0.0
 
   override def docID: Int = inner.docID
   override def nextDoc(): Int = toMatch(inner.nextDoc())
@@ -432,49 +471,65 @@ final class ExactPhraseScorer(
   private def toMatch(first: Int): Int = {
     var d = first
     while (d != Scorer.NoMoreDocs) {
-      _freq = phraseFreq()
-      if (_freq > 0) return d
+      var i = 0
+      while (i < n) { gather(i, d); i += 1 }
+      _freq = if (slop <= 0) exactFreq() else
+        SloppyPhrase.freq(Array.tabulate(n)(i => java.util.Arrays.copyOf(bufs(i), lens(i))),
+          offsets, slop)
+      if (_freq > 0.0) return d
       d = inner.nextDoc()
     }
     d
   }
 
-  // per-term position buffers (grown on demand) and merge pointers
-  private val bufs = Array.fill(pis.length)(new Array[Int](8))
-  private val ptrs = new Array[Int](pis.length)
-
-  /** Count alignment positions: p such that term_i occurs at p + offset_i.
-    * Each term's positions are sorted ascending, so one linear merge with a
-    * pointer per term reads each position once. */
-  private def phraseFreq(): Int = {
-    var i = 0
-    while (i < pis.length) {
-      val f = pis(i).freq
-      if (bufs(i).length < f) bufs(i) = new Array[Int](math.max(f, 2 * bufs(i).length))
-      val ps = bufs(i)
-      pis(i).positionsInto(ps)
-      val off = offsets(i)
-      var j = 0
-      while (j < f) { ps(j) -= off; j += 1 }
-      ptrs(i) = 0
-      i += 1
+  /** Decodes slot `i`'s positions at doc `d` into `bufs(i)`: every
+    * alternative on `d` appends its positions; several alternatives are
+    * sorted together and repeats dropped. */
+  private def gather(i: Int, d: Int): Unit = {
+    val pis = slots(i)
+    var len = 0
+    var a = 0
+    while (a < pis.length) {
+      val pi = pis(a)
+      if (pi.docID == d) {
+        val f = pi.freq
+        if (bufs(i).length < len + f)
+          bufs(i) = java.util.Arrays.copyOf(bufs(i), math.max(len + f, 2 * bufs(i).length))
+        len += pi.positionsInto(bufs(i), len)
+      }
+      a += 1
     }
+    if (pis.length > 1) {
+      val ps = bufs(i)
+      java.util.Arrays.sort(ps, 0, len)
+      var w = if (len > 0) 1 else 0
+      var r = 1
+      while (r < len) { if (ps(r) != ps(w - 1)) { ps(w) = ps(r); w += 1 }; r += 1 }
+      len = w
+    }
+    lens(i) = len
+  }
+
+  /** Count alignment positions: p such that slot i has a position p + i.
+    * Each slot's positions are sorted ascending, so one linear merge with a
+    * pointer per slot reads each position once. */
+  private def exactFreq(): Double = {
+    java.util.Arrays.fill(ptrs, 0)
     val first = bufs(0)
-    val n0 = pis(0).freq
     var count = 0
     var j = 0
-    while (j < n0) {
+    while (j < lens(0)) {
       val p = first(j)
       var all = true
       var t = 1
-      while (t < pis.length && all) {
+      while (t < n && all) {
         val a = bufs(t)
-        val n = pis(t).freq
+        val len = lens(t)
         var k = ptrs(t)
-        while (k < n && a(k) < p) k += 1
+        while (k < len && a(k) - t < p) k += 1
         ptrs(t) = k
-        if (k == n) return count // every later p is larger still
-        all = a(k) == p
+        if (k == len) return count // every later p is larger still
+        all = a(k) - t == p
         t += 1
       }
       if (all) count += 1
@@ -514,53 +569,6 @@ final class ConstantScoreScorer(inner: Scorer, value: Double) extends Scorer {
   override def score(): Double = value
 }
 
-/** Sloppy phrase: conjunction on docs, SloppyPhrase.freq on positions
-  * (reference SloppyPhraseScorer.cpp). */
-final class SloppyPhraseScorer(
-    pis: Array[PostingsIterator],
-    offsets: Array[Int],
-    slop: Int,
-    weight: TermWeight,
-    norms: Array[Byte],
-    doclens: Array[Int]) extends Scorer {
-
-  private val conj: Array[Scorer] = pis.map { pi =>
-    new Scorer {
-      override def docID: Int = pi.docID
-      override def nextDoc(): Int = pi.nextDoc()
-      override def advance(t: Int): Int = pi.advance(t)
-      override def score(): Double = 0.0
-    }
-  }
-  private val inner = new ConjunctionScorer(conj)
-  private var _freq = 0.0
-
-  override def docID: Int = inner.docID
-  override def nextDoc(): Int = toMatch(inner.nextDoc())
-  override def advance(target: Int): Int = toMatch(inner.advance(target))
-
-  private def toMatch(first: Int): Int = {
-    var d = first
-    while (d != Scorer.NoMoreDocs) {
-      val arrs = new Array[Array[Int]](pis.length)
-      var i = 0
-      while (i < pis.length) {
-        arrs(i) = pis(i).positions()
-        i += 1
-      }
-      _freq = SloppyPhrase.freq(arrs, offsets, slop)
-      if (_freq > 0.0) return d
-      d = inner.nextDoc()
-    }
-    d
-  }
-
-  override def score(): Double = {
-    val d = inner.docID
-    weight.score(_freq.toFloat, norms(d), doclens(d))
-  }
-}
-
 /** Query ∧ filter, scored by the query alone
   * (reference FilteredQuery.cpp — leapfrog intersect,
   * IndexSearcher.cpp:125-167). */
@@ -570,80 +578,4 @@ final class FilteredScorer(query: Scorer, filter: Scorer) extends Scorer {
   override def nextDoc(): Int = both.nextDoc()
   override def advance(target: Int): Int = both.advance(target)
   override def score(): Double = query.score()
-}
-
-/** Phrase with per-position term alternatives, exact matching
-  * (reference MultiPhraseQuery.cpp): doc-level conjunction of per-slot
-  * disjunctions, then position intersection over per-slot position UNIONS. */
-final class MultiPhraseScorer(
-    slots: Array[Array[PostingsIterator]],
-    weight: TermWeight,
-    norms: Array[Byte],
-    doclens: Array[Int]) extends Scorer {
-
-  // per-slot doc iterator = min over the slot's term iterators
-  private final class SlotScorer(pis: Array[PostingsIterator]) extends Scorer {
-    private var _doc = -1
-    private var started = false
-    override def docID: Int = _doc
-    override def nextDoc(): Int = {
-      if (_doc == Scorer.NoMoreDocs) return _doc
-      if (!started) { var i = 0; while (i < pis.length) { pis(i).nextDoc(); i += 1 }; started = true }
-      else { var i = 0; while (i < pis.length) { if (pis(i).docID == _doc) pis(i).nextDoc(); i += 1 } }
-      var min = Scorer.NoMoreDocs
-      var i = 0
-      while (i < pis.length) { if (pis(i).docID < min) min = pis(i).docID; i += 1 }
-      _doc = min
-      _doc
-    }
-    override def advance(target: Int): Int = {
-      if (_doc == Scorer.NoMoreDocs) return _doc
-      if (!started) { var i = 0; while (i < pis.length) { pis(i).nextDoc(); i += 1 }; started = true }
-      var i = 0
-      while (i < pis.length) { if (pis(i).docID < target) pis(i).advance(target); i += 1 }
-      var min = Scorer.NoMoreDocs
-      i = 0
-      while (i < pis.length) { if (pis(i).docID < min) min = pis(i).docID; i += 1 }
-      _doc = min
-      _doc
-    }
-    override def score(): Double = 0.0
-    /** offset-adjusted sorted distinct position union at the current doc. */
-    def positionsAt(doc: Int, offset: Int): Array[Int] = {
-      val all = scala.collection.mutable.ArrayBuffer.empty[Int]
-      var i = 0
-      while (i < pis.length) {
-        if (pis(i).docID == doc) all ++= pis(i).positions().map(_ - offset)
-        i += 1
-      }
-      all.distinct.sorted.toArray
-    }
-  }
-
-  private val slotScorers = slots.map(new SlotScorer(_))
-  private val inner = new ConjunctionScorer(slotScorers.map(s => s: Scorer))
-  private var _freq = 0
-
-  override def docID: Int = inner.docID
-  override def nextDoc(): Int = toMatch(inner.nextDoc())
-  override def advance(target: Int): Int = toMatch(inner.advance(target))
-
-  private def toMatch(first: Int): Int = {
-    var d = first
-    while (d != Scorer.NoMoreDocs) {
-      val arrs = slotScorers.zipWithIndex.map { case (s, i) => s.positionsAt(d, i) }
-      _freq =
-        if (arrs.exists(_.isEmpty)) 0
-        else arrs(0).count(p => (1 until arrs.length).forall(i =>
-          java.util.Arrays.binarySearch(arrs(i), p) >= 0))
-      if (_freq > 0) return d
-      d = inner.nextDoc()
-    }
-    d
-  }
-
-  override def score(): Double = {
-    val d = inner.docID
-    weight.score(_freq.toFloat, norms(d), doclens(d))
-  }
 }

@@ -84,10 +84,9 @@ object SegmentSearch {
   def sumOfSquaredWeights(q: Query, sim: Similarity, stats: CorpusStats,
       df: String => Long): Float = q match {
     case TermQ(t, boost) => sim.queryWeightSq(df(t), boost, stats)
-    case PhraseQ(ts, _, boost) =>
-      sim.phraseWeightSq(ts.map(t => sim.idf(df(t), stats)).sum, boost)
+    case PhraseQ(ts, _, boost) => sim.phraseWeightSq(idfSum(ts, sim, stats, df), boost)
     case MultiPhraseQ(slots, boost) =>
-      sim.phraseWeightSq(slots.flatten.map(t => sim.idf(df(t), stats)).sum, boost)
+      sim.phraseWeightSq(idfSum(slots.flatten, sim, stats, df), boost)
     case FilteredQ(q2, _) => sumOfSquaredWeights(q2, sim, stats, df)
     case BoolQ(m, s, _, _) => (m ++ s).map(sumOfSquaredWeights(_, sim, stats, df)).sum
     case sq: SpanQuery =>
@@ -111,6 +110,24 @@ object SegmentSearch {
         s"metadata field query not resolved against the source table: $m")
   }
 
+  private def idfSum(terms: Seq[String], sim: Similarity, stats: CorpusStats,
+      df: String => Long): Float = terms.map(t => sim.idf(df(t), stats)).sum
+
+  /** Scorer of a phrase given as slots of alternative terms (a `PhraseQ`
+    * term is a slot of one); None unless every slot has a term in the
+    * segment. */
+  private def phraseScorer(slots: Seq[Seq[String]], slop: Int, boost: Float,
+      reader: SegmentReader, sim: Similarity, stats: CorpusStats, df: String => Long,
+      queryNorm: Float): Option[Scorer] = {
+    val present = slots.map(_.flatMap(t => reader.termInfo(t)))
+    if (present.exists(_.isEmpty)) None
+    else {
+      val w = sim.phraseWeight(idfSum(slots.flatten, sim, stats, df), boost, queryNorm, stats)
+      val pis = present.map(_.map(ti => reader.postings(ti, needPositions = true)).toArray).toArray
+      Some(new PhraseScorer(pis, slop, w, reader.norms, reader.doclens))
+    }
+  }
+
   /** Build the scorer tree for one segment; None when a required clause is
     * absent from the segment (no possible match). */
   def scorer(q: Query, reader: SegmentReader, sim: Similarity, stats: CorpusStats,
@@ -124,18 +141,10 @@ object SegmentSearch {
       }
 
     case PhraseQ(ts, slop, boost) =>
-      val tis = ts.map(reader.termInfo)
-      if (tis.exists(_.isEmpty)) None
-      else {
-        val idfSum = ts.map(t => sim.idf(df(t), stats)).sum
-        val w = sim.phraseWeight(idfSum, boost, queryNorm, stats)
-        val pis = tis.flatten.map(ti => reader.postings(ti, needPositions = true)).toArray
-        if (slop <= 0)
-          Some(new ExactPhraseScorer(pis, ts.indices.toArray, w, reader.norms, reader.doclens))
-        else
-          Some(new SloppyPhraseScorer(pis, ts.indices.toArray, slop, w,
-            reader.norms, reader.doclens))
-      }
+      phraseScorer(ts.map(Seq(_)), slop, boost, reader, sim, stats, df, queryNorm)
+
+    case MultiPhraseQ(slots, boost) =>
+      phraseScorer(slots, 0, boost, reader, sim, stats, df, queryNorm)
 
     case MatchAllQ =>
       Some(new MatchAllScorer(reader.meta.docCount, queryNorm))
@@ -145,17 +154,6 @@ object SegmentSearch {
         qs <- scorer(q2, reader, sim, stats, df, queryNorm)
         fs <- scorer(f, reader, sim, stats, df, queryNorm)
       } yield new FilteredScorer(qs, fs)
-
-    case MultiPhraseQ(slots, boost) =>
-      // every slot needs at least one present alternative
-      val present = slots.map(_.flatMap(t => reader.termInfo(t)))
-      if (present.exists(_.isEmpty)) None
-      else {
-        val idfSum = slots.flatten.map(t => sim.idf(df(t), stats)).sum
-        val w = sim.phraseWeight(idfSum, boost, queryNorm, stats)
-        val pis = present.map(_.map(ti => reader.postings(ti, needPositions = true)).toArray).toArray
-        Some(new MultiPhraseScorer(pis, w, reader.norms, reader.doclens))
-      }
 
     case ConstantScoreQ(inner, boost) =>
       scorer(inner, reader, sim, stats, df, queryNorm)

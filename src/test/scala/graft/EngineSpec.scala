@@ -270,6 +270,10 @@ class EngineSpec extends AnyFunSuite with TempDirs {
       PhraseQ(Seq("to", "w2", "and"), slop = 3),
       MultiPhraseQ(Seq(Seq("the", "of"), Seq("and", "to"))),
       MultiPhraseQ(Seq(Seq("the"), Seq("the", "w1"), Seq("of", "w3"))),
+      // a repeated alternative: the slot's union drops the repeats
+      MultiPhraseQ(Seq(Seq("the", "the"), Seq("of"))),
+      // a wide slot (w0 is absent) beside a stop-word slot
+      MultiPhraseQ(Seq((0 until 40).map("w" + _), Seq("the"))),
       SpanNearQ(Seq(SpanTermQ("the"), SpanTermQ("and")), slop = 1, inOrder = true),
       BoolQ(must = Seq(PhraseQ(Seq("the", "of")), TermQ("to"))))
     val dir = indexOf(texts, "whitespace")
@@ -278,7 +282,18 @@ class EngineSpec extends AnyFunSuite with TempDirs {
     Seq("the", "of", "and", "to").foreach { t =>
       assert(reader.termInfo(t).get.df > 2 * graft.index.SegmentFormat.BlockSize, t)
     }
-    for (dps <- Seq(Int.MaxValue, 97)) checkAll(texts, "whitespace", queries, dps = dps)
+    val exact = queries.collect { case PhraseQ(ts, 0, _) => ts }
+    for (dps <- Seq(Int.MaxValue, 97)) {
+      checkAll(texts, "whitespace", queries, dps = dps)
+      // a phrase as one-term slots scores exactly as the phrase
+      val d = indexOf(texts, "whitespace", dps)
+      for (sim <- Seq(BM25(), ClassicTFIDF, BM25Exact()); ts <- exact) {
+        val phrase = LocalIndex.search(d, PhraseQ(ts), texts.size, sim)
+        assert(phrase.nonEmpty, ts)
+        assertSame(LocalIndex.search(d, MultiPhraseQ(ts.map(Seq(_))), texts.size, sim), phrase,
+          s"sim=$sim dps=$dps one-term slots of $ts")
+      }
+    }
   }
 
   test("many docs per term: blocks + skip + wand agree with spec") {
