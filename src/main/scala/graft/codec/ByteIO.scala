@@ -43,6 +43,9 @@ final class ByteWriter(initial: Int = 256) {
   }
   def writeBytes(bs: Array[Byte]): Unit = writeBytes(bs, 0, bs.length)
 
+  /** Append everything `other` holds (without copying it out first). */
+  def append(other: ByteWriter): Unit = writeBytes(other.buf, 0, other.len)
+
   def writeVInt(vIn: Int): Unit = {
     var v = vIn
     ensure(5)

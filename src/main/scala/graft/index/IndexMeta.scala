@@ -52,10 +52,14 @@ final case class IndexMeta(
 
 object IndexMetaIO {
 
-  /** On-disk segment format version, stamped into every commit snapshot.
-    * Bump when the term-dict/postings layout changes (v2: per-term skip
-    * tables + skipBytes in the term entry); readers of a mismatched index
-    * must rebuild rather than mis-parse. */
+  /** On-disk segment format version, stamped into every commit snapshot
+    * (v2: per-term skip tables + skipBytes in the term entry); a build
+    * refuses to resume an index stamped with another version. A layout
+    * feature of one segment does not bump it: it gets a trailing meta.bin
+    * flag that reads false when absent ([[SegmentMeta]]'s `hasUrls`,
+    * `inlineSingletons`), so older segments open and resume as they are
+    * and a merge rewrites them in the current layout. Only a change that
+    * cannot be flagged per segment bumps the version. */
   val FormatVersion = "2"
 
   /** One commit generation: `meta` plus what every commit carries unless its
@@ -88,6 +92,7 @@ object IndexMetaIO {
     w.writeByte(if (m.hasVectors) 1 else 0)
     w.writeByte(if (m.hasPayloads) 1 else 0)
     w.writeByte(if (m.hasUrls) 1 else 0)
+    w.writeByte(if (m.inlineSingletons) 1 else 0)
     w.toArray
   }
 
@@ -95,6 +100,7 @@ object IndexMetaIO {
     val r = new ByteReader(bytes)
     SegmentMeta(r.readVInt(), r.readVLong(), r.readVInt(), r.readVLong(),
       r.readVInt(), r.readVLong(), r.readVLong(), r.readString(), r.readByte() == 1,
+      r.remaining > 0 && r.readByte() == 1,
       r.remaining > 0 && r.readByte() == 1,
       r.remaining > 0 && r.readByte() == 1,
       r.remaining > 0 && r.readByte() == 1)
@@ -114,7 +120,7 @@ object IndexMetaIO {
       s""""postingCount":${m.postingCount},"bytes":${m.bytes},""" +
       s""""analyzer":${jsonStr(m.analyzer)},"hasPositions":${m.hasPositions},""" +
       s""""hasVectors":${m.hasVectors},"hasPayloads":${m.hasPayloads},""" +
-      s""""hasUrls":${m.hasUrls}}"""
+      s""""hasUrls":${m.hasUrls},"inlineSingletons":${m.inlineSingletons}}"""
 
   /** The one commit path: writes the next generation holding `meta`, with
     * `delGen` and `streamBatch` where the writer sets them and the latest

@@ -47,6 +47,7 @@ object Maintenance {
             d0 = pi.nextDoc()
           }
           if (df != ti.df) problems += s"term '${ti.term}': df $df != ${ti.df}"
+          if (ti.inlineDoc >= 0) problems ++= inlineProblems(r, ti)
           if (ti.skipBytes > 0 && prev >= 0) {
             // a skip-table advance to the last doc must agree with the scan
             val pj = r.postings(ti, needPositions = false)
@@ -81,6 +82,21 @@ object Maintenance {
       }
       SegmentCheck(segId, problems.isEmpty, problems.toSeq)
     }.collect().toSeq.sortBy(_.segId)
+  }
+
+  /** Problems with an inline singleton posting: its freq must be ≥ 1 and
+    * its positions strictly increasing. (Its doc is checked by the dict
+    * cursor, which refuses a doc ≥ docCount, and by the postings walk.) */
+  private def inlineProblems(r: SegmentReader, ti: TermInfo): Seq[String] = {
+    val pi = r.postings(ti, needPositions = r.meta.hasPositions)
+    pi.nextDoc()
+    if (pi.freq < 1) Seq(s"term '${ti.term}': inline posting has freq ${pi.freq}")
+    else if (!r.meta.hasPositions) Nil
+    else {
+      val ps = pi.positions()
+      if ((1 until ps.length).forall(i => ps(i - 1) < ps(i))) Nil
+      else Seq(s"term '${ti.term}': inline positions ${ps.mkString(",")} not increasing")
+    }
   }
 
   /** Merge ADJACENT segments (contiguous doc ranges) into one: doc spaces

@@ -27,12 +27,17 @@ final case class SegmentMeta(
     hasPositions: Boolean,
     hasVectors: Boolean = false,
     hasPayloads: Boolean = false,
-    hasUrls: Boolean = false) extends Serializable
+    hasUrls: Boolean = false,
+    inlineSingletons: Boolean = false) extends Serializable
 
 /** One term-dictionary entry (df + term-level max-impact metadata +
-  * postings location). */
+  * postings location). `inlineDoc` is the one doc of an inline singleton
+  * (a one-doc term of an `inlineSingletons` segment, stored in terms.bin):
+  * its freq is `maxFreq`, its doc's length `minDl`, and `postingsOffset` is
+  * where its positions start in terms.bin. -1 for postings in postings.bin. */
 final case class TermInfo(term: String, df: Int, maxFreq: Int, minDlByte: Byte,
-    minDl: Int, postingsOffset: Long, postingsBytes: Long, skipBytes: Int = 0)
+    minDl: Int, postingsOffset: Long, postingsBytes: Long, skipBytes: Int = 0,
+    inlineDoc: Int = -1)
 
 object SegmentFormat {
 
@@ -147,11 +152,16 @@ object SegmentFormat {
   *  - terms.bin:   prefix-compressed sorted term dict w/ df, term-level
   *                 max-impact metadata and postings offsets; every
   *                 TermIndexInterval-th entry restarts prefixing and is
-  *                 recorded in terms.idx
-  *  - postings.bin: per term, blocks of ≤128 postings: FOR-packed doc
-  *                 deltas + freqs, optional VInt position deltas, and
-  *                 per-block (lastDoc, maxFreq, minDl) block-max metadata
-  *                 enabling Block-Max WAND (Ding & Suel, WSDM 2011)
+  *                 recorded in terms.idx. A term in one doc keeps its
+  *                 posting here instead (inline singleton: doc, freq and
+  *                 positions — the layout is on [[TermCursor]]) and has no
+  *                 postings.bin block; meta.bin's `inlineSingletons` flag
+  *                 marks segments written this way
+  *  - postings.bin: per term in ≥2 docs, blocks of ≤128 postings:
+  *                 FOR-packed doc deltas + freqs, optional VInt position
+  *                 deltas, and per-block (lastDoc, maxFreq, minDl)
+  *                 block-max metadata enabling Block-Max WAND (Ding & Suel,
+  *                 WSDM 2011), then the term's skip table
   *
   * and, when asked to, the term-vector sidecar (vectors.bin/.idx) and each
   * doc's url (urls.bin/.idx, the reference's stored fields — FieldsWriter's
@@ -230,6 +240,10 @@ final class SegmentWriter(
   private val docBuf = new Array[Int](BlockSize)
   private val freqBuf = new Array[Int](BlockSize)
   private val posBuf = new ByteWriter(4096)
+  // flushBlock's scratch: packed-value inputs and the block's encoded data
+  private val deltaBuf = new Array[Int](BlockSize)
+  private val freqM1Buf = new Array[Int](BlockSize)
+  private val blockOut = new ByteWriter(512)
   private var bufN = 0
   private var prevDocInTerm = -1
   private var prevBlockLastDoc = -1
@@ -386,31 +400,30 @@ final class SegmentWriter(
       if (dl < bMinDl) bMinDl = dl
       i += 1
     }
-    // payload: packed (docDelta-1), packed (freq-1), positions bytes
-    val deltas = new Array[Int](n)
+    // block data: packed (docDelta-1), packed (freq-1), positions bytes
     var prev = prevBlockLastDoc
     i = 0
-    while (i < n) { deltas(i) = docBuf(i) - prev - 1; prev = docBuf(i); i += 1 }
-    val fm1 = new Array[Int](n)
-    i = 0
-    while (i < n) { fm1(i) = freqBuf(i) - 1; i += 1 }
-
-    val payload = new ByteWriter(512)
-    IntBlockCodec.encodeBlock(deltas, n, payload)
-    IntBlockCodec.encodeBlock(fm1, n, payload)
-    if (storePositions) {
-      payload.writeVInt(posBuf.size)
-      payload.writeBytes(posBuf.toArray)
+    while (i < n) {
+      deltaBuf(i) = docBuf(i) - prev - 1
+      prev = docBuf(i)
+      freqM1Buf(i) = freqBuf(i) - 1
+      i += 1
     }
-    val payloadArr = payload.toArray
+    blockOut.reset()
+    IntBlockCodec.encodeBlock(deltaBuf, n, blockOut)
+    IntBlockCodec.encodeBlock(freqM1Buf, n, blockOut)
+    if (storePositions) {
+      blockOut.writeVInt(posBuf.size)
+      blockOut.append(posBuf)
+    }
 
     postingsOut.writeVInt(n)
     postingsOut.writeVInt(lastDoc - prevBlockLastDoc)
     postingsOut.writeVInt(bMaxFreq)
     postingsOut.writeByte(SmallFloat.encodeNorm(bMinDl))
     postingsOut.writeVInt(bMinDl)
-    postingsOut.writeVInt(payloadArr.length)
-    postingsOut.writeBytes(payloadArr)
+    postingsOut.writeVInt(blockOut.size)
+    postingsOut.append(blockOut)
 
     prevBlockLastDoc = lastDoc
     bufN = 0
@@ -418,7 +431,9 @@ final class SegmentWriter(
   }
 
   private def endTerm(): Unit = {
-    flushBlock()
+    // a one-doc term stays in the dict (inline singleton), others get blocks
+    val inline = curDf == 1
+    if (!inline) flushBlock()
     // append the term's skip table after its blocks (delta VInts)
     val skipStart = postingsOut.size
     if (skipPrevLast.nonEmpty) {
@@ -435,7 +450,7 @@ final class SegmentWriter(
       }
     }
     val skipBytes = postingsOut.size - skipStart
-    // term dict entry
+    // term dict entry (layout: TermCursor)
     val restart = termCount % TermIndexInterval == 0
     val prefixLen =
       if (restart || prevTerm == null) 0
@@ -457,13 +472,22 @@ final class SegmentWriter(
     termsOut.writeVInt(prefixLen)
     termsOut.writeString(suffix)
     termsOut.writeVInt(curDf)
-    termsOut.writeVInt(curMaxFreq)
-    termsOut.writeByte(SmallFloat.encodeNorm(curMinDl))
-    termsOut.writeVInt(curMinDl)
-    termsOut.writeVLong(curPostingsStart - lastPostingsEnd) // delta, usually 0
-    termsOut.writeVLong(postingsOut.size.toLong - curPostingsStart) // length incl. skip table
-    termsOut.writeVInt(skipBytes)
-    lastPostingsEnd = postingsOut.size.toLong
+    if (inline) {
+      val freq = freqBuf(0)
+      termsOut.writeVInt(docBuf(0) << 1 | (if (freq == 1) 1 else 0))
+      if (freq > 1) termsOut.writeVInt(freq)
+      termsOut.append(posBuf)
+      posBuf.reset()
+      bufN = 0
+    } else {
+      termsOut.writeVInt(curMaxFreq)
+      termsOut.writeByte(SmallFloat.encodeNorm(curMinDl))
+      termsOut.writeVInt(curMinDl)
+      termsOut.writeVLong(curPostingsStart - lastPostingsEnd) // delta, usually 0
+      termsOut.writeVLong(postingsOut.size.toLong - curPostingsStart) // length incl. skip table
+      termsOut.writeVInt(skipBytes)
+      lastPostingsEnd = postingsOut.size.toLong
+    }
 
     prevTerm = curTerm
     curTerm = null
@@ -503,7 +527,8 @@ final class SegmentWriter(
 
     val bytes = tmpDir.listFiles().map(_.length()).sum
     val meta = SegmentMeta(segId, docBase, docCount, sumDl, termCount,
-      postingCount, bytes, analyzerName, storePositions, storeVectors, storePayloads, storeUrls)
+      postingCount, bytes, analyzerName, storePositions, storeVectors, storePayloads, storeUrls,
+      inlineSingletons = true)
     writeFile(new File(tmpDir, "meta.bin"), IndexMetaIO.encodeSegment(meta))
     // carried del bitset rides inside the same atomic rename (after meta.bin
     // so the byte count stays the segment-proper size)
@@ -725,7 +750,7 @@ final class SegmentReader(val dir: File, delGenBound: Int = Int.MaxValue) {
   }
 
   /** Iterate the whole term dictionary (for stats jobs / merge). */
-  def allTerms: Iterator[TermInfo] = termsIterator(new TermCursor(termsReader(0), 0L), null)
+  def allTerms: Iterator[TermInfo] = termsIterator(newCursor(0, 0L), null)
 
   /** Sorted term iterator starting at the first term >= `lower` (multi-term
     * expansion seek — TermRangeTermEnum/PrefixQuery pattern). */
@@ -755,7 +780,10 @@ final class SegmentReader(val dir: File, delGenBound: Int = Int.MaxValue) {
   }
 
   private def cursorAt(sample: Int): TermCursor =
-    new TermCursor(termsReader(idxTermsOffsets(sample).toInt), idxPostOffsets(sample))
+    newCursor(idxTermsOffsets(sample).toInt, idxPostOffsets(sample))
+
+  private def newCursor(termsOffset: Int, postingsStart: Long): TermCursor =
+    new TermCursor(termsReader(termsOffset), postingsStart, meta, norms, doclens)
 
   /** The entries of `c` from the first term >= `lower` (null = all); only
     * returned entries build their term String. */
@@ -773,6 +801,13 @@ final class SegmentReader(val dir: File, delGenBound: Int = Int.MaxValue) {
     }
 
   def postings(ti: TermInfo, needPositions: Boolean): PostingsIterator = {
+    if (ti.inlineDoc >= 0)
+      new PostingsIterator(termsReader(ti.postingsOffset.toInt), 1, meta.hasPositions,
+        needPositions, filePayloads = meta.hasPayloads, single = ti)
+    else blockPostings(ti, needPositions)
+  }
+
+  private def blockPostings(ti: TermInfo, needPositions: Boolean): PostingsIterator = {
     // decode the term's skip table (appended after its blocks)
     var skipDocs: Array[Int] = null
     var skipOffs: Array[Int] = null
@@ -803,12 +838,19 @@ final class SegmentReader(val dir: File, delGenBound: Int = Int.MaxValue) {
 /** Decodes term-dictionary entries forward from a restart point of
   * terms.bin; the one decoder of the entry layout written by
   * [[SegmentWriter]] (`endTerm`): VInt shared-prefix length in UTF-16
-  * chars, the suffix as VInt byte length + UTF-8, VInt df, VInt maxFreq,
-  * the min-doclen norm byte, VInt minDl, VLong postings-offset delta,
-  * VLong postings length and VInt skip-table length. The current term
-  * lives in a char buffer the cursor owns: stepping and comparing build no
-  * String, and [[term]] makes one only when asked. One cursor per caller. */
-private final class TermCursor(r: ByteReader, postingsStart: Long) {
+  * chars, the suffix as VInt byte length + UTF-8, VInt df, then either
+  *  - postings in postings.bin: VInt maxFreq, the min-doclen norm byte,
+  *    VInt minDl, VLong postings-offset delta, VLong postings length and
+  *    VInt skip-table length; or
+  *  - when df = 1 in an `inlineSingletons` segment, the posting itself:
+  *    VInt (doc << 1 | freq == 1), VInt freq only when freq > 1, then its
+  *    positions (and payloads) in a block's per-position layout. The
+  *    entry's maxFreq is freq, and its minDl and norm byte are the doc's.
+  * The current term lives in a char buffer the cursor owns: stepping and
+  * comparing build no String, and [[term]] makes one only when asked. One
+  * cursor per caller. */
+private final class TermCursor(r: ByteReader, postingsStart: Long, seg: SegmentMeta,
+    norms: Array[Byte], doclens: Array[Int]) {
   private var chars = new Array[Char](32)
   private var len = 0
   private var postingsEnd = postingsStart
@@ -819,6 +861,7 @@ private final class TermCursor(r: ByteReader, postingsStart: Long) {
   private var postingsOffset = 0L
   private var postingsBytes = 0L
   private var skipBytes = 0
+  private var inlineDoc = -1
 
   def hasNext: Boolean = r.remaining > 0
 
@@ -832,13 +875,33 @@ private final class TermCursor(r: ByteReader, postingsStart: Long) {
       chars = java.util.Arrays.copyOf(chars, math.max(2 * chars.length, prefixLen + n))
     len = prefixLen + r.readUtf8(n, chars, prefixLen)
     df = r.readVInt()
-    maxFreq = r.readVInt()
-    minDlByte = r.readByte()
-    minDl = r.readVInt()
-    postingsOffset = postingsEnd + r.readVLong()
-    postingsBytes = r.readVLong()
-    skipBytes = r.readVInt()
-    postingsEnd = postingsOffset + postingsBytes
+    if (df == 1 && seg.inlineSingletons) {
+      val code = r.readVInt()
+      inlineDoc = code >>> 1
+      if (inlineDoc >= seg.docCount)
+        throw new IllegalStateException(s"inline posting of doc $inlineDoc in a ${seg.docCount}-doc segment")
+      maxFreq = if ((code & 1) != 0) 1 else r.readVInt()
+      postingsOffset = r.pos
+      postingsBytes = 0L
+      skipBytes = 0
+      if (seg.hasPositions) { // step over the positions
+        var j = maxFreq
+        while (j > 0) {
+          r.readVInt()
+          if (seg.hasPayloads) r.skip(r.readVInt())
+          j -= 1
+        }
+      }
+    } else {
+      inlineDoc = -1
+      maxFreq = r.readVInt()
+      minDlByte = r.readByte()
+      minDl = r.readVInt()
+      postingsOffset = postingsEnd + r.readVLong()
+      postingsBytes = r.readVLong()
+      skipBytes = r.readVInt()
+      postingsEnd = postingsOffset + postingsBytes
+    }
   }
 
   /** The current term against `term` in [[TermOrder]]. */
@@ -848,7 +911,11 @@ private final class TermCursor(r: ByteReader, postingsStart: Long) {
 
   /** The current entry, named `term` (which must equal it). */
   def info(term: String): TermInfo =
-    TermInfo(term, df, maxFreq, minDlByte, minDl, postingsOffset, postingsBytes, skipBytes)
+    if (inlineDoc < 0)
+      TermInfo(term, df, maxFreq, minDlByte, minDl, postingsOffset, postingsBytes, skipBytes)
+    else
+      TermInfo(term, 1, maxFreq, norms(inlineDoc), doclens(inlineDoc), postingsOffset, 0L, 0,
+        inlineDoc)
 }
 
 /** Decodes `n` front-coded urls from a restart point of urls.bin
@@ -877,7 +944,11 @@ private final class UrlIterator(r: ByteReader, private var n: Int)
   * plus the block-max extension (`blockLastDoc`/`blockMaxScore`/
   * `skipToBlockContaining`) used by WAND. Decodes 128 postings at a time
   * into flat int arrays (bulk-read pattern of the reference's TermScorer,
-  * /root/reference/src/core/search/TermScorer.cpp:49-70). */
+  * /root/reference/src/core/search/TermScorer.cpp:49-70).
+  *
+  * An inline singleton (`single`, see [[TermInfo]]) is one block whose
+  * header and postings come from its dict entry; `in` sits on its positions
+  * in terms.bin. It walks the same states as a one-posting block. */
 final class PostingsIterator(
     in: ByteReader,
     val df: Int,
@@ -885,7 +956,8 @@ final class PostingsIterator(
     needPositions: Boolean,
     skipDocs: Array[Int] = null,
     skipOffs: Array[Int] = null,
-    filePayloads: Boolean = false) {
+    filePayloads: Boolean = false,
+    single: TermInfo = null) {
 
   import SegmentFormat._
 
@@ -1016,30 +1088,43 @@ final class PostingsIterator(
     blockDecoded = false
     if (consumed >= df) return false
     prevBlockLast = curBlockLast
-    blockN = in.readVInt()
-    curBlockLast = prevBlockLast + in.readVInt()
-    blockMaxFreqV = in.readVInt()
-    blockMinDlByteV = in.readByte()
-    blockMinDlV = in.readVInt()
-    payloadLen = in.readVInt()
+    if (single == null) {
+      blockN = in.readVInt()
+      curBlockLast = prevBlockLast + in.readVInt()
+      blockMaxFreqV = in.readVInt()
+      blockMinDlByteV = in.readByte()
+      blockMinDlV = in.readVInt()
+      payloadLen = in.readVInt()
+    } else {
+      blockN = 1
+      curBlockLast = single.inlineDoc
+      blockMaxFreqV = single.maxFreq
+      blockMinDlByteV = single.minDlByte
+      blockMinDlV = single.minDl
+      payloadLen = 0
+    }
     headerPending = true
     consumed += blockN
     true
   }
 
   private def decodeBlock(): Unit = {
-    IntBlockCodec.decodeBlock(in, blockN, docs)
-    var prev = prevBlockLast
-    var i = 0
-    while (i < blockN) { prev += docs(i) + 1; docs(i) = prev; i += 1 }
-    IntBlockCodec.decodeBlock(in, blockN, freqs)
-    i = 0
-    while (i < blockN) { freqs(i) += 1; i += 1 }
-    if (filePositions) {
-      val pb = in.readVInt()
-      if (needPositions) { posBlockStart = in.pos; posIdx = 0; posOff = posBlockStart }
-      in.skip(pb)
+    var posBytes = 0
+    if (single == null) {
+      IntBlockCodec.decodeBlock(in, blockN, docs)
+      var prev = prevBlockLast
+      var i = 0
+      while (i < blockN) { prev += docs(i) + 1; docs(i) = prev; i += 1 }
+      IntBlockCodec.decodeBlock(in, blockN, freqs)
+      i = 0
+      while (i < blockN) { freqs(i) += 1; i += 1 }
+      if (filePositions) posBytes = in.readVInt()
+    } else {
+      docs(0) = curBlockLast
+      freqs(0) = blockMaxFreqV
     }
+    if (posIn != null) { posBlockStart = in.pos; posIdx = 0; posOff = posBlockStart }
+    in.skip(posBytes)
     headerPending = false
     blockDecoded = true
     blockIdx = 0

@@ -490,4 +490,143 @@ class EngineSpec extends AnyFunSuite with TempDirs {
     val mismatches = failures.size
     assert(mismatches == 0, s"$mismatches mismatches, first: ${failures.peek()}")
   }
+
+  /** What a one-doc term's iterator shows under every access pattern: the
+    * same calls on an inline singleton and on the old layout's one-posting
+    * block must show the same. */
+  private def singletonTrace(r: graft.index.SegmentReader, ti: graft.index.TermInfo,
+      w: graft.score.TermWeight): Seq[Any] = {
+    val hasPos = r.meta.hasPositions
+    val hasPays = r.meta.hasPayloads
+    def open() = r.postings(ti, needPositions = hasPos)
+    val out = Seq.newBuilder[Any]
+    def reads(pi: graft.index.PostingsIterator): Unit = {
+      out += pi.freq
+      if (hasPos) {
+        def into(): Seq[Int] = {
+          val buf = Array.fill(pi.freq + 2)(-7)
+          out += pi.positionsInto(buf, 1)
+          buf.toSeq
+        }
+        def pays(): Seq[Option[Seq[Byte]]] =
+          if (hasPays) pi.payloads().toSeq.map(p => Option(p).map(_.toSeq)) else Nil
+        out ++= Seq(pi.positions().toSeq, into(), pays(), pi.positions().toSeq, pays(), into())
+      }
+    }
+    val first = open()
+    val d = first.nextDoc()
+    out += d
+    reads(first)
+    out ++= Seq(first.nextDoc(), first.nextDoc(), first.advance(d))
+    for (target <- Seq(math.max(0, d - 1), d, d + 1)) {
+      val pi = open()
+      out += pi.advance(target)
+      if (pi.docID != graft.index.SegmentFormat.NoMoreDocs) reads(pi)
+      out += pi.nextDoc()
+    }
+    for (target <- Seq(0, d, d + 1)) {
+      val pi = open()
+      out ++= Seq(pi.skipToBlockContaining(target), pi.blockLastDoc, pi.blockMaxScore(w), pi.docID)
+      out += pi.nextDoc()
+      if (pi.docID != graft.index.SegmentFormat.NoMoreDocs) reads(pi)
+      out ++= Seq(pi.blockLastDoc, pi.blockMaxScore(w), pi.nextDoc())
+    }
+    out.result()
+  }
+
+  test("inline singletons read exactly as the old layout's one-posting blocks") {
+    import graft.index.{LegacyIndexes, SegmentReader, SegmentFormat}
+    var singletons = 0
+    var repeated = 0 // inline singletons with freq > 1
+    for (canned <- LegacyIndexes.All) {
+      val oldDir = canned.copyTo(tmpDir())
+      val newDir = tmpDir()
+      val meta = canned.rebuild(newDir)
+      val w = BM25().normalizedTermWeight(1, 1f, 1f,
+        graft.score.CorpusStats(meta.numDocs, meta.avgDocLength))
+      for (m <- meta.segments) {
+        def open(dir: String) = new SegmentReader(new java.io.File(dir, SegmentFormat.segDirName(m.segId)))
+        val (o, n) = (open(oldDir), open(newDir))
+        val ctx = s"${canned.name} segment ${m.segId}"
+        assert(!o.meta.inlineSingletons && n.meta.inlineSingletons, ctx)
+        assert(LegacyIndexes.firstDifference(o, n).isEmpty, s"$ctx: ${LegacyIndexes.firstDifference(o, n)}")
+        val terms = n.allTerms.toVector
+        terms.zip(o.allTerms.toVector).zipWithIndex.foreach { case ((ti, old), ord) =>
+          // a lookup through the sampled term index finds the same entry
+          assert(n.termInfo(ti.term).contains(ti), s"$ctx: termInfo(${ti.term}) at ordinal $ord")
+          assert((ti.df == 1) == (ti.inlineDoc >= 0) && old.inlineDoc == -1, s"$ctx: $ti / $old")
+          if (ti.df == 1) {
+            assert(ti.postingsBytes == 0 && ti.skipBytes == 0, s"$ctx: $ti")
+            assert(singletonTrace(n, ti, w) == singletonTrace(o, old, w), s"$ctx: '${ti.term}'")
+            singletons += 1
+            if (ti.maxFreq > 1) repeated += 1
+          }
+        }
+        if (canned.name == "delimited" && m.segId == 0) {
+          // three supplementary-plane singletons at ordinals 63, 64 (a
+          // term-index restart; its high surrogate is 63's) and 65
+          val sup = terms.drop(63).take(3)
+          assert(sup.map(_.term.codePointAt(0)) == Seq(0x10000, 0x10001, 0x1D11E))
+          assert(sup.forall(_.df == 1) && sup.exists(_.maxFreq > 1))
+          assert(64 % SegmentFormat.TermIndexInterval == 0)
+        }
+      }
+    }
+    assert(singletons > 200 && repeated > 20, s"$singletons singletons, $repeated with freq > 1")
+  }
+
+  test("singleton-heavy corpus with tombstones: WAND == exhaustive == spec") {
+    // 20k-term tail over 500 docs: most (term, segment) entries are inline
+    val rnd = new scala.util.Random(1616)
+    val texts = (0 until 500).map { _ =>
+      Seq.fill(2 + rnd.nextInt(9)) {
+        if (rnd.nextDouble() < 0.3) "h" + rnd.nextInt(1 + rnd.nextInt(8)) else "t" + rnd.nextInt(20000)
+      }.mkString(" ")
+    }
+    val words = texts.map(_.split(" "))
+    val corpus = bfCorpus(texts, "whitespace")
+    def word(): String = {
+      val ws = words(rnd.nextInt(words.size))
+      ws(rnd.nextInt(ws.length))
+    }
+    def term(): TermQ = TermQ(if (rnd.nextInt(10) == 0) "absent" + rnd.nextInt(9) else word(),
+      Array(0.5f, 1f, 3f)(rnd.nextInt(3)))
+    val queries = (0 until 120).map { i =>
+      i % 4 match {
+        case 0 | 1 => BoolQ(should = Seq.fill(2 + rnd.nextInt(5))(term()))
+        case 2 => BoolQ(must = Seq(TermQ("h" + rnd.nextInt(3))), should = Seq.fill(2)(term()))
+        case _ =>
+          val ws = words(rnd.nextInt(words.size))
+          val at = rnd.nextInt(ws.length - 1)
+          PhraseQ(Seq(ws(at), ws(at + 1)))
+      }
+    }
+    for (dps <- Seq(Int.MaxValue, 97)) {
+      val dir = indexOf(texts, "whitespace", dps)
+      val meta = graft.index.IndexMetaIO.readLatest(dir).get
+      val dead = (0 until texts.size).filter(_ => rnd.nextDouble() < 0.15).map(_.toLong).toSet
+      var entries = 0
+      var inline = 0
+      meta.segments.foreach { m =>
+        val segDir = new java.io.File(dir, graft.index.SegmentFormat.segDirName(m.segId))
+        val bits = new java.util.BitSet()
+        dead.foreach(d => if (d >= m.docBase && d < m.docBase + m.docCount) bits.set((d - m.docBase).toInt))
+        graft.index.SegmentFormat.writeDeletes(segDir, bits, 1)
+        new graft.index.SegmentReader(segDir).allTerms.foreach { ti =>
+          entries += 1
+          if (ti.inlineDoc >= 0) inline += 1
+        }
+      }
+      assert(inline > entries / 2, s"dps=$dps: $inline of $entries entries inline")
+      for (sim <- Seq(BM25(), ClassicTFIDF, BM25Exact()); q <- queries) {
+        val k = 1 + rnd.nextInt(10)
+        val ctx = s"dps=$dps sim=$sim k=$k q=$q"
+        val wand = LocalIndex.search(dir, q, k, sim, useWand = true)
+        assertSame(wand, LocalIndex.search(dir, q, k, sim, useWand = false), s"$ctx wand vs exhaustive")
+        val spec = BruteForce.search(corpus, q, k + dead.size, sim)
+          .filterNot(h => dead.contains(h.docId)).take(k)
+        assertSame(wand, spec, ctx)
+      }
+    }
+  }
 }

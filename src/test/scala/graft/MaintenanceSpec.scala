@@ -53,6 +53,35 @@ class MaintenanceSpec extends AnyFunSuite with TempDirs {
     assert(checks3.filterNot(_.ok).map(_.segId) == Seq(1), checks3)
   }
 
+  test("checkIndex checks inline singletons and reports a corrupted one") {
+    // 'solo' at positions 0 and 3 of doc 5 of 40: an inline singleton, freq 2
+    val docs = (0 until 40).map(i => (i.toLong, if (i == 5) "solo x y solo" else s"x y$i"))
+    def fresh(): String = { val d = tmpDir(); LocalIndex.build(d, docs, "whitespace"); d }
+    assert(Maintenance.checkIndex(spark, fresh()).forall(_.ok))
+    /** The problems checkIndex reports after setting the byte `at` bytes
+      * from the start of solo's positions in terms.bin to `value`. */
+    def corrupt(at: Int, value: Int): Seq[String] = {
+      val dir = fresh()
+      val seg = new File(dir, SegmentFormat.segDirName(0))
+      val ti = new SegmentReader(seg).termInfo("solo").get
+      assert(ti.inlineDoc == 5 && ti.maxFreq == 2, ti)
+      val f = new File(seg, "terms.bin")
+      val bytes = Files.readAllBytes(f.toPath)
+      bytes(ti.postingsOffset.toInt + at) = value.toByte
+      Files.write(f.toPath, bytes)
+      graft.search.ReaderCache.clear()
+      val checks = Maintenance.checkIndex(spark, dir)
+      assert(checks.size == 1 && !checks.head.ok, checks)
+      checks.head.problems
+    }
+    // position deltas 0, 3 -> 0, 0
+    val repeated = corrupt(1, 0)
+    assert(repeated.exists(_.contains("positions 0,0 not increasing")), repeated)
+    // the entry reads VInt(5 << 1), VInt 2, then the positions: doc 5 -> 63
+    val outside = corrupt(-2, 63 << 1)
+    assert(outside.exists(_.contains("doc 63 in a 40-doc segment")), outside)
+  }
+
   test("merged segment files are byte-identical to a direct single-segment build") {
     val ts = texts(90)
     val docs = ts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
