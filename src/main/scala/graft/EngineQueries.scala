@@ -38,9 +38,9 @@ object EngineQueries {
   /** Build-or-load one cached engine index under java.io.tmpdir — the
     * single parameterized builder behind [[searcher]] / [[payloadSearcher]]
     * (their expectedPerSeg / staleness / rm-rebuild plumbing used to be
-    * duplicated). A committed index is reused only when its format version,
-    * segment layout, and payload/stored-url requirements all match —
-    * anything stale is wiped and rebuilt. */
+    * duplicated). A committed index is reused only when its format version
+    * and segment size match and every segment has the requested layout
+    * (`IndexConfig.matches`) — anything stale is wiped and rebuilt. */
   private def cachedIndex(spark: SparkSession, sfDir: String, tag: String,
       analyzer: String, payloads: Boolean, urls: Boolean)(
       corpusOf: DataFrame => DataFrame): IndexSearcher = {
@@ -50,14 +50,14 @@ object EngineQueries {
     searchers.get(key) match {
       case Some((gen, s)) if IndexMetaIO.latestGen(dir).contains(gen) => s
       case _ =>
+        def config(perSeg: Int) = IndexConfig(dir, analyzer = analyzer, docsPerSegment = perSeg,
+          storePositions = true, writeDocMap = urls, storePayloads = payloads)
         val committed = IndexMetaIO.readLatestSnapshot(dir)
           .filter(_.format == IndexMetaIO.FormatVersion).map(_.meta)
           .filter { m => // stale segment layout → rebuild
-            m.segments.nonEmpty &&
-              (!payloads || m.segments.forall(_.hasPayloads)) &&
-              (!urls || m.segments.forall(_.hasUrls)) &&
-              m.segments.map(_.docCount).max ==
-                math.min(expectedPerSeg(m.numDocs).toLong, m.numDocs)
+            val cfg = config(expectedPerSeg(m.numDocs))
+            m.segments.nonEmpty && m.segments.forall(cfg.matches) &&
+              m.segments.map(_.docCount).max == math.min(cfg.docsPerSegment.toLong, m.numDocs)
           }
         if (committed.isEmpty) {
           if (new java.io.File(dir).exists()) rm(new java.io.File(dir))
@@ -69,9 +69,7 @@ object EngineQueries {
           // always judges stale and rebuilds
           val corpus = corpusOf(docs)
           val perSeg = expectedPerSeg(corpus.count())
-          IndexBuilder.build(spark, corpus,
-            IndexConfig(dir, analyzer = analyzer, docsPerSegment = perSeg,
-              storePositions = true, writeDocMap = urls, storePayloads = payloads))
+          IndexBuilder.build(spark, corpus, config(perSeg))
         }
         val s = new IndexSearcher(spark, dir)
         searchers.put(key, (IndexMetaIO.latestGen(dir).getOrElse(0), s))
@@ -265,7 +263,7 @@ object EngineQueries {
         array_join(transform(toks,
           t => when(t === delTerm, lit(replacement)).otherwise(t)), " ").as("text"))
     graft.streaming.StreamingIndexer.updateDocuments(spark, scratch.getPath,
-      TermQ(delTerm), replaced, analyzer = "whitespace")
+      TermQ(delTerm), replaced)
     new IndexSearcher(spark, scratch.getPath).matchingDocs(keep)
   }
 

@@ -21,11 +21,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
   * null semantics — PipelineSpec) and runs as one tight generated loop. */
 object VectorOps {
 
-  private def isFloatArr(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
   private def elemAt(a: ArrayData, i: Int, isFloat: Boolean): Double =
     if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
 

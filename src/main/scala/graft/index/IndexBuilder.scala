@@ -20,7 +20,14 @@ final case class IndexConfig(
     storeTermVectors: Boolean = false,
     /** Store per-position payloads (requires storePositions and a
       * payload-producing analyzer, e.g. "delimited"). */
-    storePayloads: Boolean = false)
+    storePayloads: Boolean = false) {
+
+  /** Whether segment `s` has this layout: analyzer, positions, term
+    * vectors, payloads and urls. */
+  def matches(s: SegmentMeta): Boolean =
+    s.analyzer == analyzer && s.hasPositions == storePositions && s.hasVectors == storeTermVectors &&
+      s.hasPayloads == storePayloads && s.hasUrls == writeDocMap
+}
 
 object IndexConfig {
   /** Docs per segment unless the caller says otherwise, for the build and
@@ -52,8 +59,9 @@ final case class BuildReport(
   *     text is never cached and crosses the network once. Two jobs read
   *     the sorted urls; the segments store them (step 4), so no job writes
   *     a separate docId → url table.
-  *  2. resume filter: docs of segments inside a committed segment's
-  *     [docBase, docBase+docCount) range are dropped before the shuffle
+  *  2. resume filter: docs of segments inside the [docBase,
+  *     docBase+docCount) range of a committed segment with the config's
+  *     layout (`IndexConfig.matches`) are dropped before the shuffle
   *     (range, not segId, so compacted segments resume correctly — north
   *     rule resumability).
   *  3. ONE segment shuffle: each raw doc goes, by binary search over the
@@ -92,9 +100,7 @@ object IndexBuilder {
         s"${cfg.indexDir} was written with segment format ${prior.format} " +
           s"(current ${IndexMetaIO.FormatVersion}); delete it and rebuild")
     }
-    val committed = IndexMetaIO.committedSegments(cfg.indexDir)
-      .filter(m => m.analyzer == cfg.analyzer && m.hasPositions == cfg.storePositions &&
-        m.hasUrls == cfg.writeDocMap)
+    val committed = IndexMetaIO.committedSegments(cfg.indexDir).filter(cfg.matches)
     // Resume skips by committed DOC RANGE, not segId: compaction produces
     // fresh segIds covering several original ranges, and a segId-based skip
     // would rebuild those docs alongside the merged segment (overlapping
@@ -331,8 +337,7 @@ object IndexBuilder {
         docCount = math.min(docsPerSegment.toLong, numDocs - first).toInt
         lead = if (seg == 0) 0L else first - starts(seg - 1)
         localDoc = 0
-        writer = new SegmentWriter(cfg.indexDir, segIdOffset + seg, docIdOffset + first, docCount,
-          cfg.analyzer, storePositions, storeVectors, storePayloads, storeUrls)
+        writer = new SegmentWriter(cfg, segIdOffset + seg, docIdOffset + first, docCount)
         inv = new java.util.HashMap[String, TermBuf]()
       }
       if (lead > 0) lead -= 1 // numbered by an earlier segment

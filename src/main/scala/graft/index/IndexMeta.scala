@@ -40,13 +40,26 @@ final case class IndexMeta(
   def nextSegId: Int = segments.map(_.segId + 1).foldLeft(0)(math.max)
 
   /** Fails unless every segment was written with this snapshot's analyzer
-    * and positions setting: searches analyze queries with `analyzer`, and a
-    * merge gives its output the settings of its inputs. */
+    * and positions setting: searches analyze queries with `analyzer`, and
+    * every writer gives new segments these settings ([[writeConfig]]). */
   def requireUniform(): IndexMeta = {
     segments.foreach(s => require(s.analyzer == analyzer && s.hasPositions == hasPositions,
       s"segment ${s.segId} has analyzer '${s.analyzer}' and hasPositions=${s.hasPositions}; " +
         s"the index has '$analyzer' and hasPositions=$hasPositions"))
     this
+  }
+
+  /** The layout of every segment a writer adds to this snapshot (an append,
+    * an update) or writes from all its `segments` (a merge): its analyzer
+    * and positions setting, and term vectors, payloads and urls iff it has
+    * segments and every one of them stores them — so a writer never drops
+    * a feature the index has, and never half-adds one it lacks. */
+  def writeConfig(indexDir: String,
+      docsPerSegment: Int = IndexConfig.DefaultDocsPerSegment): IndexConfig = {
+    requireUniform()
+    def all(has: SegmentMeta => Boolean) = segments.nonEmpty && segments.forall(has)
+    IndexConfig(indexDir, analyzer, docsPerSegment, hasPositions, writeDocMap = all(_.hasUrls),
+      storeTermVectors = all(_.hasVectors), storePayloads = all(_.hasPayloads))
   }
 }
 

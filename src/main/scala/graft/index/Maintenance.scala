@@ -126,16 +126,16 @@ object Maintenance {
     }
     val newBase = readers.head.meta.docBase
     val docCount = readers.map(_.meta.docCount).sum
-    val analyzer = readers.head.meta.analyzer
-    val hasPos = readers.head.meta.hasPositions
-    val hasVecs = readers.forall(_.meta.hasVectors)
-    val hasPays = readers.forall(_.meta.hasPayloads)
-    val hasUrls = readers.forall(_.meta.hasUrls)
-    val writer = new SegmentWriter(indexDir, newSegId, newBase, docCount, analyzer,
-      hasPos, hasVecs, hasPays, hasUrls)
+    // the layout rule of every writer, over the inputs: fails on inputs
+    // whose analyzer or positions differ
+    val inputs = readers.map(_.meta)
+    val cfg = IndexMeta(inputs.head.analyzer, inputs.head.hasPositions, inputs).writeConfig(indexDir)
+    import cfg.{storePositions => hasPos, storeTermVectors => hasVecs, storePayloads => hasPays,
+      writeDocMap => hasUrls}
+    val writer = new SegmentWriter(cfg, newSegId, newBase, docCount)
 
-    // norms/doclens (and term vectors and urls, if all inputs carry them)
-    // concatenate. Tombstoned docs keep their id SLOT (docIds are stable
+    // norms/doclens (and term vectors and urls, if all inputs carry them:
+    // `cfg`) concatenate. Tombstoned docs keep their id SLOT (docIds are stable
     // url ranks) and their url: postings, doclens and vectors are reclaimed
     // below, and the dead slots are CARRIED FORWARD into the merged
     // segment's del bitset —

@@ -163,9 +163,10 @@ object SegmentFormat {
   *                 block-max metadata enabling Block-Max WAND (Ding & Suel,
   *                 WSDM 2011), then the term's skip table
   *
-  * and, when asked to, the term-vector sidecar (vectors.bin/.idx) and each
-  * doc's url (urls.bin/.idx, the reference's stored fields — FieldsWriter's
-  * .fdt/.fdx — for the one stored field graft has).
+  * and, when its layout `cfg` asks for them, the term-vector sidecar
+  * (vectors.bin/.idx) and each doc's url (urls.bin/.idx, the reference's
+  * stored fields — FieldsWriter's .fdt/.fdx — for the one stored field
+  * graft has). The segment lands in `cfg.indexDir`.
   *
   * Write is atomic: files land in an attempt-unique `<dir>.tmp.<nonce>` and
   * are renamed into place in `finish()` — the crash-safe commit unit of the
@@ -178,17 +179,10 @@ object SegmentFormat {
   * instead of delete-and-republishing a segment a commit may already
   * reference. Only a prior dir whose meta DIFFERS is replaced (a stale
   * segment from a superseded build — the old idempotent-re-run path). */
-final class SegmentWriter(
-    indexDir: String,
-    segId: Int,
-    docBase: Long,
-    docCount: Int,
-    analyzerName: String,
-    storePositions: Boolean,
-    storeVectors: Boolean = false,
-    storePayloads: Boolean = false,
-    storeUrls: Boolean = false) {
+final class SegmentWriter(cfg: IndexConfig, segId: Int, docBase: Long, docCount: Int) {
 
+  import cfg.{indexDir, storePositions, storePayloads, storeTermVectors => storeVectors,
+    writeDocMap => storeUrls}
   require(!storePayloads || storePositions, "payloads require positions")
 
   import SegmentFormat._
@@ -318,16 +312,9 @@ final class SegmentWriter(
     urlNextDoc += 1
   }
 
-  /** Terms must arrive in ascending order; docs ascending within a term. */
-  def addPosting(term: String, localDoc: Int, freq: Int, positions: Array[Int]): Unit =
-    addPosting(term, localDoc, freq, positions, 0)
-
-  def addPosting(term: String, localDoc: Int, freq: Int, positions: Array[Int],
-      posOff: Int): Unit =
-    addPosting(term, localDoc, freq, positions, posOff, null)
-
-  /** As above, reading `freq` positions from `positions(posOff…)` (lets the
-    * in-RAM inverter pass one shared buffer without slicing); `payloads`
+  /** Terms must arrive in ascending order; docs ascending within a term.
+    * Reads `freq` positions from `positions(posOff…)` (lets the in-RAM
+    * inverter pass one shared buffer without slicing); `payloads`
     * (parallel to positions, entries may be null) is stored when the
     * segment is payload-enabled — per position: VInt len + bytes, the
     * reference's prox-stream payload layout re-expressed
@@ -527,7 +514,7 @@ final class SegmentWriter(
 
     val bytes = tmpDir.listFiles().map(_.length()).sum
     val meta = SegmentMeta(segId, docBase, docCount, sumDl, termCount,
-      postingCount, bytes, analyzerName, storePositions, storeVectors, storePayloads, storeUrls,
+      postingCount, bytes, cfg.analyzer, storePositions, storeVectors, storePayloads, storeUrls,
       inlineSingletons = true)
     writeFile(new File(tmpDir, "meta.bin"), IndexMetaIO.encodeSegment(meta))
     // carried del bitset rides inside the same atomic rename (after meta.bin

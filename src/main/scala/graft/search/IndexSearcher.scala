@@ -136,9 +136,9 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
   private def cacheKey(path: String): String =
     if (delGen == 0) path else s"$path#$delGen"
 
-  private val segDirs: Seq[String] =
-    meta.segments.map(m =>
-      cacheKey(new File(indexDir, SegmentFormat.segDirName(m.segId)).getPath))
+  private val segPaths: Seq[String] =
+    meta.segments.map(m => new File(indexDir, SegmentFormat.segDirName(m.segId)).getPath)
+  private val segDirs: Seq[String] = segPaths.map(cacheKey)
 
   /** Cap on tasks per job; 0 = the context's default parallelism. Tests
     * raise it to give every segment its own task. */
@@ -376,7 +376,8 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     * OPENED searchers see the deletes (this searcher's snapshot is
     * unchanged, like the reference's point-in-time readers). DocIDs stay
     * stable; space is reclaimed at the next merge. Returns the number of
-    * docs newly deleted. */
+    * docs newly deleted. Two jobs: the query's df, then one job that
+    * purges orphan del files and writes the new bitsets. */
   def deleteDocs(q0: Query): Long = deleteDocs(q0, commit = true)
 
   /** Tombstone every doc matching `q0`. With `commit = false` the del
@@ -395,34 +396,36 @@ final class IndexSearcher(spark: SparkSession, val indexDir: String,
     val latest = IndexMetaIO.readLatestSnapshot(indexDir).get
     val committedGen = latest.delGen
     val targetGen = latest.nextDelGen
-    // Purge orphan generations (> committedGen) left by a batch that
-    // crashed pre-commit, across the CURRENT commit's segments — a
-    // superset of anywhere orphans can live, and deliberately not just
-    // this searcher's (possibly stale) snapshot. Without this, committing
+    // One job over the union of the CURRENT commit's segments and this
+    // searcher's (possibly stale) snapshot. Each task first purges its
+    // segments' orphan generations (> committedGen) left by a batch that
+    // crashed pre-commit — the current commit's segments are a superset of
+    // anywhere orphans can live. Without the purge, committing
     // delgen=targetGen below would retroactively adopt a crashed
     // updateDocuments' del_<targetGen>.bin in segments this batch didn't
-    // write: its deletes would apply without its adds.
-    locally {
-      val idxDir = indexDir
-      val allSegs = latest.meta.segments
-        .map(m => new File(idxDir, SegmentFormat.segDirName(m.segId)).getPath)
-      segmentTasks(allSegs)
-        .foreach(p => SegmentFormat.purgeOrphanDeletes(new File(p), committedGen))
-    }
-    val newly = segmentTasks(segDirs)
-      .map { dir =>
-        val reader = ReaderCache.get(dir)
-        // seed from the CURRENT COMMITTED bitset, NOT the cached reader's
-        // open-time snapshot: this searcher's reader-cache key is pinned to
-        // its open-time delGen, so a second delete batch through the same
-        // searcher instance would otherwise OR into a pre-first-batch bitset
-        // and silently resurrect the first batch's committed tombstones
-        val bits = SegmentFormat.readDeletes(reader.dir, committedGen)
-        val before = bits.cardinality()
-        bits.or(bc.value.matchBits(reader))
-        val added = bits.cardinality() - before
-        if (added > 0) SegmentFormat.writeDeletes(reader.dir, bits, targetGen)
-        added.toLong
+    // write: its deletes would apply without its adds. Then, for a segment
+    // of the snapshot, it ORs the matches into the segment's bitset: after
+    // its purge, so the purge never removes this batch's own write.
+    val snapshotDirs = segPaths.zip(segDirs).toMap
+    val current = latest.meta.segments
+      .map(m => new File(indexDir, SegmentFormat.segDirName(m.segId)).getPath)
+    val newly = segmentTasks((current ++ segPaths).distinct.map(p => (p, snapshotDirs.get(p))))
+      .map { case (path, key) =>
+        SegmentFormat.purgeOrphanDeletes(new File(path), committedGen)
+        key.fold(0L) { dir =>
+          val reader = ReaderCache.get(dir)
+          // seed from the CURRENT COMMITTED bitset, NOT the cached reader's
+          // open-time snapshot: this searcher's reader-cache key is pinned to
+          // its open-time delGen, so a second delete batch through the same
+          // searcher instance would otherwise OR into a pre-first-batch bitset
+          // and silently resurrect the first batch's committed tombstones
+          val bits = SegmentFormat.readDeletes(reader.dir, committedGen)
+          val before = bits.cardinality()
+          bits.or(bc.value.matchBits(reader))
+          val added = bits.cardinality() - before
+          if (added > 0) SegmentFormat.writeDeletes(reader.dir, bits, targetGen)
+          added.toLong
+        }
       }
       .collect().sum
     bc.destroy()

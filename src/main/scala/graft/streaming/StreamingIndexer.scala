@@ -21,31 +21,30 @@ import graft.index._
   * only ever see snapshotted segments. The watermark lives in the commit
   * snapshot, which every writer carries forward ([[IndexMetaIO.commit]]),
   * so it survives compaction, `updateDocuments` and appends without a
-  * batch id. */
+  * batch id.
+  *
+  * Layout: an append takes the index's own — its analyzer and positions
+  * setting, and term vectors, payloads and urls iff every committed
+  * segment stores them (`IndexMeta.writeConfig`, the rule every writer
+  * shares). A directory with no commit gets the defaults: the standard
+  * analyzer, positions, nothing else. To stream into a new index with
+  * other settings, commit an empty `IndexBuilder.build` with them first. */
 object StreamingIndexer {
 
-  /** Append one (non-streaming) batch DataFrame; used by foreachBatch and
-    * directly testable. Returns the new snapshot. `analyzer` and
-    * `storePositions` must match the index's (checked before any work). The
-    * new segments store their docs' urls iff the index has segments and
-    * every one of them stores urls. */
+  /** Append one (non-streaming) batch DataFrame, in the index's layout;
+    * used by foreachBatch and directly testable. Returns the new
+    * snapshot. */
   def appendBatch(spark: SparkSession, batch: DataFrame, indexDir: String,
-      analyzer: String = "standard",
-      docsPerSegment: Int = IndexConfig.DefaultDocsPerSegment,
-      storePositions: Boolean = true, batchId: Long = -1L,
+      docsPerSegment: Int = IndexConfig.DefaultDocsPerSegment, batchId: Long = -1L,
       delGenOverride: Option[Int] = None): IndexMeta = {
     new java.io.File(indexDir).mkdirs()
 
     val prior = IndexMetaIO.readLatestSnapshot(indexDir)
     if (batchId >= 0 && prior.exists(_.streamBatch.exists(_ >= batchId)))
       return prior.get.meta // replayed batch already applied
-    val base = IndexMeta(analyzer, storePositions,
-      prior.fold(Seq.empty[SegmentMeta])(_.meta.segments)).requireUniform()
-
-    val storeUrls = base.segments.nonEmpty && base.segments.forall(_.hasUrls)
+    val base = prior.fold(IndexMeta("standard", hasPositions = true, Nil))(_.meta) // no commit: defaults
     val (newDocs, metas) = IndexBuilder.writeSegments(batch,
-      IndexConfig(indexDir, analyzer, docsPerSegment, storePositions, writeDocMap = storeUrls),
-      base.nextSegId, base.nextDocId)
+      base.writeConfig(indexDir, docsPerSegment), base.nextSegId, base.nextDocId)
     // an empty batch commits only the deletes of an update
     if (newDocs == 0 && delGenOverride.isEmpty) return base
     IndexMetaIO.commit(indexDir, base.copy(segments = (base.segments ++ metas).sortBy(_.segId)),
@@ -67,30 +66,24 @@ object StreamingIndexer {
     * replaces. */
   def updateDocuments(spark: SparkSession, indexDir: String,
       deleteQ: graft.search.Query, newDocs: DataFrame,
-      analyzer: String = "standard",
-      docsPerSegment: Int = IndexConfig.DefaultDocsPerSegment,
-      storePositions: Boolean = true): IndexMeta = {
+      docsPerSegment: Int = IndexConfig.DefaultDocsPerSegment): IndexMeta = {
     val gen = IndexMetaIO.readLatestSnapshot(indexDir).flatMap { prior =>
       val removed = new graft.search.IndexSearcher(spark, indexDir)
         .deleteDocs(deleteQ, commit = false)
       if (removed > 0) Some(prior.nextDelGen) else None
     }
-    appendBatch(spark, newDocs, indexDir, analyzer, docsPerSegment, storePositions,
-      delGenOverride = gen)
+    appendBatch(spark, newDocs, indexDir, docsPerSegment, delGenOverride = gen)
   }
 
   /** Start the streaming ingestion: `pages` must be a streaming DataFrame
     * with `url` and `text` columns. */
   def start(spark: SparkSession, pages: DataFrame, indexDir: String,
-      analyzer: String = "standard",
-      docsPerSegment: Int = IndexConfig.DefaultDocsPerSegment,
-      storePositions: Boolean = true): StreamingQuery = {
+      docsPerSegment: Int = IndexConfig.DefaultDocsPerSegment): StreamingQuery = {
     pages.writeStream
       .outputMode("append")
       .option("checkpointLocation", s"$indexDir/stream-ckpt")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendBatch(spark, batch, indexDir, analyzer, docsPerSegment,
-          storePositions, batchId)
+        appendBatch(spark, batch, indexDir, docsPerSegment, batchId)
         ()
       }
       .start()

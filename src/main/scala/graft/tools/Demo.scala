@@ -47,7 +47,7 @@ object Demo {
     // 4. append a streaming batch; re-query sees the new doc
     StreamingIndexer.appendBatch(spark,
       Seq(("zzzz-new-doc", "a freshly streamed batch window document")).toDF("url", "text"),
-      dir, analyzer = "whitespace", docsPerSegment = 16, batchId = 0)
+      dir, docsPerSegment = 16, batchId = 0)
     val s2 = new IndexSearcher(spark, dir)
     println(s"[demo] after append: numDocs=${s2.meta.numDocs} segments=${s2.meta.segments.size}")
     val hits2 = s2.search(QueryParser.parse("freshly", WhitespaceAnalyzer), 3, BM25())
@@ -104,8 +104,7 @@ object Demo {
     locally {
       import spark.implicits._
       val updated = graft.streaming.StreamingIndexer.updateDocuments(spark, dir,
-        TQ("batch"), Seq(("zz-update", "batch reborn fresh")).toDF("url", "text"),
-        analyzer = s3b.meta.analyzer)
+        TQ("batch"), Seq(("zz-update", "batch reborn fresh")).toDF("url", "text"))
       val s3c = new IndexSearcher(spark, dir)
       println(s"[demo] updateDocuments: numDocs=${updated.numDocs} " +
         s"live=${s3c.liveDocCount()}; 'reborn' hits=" +

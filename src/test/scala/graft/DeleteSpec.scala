@@ -170,7 +170,7 @@ class DeleteSpec extends AnyFunSuite with TempDirs {
     // an NRT append commits a new snapshot; the delgen must survive it
     graft.streaming.StreamingIndexer.appendBatch(spark,
       Seq(("zzz-new", "fresh x")).toDF("url", "text"),
-      dir, analyzer = "whitespace", docsPerSegment = 4, batchId = 0)
+      dir, docsPerSegment = 4, batchId = 0)
     val s2 = new IndexSearcher(spark, dir)
     assert(s2.meta.numDocs == 5)
     assert(s2.search(TermQ("gone"), 10, graft.score.BM25()).isEmpty)
@@ -192,7 +192,7 @@ class DeleteSpec extends AnyFunSuite with TempDirs {
       TermQ("one"),
       Seq(("zz-a", "version one alpha prime"), ("zz-b", "version one beta prime"))
         .toDF("url", "text"),
-      analyzer = "whitespace", docsPerSegment = 4)
+      docsPerSegment = 4)
 
     assert(commitCount() == commitsBefore + 1) // deletes + adds, one snapshot
 
@@ -208,7 +208,7 @@ class DeleteSpec extends AnyFunSuite with TempDirs {
     // update with an empty add side still publishes the delete snapshot
     graft.streaming.StreamingIndexer.updateDocuments(spark, dir,
       TermQ("gamma"), Seq.empty[(String, String)].toDF("url", "text"),
-      analyzer = "whitespace", docsPerSegment = 4)
+      docsPerSegment = 4)
     val s2 = new IndexSearcher(spark, dir)
     assert(s2.matchingDocs(TermQ("gamma")).count() == 0)
     assert(s2.liveDocCount() == 2)
@@ -253,8 +253,7 @@ class DeleteSpec extends AnyFunSuite with TempDirs {
     // append a doc that also matches 'alpha' (another commit)
     assert(new IndexSearcher(spark, dir).deleteDocs(TermQ("alpha")) == 2)
     val df = Seq(("u9999", "alpha reborn")).toDF("url", "text")
-    graft.streaming.StreamingIndexer.appendBatch(spark, df, dir,
-      analyzer = "whitespace", docsPerSegment = 4, batchId = 99)
+    graft.streaming.StreamingIndexer.appendBatch(spark, df, dir, docsPerSegment = 4, batchId = 99)
     ReaderCache.clear()
 
     // latest view: originals tombstoned, only the appended doc matches
@@ -293,5 +292,17 @@ class DeleteSpec extends AnyFunSuite with TempDirs {
     assert(after.search(TermQ("alpha"), 10, BM25()).length == 2)
     assert(after.search(TermQ("omega"), 10, BM25()).isEmpty)
     assert(after.liveDocCount() == 6)
+  }
+
+  test("job shape: deleteDocs(TermQ) runs <= 2 jobs") {
+    val dir = buildIndex(Seq("alpha a", "filler b", "alpha c", "filler d", "omega e", "filler f"))
+    ReaderCache.clear()
+    val s = new IndexSearcher(spark, dir)
+    var removed = 0L
+    val jobs = JobShape.jobsOf(spark) { removed = s.deleteDocs(TermQ("alpha")) }
+    assert(removed == 2)
+    assert(jobs.size <= 2, jobs.mkString("\n"))
+    ReaderCache.clear()
+    assert(new IndexSearcher(spark, dir).liveDocCount() == 4)
   }
 }

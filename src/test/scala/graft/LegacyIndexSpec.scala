@@ -93,21 +93,26 @@ class LegacyIndexSpec extends AnyFunSuite with TempDirs {
     import spark.implicits._
     val added = docs.takeRight(10).map(_._2.split(" ").reverse.mkString(" "))
     graft.streaming.StreamingIndexer.appendBatch(spark,
-      added.zipWithIndex.map { case (t, i) => (f"added-$i%02d", t) }.toDF("url", "text"), dir,
-      canned.analyzer, storePositions = canned.storePositions)
+      added.zipWithIndex.map { case (t, i) => (f"added-$i%02d", t) }.toDF("url", "text"), dir)
     val all = docs ++ added.zipWithIndex.map { case (t, i) => ((docs.size + i).toLong, t) }
     val appended = readers(dir)
     assert(appended.size == 4 && appended.take(3).forall(!_.meta.inlineSingletons))
     assert(appended.last.meta.inlineSingletons && appended.last.meta.docBase == docs.size)
+    // the append takes the index's layout
+    val m = appended.last.meta
+    assert((m.analyzer, m.hasPositions, m.hasPayloads, m.hasVectors, m.hasUrls) ==
+      (canned.analyzer, canned.storePositions, canned.storePayloads, false, false))
     assertClean(dir, "after append")
     assertSearchesMatchSpec(dir, all, canned.analyzer, canned.storePositions, "after append")
 
     // compact: one current-layout segment, equal to a direct build of all
-    // 85 docs (an append stores no payloads, so the merge keeps none)
+    // 85 docs (the append stored payloads where the index has them, so the
+    // merge keeps them)
     val compacted = Maintenance.compact(spark, dir, minDocs = 1000)
     assert(compacted.segments.size == 1 && compacted.segments.head.inlineSingletons)
     val allDirect = tmpDir()
-    LocalIndex.build(allDirect, all, canned.analyzer, Int.MaxValue, canned.storePositions)
+    LocalIndex.build(allDirect, all, canned.analyzer, Int.MaxValue, canned.storePositions,
+      storePayloads = canned.storePayloads)
     ReaderCache.clear()
     val one = readers(dir).head
     val want = readers(allDirect).head

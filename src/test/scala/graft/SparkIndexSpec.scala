@@ -152,32 +152,11 @@ class SparkIndexSpec extends AnyFunSuite with TempDirs {
     assert(df("common") == texts.size && df("onlyhere") == 1)
 
     // job shape: the df job and the scoring job, the df job one stage
-    val stagesPerJob = jobsOf {
+    val stagesPerJob = JobShape.jobsOf(spark) {
       searcher.searchBatch(Seq("a" -> BoolQ(should = Seq(TermQ("common"), TermQ("w3"))),
         "b" -> TermQ("onlyhere")), 5, BM25())
     }.map(_.size)
     assert(stagesPerJob == Seq(1, 1), s"stages per job: $stagesPerJob")
-  }
-
-  /** The jobs `f` runs, each as the names of its stages, seen by a
-    * SparkListener. */
-  private def jobsOf(f: => Unit): Seq[Seq[String]] = {
-    val group = "graft-job-shape"
-    val jobs = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.synchronized { jobs += e.stageInfos.map(_.name) }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "job shape")
-      try f finally sc.clearJobGroup()
-      org.apache.spark.ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    jobs.toSeq
   }
 
   test("build output is byte-identical across partitionings and to LocalIndex") {
@@ -480,11 +459,11 @@ class SparkIndexSpec extends AnyFunSuite with TempDirs {
   }
 
   test("job shape: build <= 4 jobs with or without stored urls, 1-segment append <= 3") {
-    val withUrls = jobsOf(IndexBuilder.build(spark, corpus,
+    val withUrls = JobShape.jobsOf(spark)(IndexBuilder.build(spark, corpus,
       IndexConfig(tmpDir(), docsPerSegment = 64)))
-    val noUrls = jobsOf(IndexBuilder.build(spark, corpus,
+    val noUrls = JobShape.jobsOf(spark)(IndexBuilder.build(spark, corpus,
       IndexConfig(tmpDir(), docsPerSegment = 64, writeDocMap = false)))
-    val append = jobsOf(StreamingIndexer.appendBatch(spark, corpus, tmpDir(),
+    val append = JobShape.jobsOf(spark)(StreamingIndexer.appendBatch(spark, corpus, tmpDir(),
       docsPerSegment = N))
     assert(withUrls.size <= 4, withUrls.mkString("\n"))
     assert(noUrls.size <= 4, noUrls.mkString("\n"))

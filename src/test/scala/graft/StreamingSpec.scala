@@ -65,25 +65,18 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     assert(s.liveDocCount() == 12)
   }
 
-  test("appendBatch refuses an analyzer or positions setting the index does not have") {
+  test("appendBatch writes the index's analyzer and positions") {
     val dir = tmpDir()
     IndexBuilder.build(spark, Seq(("u1", "Alpha beta"), ("u2", "gamma")).toDF("url", "text"),
-      IndexConfig(dir, analyzer = "whitespace", writeDocMap = false))
-    val gen = IndexMetaIO.latestGen(dir)
-    val more = Seq(("u3", "Alpha delta")).toDF("url", "text")
-    intercept[IllegalArgumentException](
-      StreamingIndexer.appendBatch(spark, more, dir, analyzer = "standard"))
-    intercept[IllegalArgumentException](
-      StreamingIndexer.appendBatch(spark, more, dir, analyzer = "whitespace",
-        storePositions = false))
-    // refused before any segment is written, and nothing is committed
-    assert(IndexMetaIO.latestGen(dir) == gen)
-    assert(IndexMetaIO.committedSegments(dir).size == 1)
-
-    StreamingIndexer.appendBatch(spark, more, dir, analyzer = "whitespace")
+      IndexConfig(dir, analyzer = "whitespace", storePositions = false, writeDocMap = false))
+    StreamingIndexer.appendBatch(spark, Seq(("u3", "Alpha delta")).toDF("url", "text"), dir)
+    val segs = IndexMetaIO.committedSegments(dir)
+    assert(segs.size == 2 && segs.forall(s => s.analyzer == "whitespace" && !s.hasPositions))
     val s = new IndexSearcher(spark, dir)
     assert(s.meta.numDocs == 3)
+    // whitespace keeps case: the standard analyzer would have indexed "alpha"
     assert(s.search(TermQ("Alpha"), 10, BM25()).map(_.docId).toSet == Set(0L, 2L))
+    assert(s.search(TermQ("alpha"), 10, BM25()).isEmpty)
   }
 
   test("foreachBatch streaming ingestion end-to-end") {

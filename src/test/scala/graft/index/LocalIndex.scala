@@ -38,6 +38,8 @@ object LocalIndex {
     }.toVector.sortBy(r => (r.segId, r.term, r.docId))(
       Ordering.Tuple3(Ordering.Int, TermOrder.ordering, Ordering.Long))
 
+    val cfg = IndexConfig(indexDir, analyzerName, docsPerSegment, storePositions, writeDocMap = false,
+      storeTermVectors = storeTermVectors, storePayloads = storePayloads)
     val metas = scala.collection.mutable.ArrayBuffer.empty[SegmentMeta]
     var writer: SegmentWriter = null
     var curSeg = -1
@@ -48,8 +50,7 @@ object LocalIndex {
         curSeg = r.segId
         docBase = curSeg.toLong * docsPerSegment
         val docCount = math.min(docsPerSegment.toLong, numDocs - docBase).toInt
-        writer = new SegmentWriter(indexDir, curSeg, docBase, docCount, analyzerName,
-          storePositions, storeTermVectors, storePayloads)
+        writer = new SegmentWriter(cfg, curSeg, docBase, docCount)
         if (storeTermVectors) {
           // doc-ordered vector sidecar from each doc's own analysis
           docs.filter(d => d._1 >= docBase && d._1 < docBase + docCount)
